@@ -20,8 +20,8 @@ reference              here
                        ``params``
 ``read_td_table``      :func:`read_td_table` — generated scan with
                        ``columns``/``time_range``/``limit=10000`` default
-``read_td_job``        :func:`read_td_job` — re-attach to a finished job id
-                       (session-local job registry of persisted results)
+``read_td_job``        :func:`read_td_job` — re-attach to a job id while
+                       its :class:`ResultProxy` is alive
 ``to_td``              :func:`to_td` — ``if_exists`` ∈ fail/replace/append,
                        ``time_col``/``time_index``/``index``/``chunksize``
 ``ResultProxy``        :class:`ResultProxy` — ``description``, iteration,
@@ -29,8 +29,12 @@ reference              here
 =====================  =====================================================
 
 The remote job lifecycle (HTTP POST → poll → msgpack download; SURVEY §3.1
-boundaries #1/#2) collapses into Spark job execution; progress callbacks
-map to the status-tracker hook in :meth:`QueryEngine.execute`.
+boundaries #1/#2) collapses into Spark job execution; ``show_progress`` is
+accepted and not used yet. Each :meth:`QueryEngine.execute` runs in a
+throwaway clone of ``Connection.spark`` (which carries its temp views,
+``td_*`` functions and SQL conf): the call's table views and
+``distributed_join`` conf go into the clone only, and the clone dies with
+the call's :class:`ResultProxy`, which ``Connection._jobs`` holds weakly.
 """
 
 from __future__ import annotations
@@ -40,6 +44,7 @@ import os
 import re
 import time as _time
 import uuid
+import weakref
 from collections.abc import Iterator, Sequence
 
 import pandas as pd
@@ -86,7 +91,9 @@ class Connection:
         )
         os.makedirs(self.warehouse, exist_ok=True)
         self.default_database = default_database
-        self._jobs: dict[str, DataFrame] = {}
+        self._jobs: weakref.WeakValueDictionary[str, ResultProxy] = (
+            weakref.WeakValueDictionary()
+        )
 
     # -- catalog (reference: Connection.databases()/tables(); M1) ----------
     def databases(self) -> pd.DataFrame:
@@ -117,18 +124,6 @@ class Connection:
 
     def table_path(self, database: str, table: str) -> str:
         return os.path.join(self.warehouse, database, f"{table}.parquet")
-
-    def register_database_views(self, database: str) -> None:
-        dbdir = os.path.join(self.warehouse, database)
-        if not os.path.isdir(dbdir):
-            return
-        from pandas_td_spark.sources.io import resolve_data_path
-
-        for f in os.listdir(dbdir):
-            if f.endswith(".parquet"):
-                self.spark.read.parquet(
-                    resolve_data_path(os.path.join(dbdir, f))
-                ).createOrReplaceTempView(f[: -len(".parquet")])
 
 
 def connect(
@@ -177,33 +172,28 @@ class QueryEngine:
         distributed_join: bool | None = None,
         **params,
     ) -> "ResultProxy":
-        spark = self.con.spark
-        self.con.register_database_views(self.database)
+        # the call's own session (module docstring)
+        root = self.con.spark
+        spark = SparkSession(
+            root.sparkContext, root._jsparkSession.cloneSession()
+        )
+        dbdir = os.path.join(self.con.warehouse, self.database)
+        if os.path.isdir(dbdir):
+            for f in os.listdir(dbdir):
+                if f.endswith(".parquet"):
+                    name = f[: -len(".parquet")]
+                    _read_table(spark, dbdir, name).createOrReplaceTempView(name)
+        if distributed_join:
+            # Presto session property distributed_join='true' analogue:
+            # force partitioned (non-broadcast) joins. The strategy is chosen
+            # at action time, so the conf lives in the clone with the frame.
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         sql = self.create_header("read_td_query") + query
-        conf = spark.conf
-        old_thresh = conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            if distributed_join:
-                # Presto session property distributed_join='true' analogue:
-                # force partitioned (non-broadcast) joins.
-                conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            t0 = _time.time()
-            df = spark.sql(sql, args=params) if params else spark.sql(sql)
-            if distributed_join:
-                # Join strategy is chosen at ACTION time, not spark.sql()
-                # time — restoring the conf before the first action would
-                # silently re-enable broadcast (round-1 advisor finding).
-                # Materializing here pins the partitioned-join plan AND
-                # mirrors the reference, where execute() runs the job to
-                # completion server-side before returning a job handle.
-                df = df.persist()
-                df.count()
-            job_id = uuid.uuid4().hex[:12]
-            self.con._jobs[job_id] = df
-            return ResultProxy(df, job_id=job_id, started=t0)
-        finally:
-            if distributed_join:
-                conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+        t0 = _time.time()
+        df = spark.sql(sql, args=params) if params else spark.sql(sql)
+        rp = ResultProxy(df, job_id=uuid.uuid4().hex[:12], started=t0)
+        self.con._jobs[rp.job_id] = rp
+        return rp
 
 
 def create_engine(
@@ -297,11 +287,12 @@ def read_td_table(
 
 
 def read_td_job(job_id: str, engine: QueryEngine, **kwargs) -> pd.DataFrame:
-    """S3 (``td.py::read_td_job``): re-attach to a finished job's result."""
-    df = engine.con._jobs.get(job_id)
-    if df is None:
+    """S3 (``td.py::read_td_job``): re-attach to a job whose
+    :class:`ResultProxy` is still alive (finished calls pin no frames)."""
+    rp = engine.con._jobs.get(job_id)
+    if rp is None:
         raise KeyError(f"unknown job id {job_id!r}")
-    return ResultProxy(df, job_id, _time.time()).to_dataframe(**kwargs)
+    return rp.to_dataframe(**kwargs)
 
 
 def to_td(

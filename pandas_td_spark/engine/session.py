@@ -122,8 +122,8 @@ def get_spark(
     except Exception:
         pass  # non-JVM session (Spark Connect) or log4j-core absent
     # TD-compatible SQL function surface (td_time_range etc.) is registered
-    # lazily here so ``spark.sql`` text can use them like the reference's
-    # delegated engines did.
+    # here so ``spark.sql`` text can use them like the reference's
+    # delegated engines did; on a reused session both calls return at once.
     from pandas_td_spark.functions.presto_compat import register_presto_functions
     from pandas_td_spark.functions.td import register_td_functions
 

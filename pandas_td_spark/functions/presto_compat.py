@@ -103,6 +103,10 @@ PRESTO_SCALAR_ALIASES: dict[str, tuple[str, str, str]] = {
 
 
 def register_presto_functions(spark: SparkSession) -> None:
+    """Register the aliases; a session whose last alias exists already has
+    them all and is left as it is."""
+    if spark.catalog.functionExists(next(reversed(PRESTO_SCALAR_ALIASES))):
+        return
     for name, (args, ret, body) in PRESTO_SCALAR_ALIASES.items():
         spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "

@@ -331,6 +331,20 @@ def td_last(value: Union[str, Column], cmp: Union[str, Column]) -> Column:
 # --------------------------------------------------------------------------
 # SQL registration — Spark 4.x SQL scalar functions (analyzer-inlined).
 # --------------------------------------------------------------------------
+def _scheduled_time_ddl(epoch: int | None) -> str:
+    # F7 td_scheduled_time(): the scheduled execution time of the "job"
+    # (reference: TD_SCHEDULED_TIME, epoch seconds). A pin (what TD's
+    # scheduler does for a scheduled run) redefines the function with the
+    # pinned literal as its body, so it constant-folds into the plan and
+    # session clones carry it; unpinned, it is the wall-clock submission
+    # time (TD's ad-hoc behavior).
+    body = "unix_timestamp(now())" if epoch is None else str(int(epoch))
+    return (
+        "CREATE OR REPLACE TEMPORARY FUNCTION td_scheduled_time() "
+        f"RETURNS BIGINT RETURN {body}"
+    )
+
+
 _SQL_FUNCTIONS = [
     # td_time_range: NULL endpoint = unbounded; endpoints are epoch seconds
     # or timestamp strings (parsed as UTC).
@@ -377,17 +391,7 @@ _SQL_FUNCTIONS = [
     RETURNS STRING
     RETURN lower(substring(hex(xxhash64(x)), 1, 12))
     """,
-    # F7 td_scheduled_time(): the scheduled execution time of the "job"
-    # (reference: TD_SCHEDULED_TIME, epoch seconds). Session-parameterized
-    # via a SQL session variable — set_scheduled_time() pins it (what TD's
-    # scheduler does for a scheduled run); unpinned sessions fall back to
-    # wall-clock submission time (TD's ad-hoc behavior). The function is
-    # analyzer-inlined, so a pinned value constant-folds into the plan.
-    """
-    CREATE OR REPLACE TEMPORARY FUNCTION td_scheduled_time()
-    RETURNS BIGINT
-    RETURN coalesce(td_scheduled_time_epoch, unix_timestamp(now()))
-    """,
+    _scheduled_time_ddl(None),
     # TD_URL_DECODE: percent-decoding (reference: TD UDF of the same name,
     # public docs; Spark 3.4+ url_decode is the exact semantics).
     """
@@ -439,18 +443,17 @@ _SQL_FUNCTIONS = [
 ]
 
 
+#: registered last, so its presence means the whole list is registered
+_LAST_FUNCTION = re.search(r"FUNCTION (\w+)\(", _SQL_FUNCTIONS[-1]).group(1)
+
+
 def register_td_functions(spark: SparkSession) -> None:
     """Register the td_* surface as SQL scalar functions (inlined by the
-    analyzer — no Python round-trip, pushdown preserved)."""
-    try:
-        # holds td_scheduled_time's pin; DECLARE without OR REPLACE so a
-        # re-registration (every query wrapper calls this) cannot clobber
-        # a value the user already set
-        spark.sql(
-            "DECLARE VARIABLE td_scheduled_time_epoch BIGINT DEFAULT NULL"
-        )
-    except Exception:  # VARIABLE_ALREADY_EXISTS — already declared here
-        pass
+    analyzer — no Python round-trip, pushdown preserved). A session that
+    already has them is left as it is, so a re-registration neither
+    re-issues the DDLs nor clobbers a :func:`set_scheduled_time` pin."""
+    if spark.catalog.functionExists(_LAST_FUNCTION):
+        return
     for ddl in _SQL_FUNCTIONS:
         spark.sql(ddl)
 
@@ -459,8 +462,5 @@ def set_scheduled_time(spark: SparkSession, time: TimeLike | None) -> None:
     """Pin ``td_scheduled_time()`` for this session (``None`` unpins —
     reverts to submission-time fallback). Accepts the same time forms as
     the rest of the td_* surface (epoch int, ISO string, datetime)."""
-    t = to_epoch_seconds(time, "UTC")
-    spark.sql(
-        "SET VAR td_scheduled_time_epoch = "
-        + ("NULL" if t is None else str(int(t)))
-    )
+    register_td_functions(spark)
+    spark.sql(_scheduled_time_ddl(to_epoch_seconds(time, "UTC")))

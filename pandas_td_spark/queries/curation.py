@@ -166,7 +166,7 @@ def _gram_stats_sql(g: str) -> str:
 # multiple projections, so the aggregate re-evaluates per reference) —
 # reverted in round 8. q108 keeps `_gram_stats` because there the struct
 # is consumed once per n and its warm A/B held (1.596 -> 1.516 s).
-# Round-10 re-A/B of q108 (tools/ab_q108.py, interleaved 5-round warm
+# Round-10 re-A/B of q108 (interleaved 5-round warm
 # protocol at sf0.1): row-local 1.19 s median vs exploded-tagged 1.16 s
 # vs hashed-exploded 1.38 s vs fraction-direct-finish 1.63 s — the
 # exploded form's ~3% warm edge costs two O(corpus-tokens) shuffles the

@@ -422,6 +422,10 @@ _IMPL_CHANGED_SINCE_LAST_CHECK: dict[str, int] = {
     # performance note — q118's fingerprint covers dsum/davg through
     # operators/kmeans (rows-only row; values and plans identical):
     "q118_kmeans_clusters": 15,
+    # set_scheduled_time (in q75's fingerprint) pins td_scheduled_time by
+    # redefining the function instead of setting a session variable;
+    # values and plan identical, oracle re-checked at sf0.001/sf0.01:
+    "q75_td_scheduled_time": 17,
 }
 
 

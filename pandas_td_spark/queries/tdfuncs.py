@@ -290,10 +290,10 @@ def q75_td_scheduled_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F7: ``TD_SCHEDULED_TIME()`` as a session-parameterized SQL function
     (reference: ``TD_SCHEDULED_TIME`` UDF, scheduled-run semantics;
     UNVERIFIED — /root/reference is empty). ``set_scheduled_time`` pins the
-    session variable exactly as TD's scheduler pins a run's time; the
+    function exactly as TD's scheduler pins a run's time; the
     trailing-7-day window below is the canonical incremental-job pattern.
-    The pinned value constant-folds (analyzer-inlined function over a
-    session variable), so the time predicate still pushes down to the scan."""
+    The pinned value constant-folds (analyzer-inlined function with a
+    literal body), so the time predicate still pushes down to the scan."""
     from pandas_td_spark.functions.td import set_scheduled_time
 
     set_scheduled_time(spark, _SCHED)

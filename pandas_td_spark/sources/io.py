@@ -5,7 +5,6 @@ Reference parity (all loci UNVERIFIED — /root/reference is empty):
 * ``read_table``  ↔ ``pandas_td/td.py::read_td_table`` — projection +
   time-range + limit, generated as SQL text there; expressed declaratively
   here so Catalyst pushes projection/predicate/limit into the parquet scan.
-* ``read_query``  ↔ ``pandas_td/td.py::read_td_query`` — arbitrary SQL.
 * ``write_table`` ↔ ``pandas_td/td.py::to_td`` + ``StreamingUploader`` —
   ``if_exists`` ∈ {fail, replace, append}, ``time`` column injection.
 
@@ -40,7 +39,6 @@ __all__ = [
     "TABLES",
     "table_path",
     "read_table",
-    "read_query",
     "read_file",
     "write_file",
     "merge_upsert",
@@ -229,19 +227,25 @@ def _ns_timestamp_columns(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS). Spark 4.x cannot read
     those as timestamps (PARQUET_TYPE_ILLEGAL); with
     ``spark.sql.legacy.parquet.nanosAsLong=true`` they surface as BIGINT
-    nanos. Footer inspection is driver-side and O(footers), not O(data)."""
+    nanos. A table directory is judged by its first data file (skipping
+    the ``.``/``_`` entries Spark skips). Footer inspection is driver-side
+    and O(1 footer), not O(data)."""
     import pyarrow.parquet as pq
 
-    try:
-        schema = pq.read_schema(path)
-    except Exception:
-        return []
-    out = []
-    for field in schema:
-        t = field.type
-        if str(t).startswith("timestamp[ns"):
-            out.append(field.name)
-    return out
+    if os.path.isdir(path):
+        for dirpath, dirs, files in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if d[0] not in "._")
+            data = sorted(f for f in files if f[0] not in "._")
+            if data:
+                path = os.path.join(dirpath, data[0])
+                break
+        else:
+            return []  # empty table
+    return [
+        field.name
+        for field in pq.read_schema(path)
+        if str(field.type).startswith("timestamp[ns")
+    ]
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -323,14 +327,6 @@ def read_table(
     if limit is not None:
         df = df.limit(limit)
     return df
-
-
-def read_query(spark: SparkSession, sql: str, **kwargs) -> DataFrame:
-    """S2: arbitrary SQL against registered views. ``kwargs`` become named
-    parameters (Spark ≥3.4 parameterized SQL) — the analogue of the
-    reference's ``params=``/magic ``{var}`` substitution without string
-    injection."""
-    return spark.sql(sql, args=kwargs) if kwargs else spark.sql(sql)
 
 
 def write_table(
@@ -721,7 +717,7 @@ def register_views(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> None:
     """S6-adjacent: expose every fixture table as a temp view so the SQL
-    surface (``read_query``/oracle parity) sees the same names DuckDB does.
+    surface (``spark.sql``/oracle parity) sees the same names DuckDB does.
 
     Skipped when this session's views already point at ``sf_dir``: every
     registered query calls this, and re-creating 10 views (schema reads +

@@ -41,8 +41,12 @@ def test_engine_url_parsing(con):
 def test_distributed_join_forces_partitioned_join(con):
     # round-1 advisor: the conf toggle was restored before the (lazy)
     # DataFrame materialized, so distributed_join silently never applied.
-    # execute() now materializes inside the conf window — the pinned plan
-    # must contain no broadcast join, and the conf must be restored after.
+    # execute() now sets the conf in the call's own session clone — the
+    # pinned plan must contain no broadcast join, nothing is cached, and
+    # the shared session's conf never moves, not even while the call runs,
+    # so a broadcast join planned beside it keeps its strategy.
+    import threading
+
     _seed(con)
     td.to_td(
         pd.DataFrame({"y": ["a", "b", "c"], "z": [10, 20, 30]}),
@@ -52,16 +56,111 @@ def test_distributed_join_forces_partitioned_join(con):
         index=False,
     )
     engine = td.create_engine("presto:testdb", con=con)
-    before = con.spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    rp = engine.execute(
-        "SELECT t1.x, dim1.z FROM t1 JOIN dim1 ON t1.y = dim1.y",
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = con.spark.conf.get(key)
+    join = "SELECT t1.x, dim1.z FROM t1 JOIN dim1 ON t1.y = dim1.y"
+
+    def plan(rp):
+        return rp.df._jdf.queryExecution().executedPlan().toString()
+
+    seen, done = set(), threading.Event()
+
+    def watch():
+        seen.add(con.spark.conf.get(key))
+        while not done.wait(0.001):
+            seen.add(con.spark.conf.get(key))
+
+    start, beside = threading.Barrier(2), {}
+
+    def broadcast_call():
+        start.wait(timeout=60)
+        beside["plan"] = plan(engine.execute(join))
+
+    threads = [threading.Thread(target=f) for f in (watch, broadcast_call)]
+    for t in threads:
+        t.start()
+    try:
+        start.wait(timeout=60)
+        rp = engine.execute(join, distributed_join=True)
+        got = sorted(rp.to_dataframe().z.tolist())
+        threads[1].join(timeout=120)
+    finally:
+        done.set()
+        for t in threads:
+            t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert "BroadcastHashJoin" not in plan(rp), plan(rp)
+    assert got == [10, 10, 20, 30]
+    assert not rp.df.is_cached
+    assert seen == {before}
+    assert con.spark.conf.get(key) == before
+    assert "BroadcastHashJoin" in beside["plan"], beside["plan"]
+    # td_* functions resolve inside the call's session
+    out = td.read_td_query(
+        join + " WHERE td_time_range(t1.time, '150', NULL) ORDER BY t1.x",
+        engine,
         distributed_join=True,
     )
-    plan = rp.df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" not in plan, plan
-    assert con.spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == before
-    assert sorted(rp.to_dataframe().z.tolist()) == [10, 10, 20, 30]
-    rp.df.unpersist()
+    assert out.x.tolist() == [2, 3, 4] and out.z.tolist() == [20, 10, 30]
+
+
+def test_engines_on_two_databases_read_their_own_tables(con):
+    """Two databases of one Connection each hold an ``events`` table. An
+    engine on either reads only its own rows, called in turn or from four
+    threads at once, and no call leaves a temp view in the shared
+    session."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def temp_views():
+        return {t.name for t in con.spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    rows = {"db_a": [1, 2, 3], "db_b": [10, 20]}
+    for db, ids in rows.items():
+        td.to_td(pd.DataFrame({"id": ids}), f"{db}.events", con,
+                 index=False, time_value=0)
+    engines = {db: td.create_engine(f"presto:{db}", con=con) for db in rows}
+
+    def read_ids(db):
+        out = td.read_td_query("SELECT id FROM events", engines[db])
+        return sorted(out.id.tolist())
+
+    calls = ["db_a", "db_b"] * 4
+    want = [rows[db] for db in calls]
+    assert [read_ids(db) for db in calls] == want
+    with ThreadPoolExecutor(4) as pool:
+        assert list(pool.map(read_ids, calls)) == want
+    assert temp_views() == before
+
+
+def test_nanosecond_directory_table_reads_as_timestamp(con):
+    """A directory table whose data files store parquet TIMESTAMP(NANOS)
+    (as pyarrow writes them) reads as a timestamp through ``read_table``,
+    and ``read_td_table`` and ``read_td_query`` return the same dtypes."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pandas_td_spark.sources.io import read_table
+
+    dbdir = os.path.join(con.warehouse, "nsdb")
+    os.makedirs(os.path.join(dbdir, "ev.parquet"))
+    ts = pd.to_datetime(["2024-01-01 00:00:01", "2024-01-02 03:04:05"])
+    pq.write_table(
+        pa.table({
+            "id": [1, 2],
+            "ts": pa.array(ts.values, pa.timestamp("ns")),
+            "time": [1704067201, 1704164645],
+        }),
+        os.path.join(dbdir, "ev.parquet", "part-00000.parquet"),
+    )
+    assert dict(read_table(con.spark, dbdir, "ev").dtypes)["ts"] == "timestamp"
+    engine = td.create_engine("presto:nsdb", con=con)
+    by_table = td.read_td_table("ev", engine).sort_values("id")
+    by_query = td.read_td_query("SELECT * FROM ev ORDER BY id", engine)
+    assert by_table.dtypes.to_dict() == by_query.dtypes.to_dict()
+    assert by_query.ts.tolist() == by_table.ts.tolist() == list(ts)
 
 
 def test_roundtrip_query_and_table(con):
@@ -116,6 +215,24 @@ def test_result_proxy_iteration_and_description(con):
     # job re-attach (read_td_job)
     out = td.read_td_job(rp.job_id, engine)
     assert len(out) == 4
+
+
+def test_read_td_job_resolves_while_its_proxy_lives(con):
+    """``Connection._jobs`` pins no frame: once the caller drops a call's
+    ResultProxy, its frame is freed and the job id is gone."""
+    import gc
+    import weakref
+
+    _seed(con)
+    engine = td.create_engine("presto:testdb", con=con)
+    rp = engine.execute("SELECT x FROM t1")
+    job_id, frame = rp.job_id, weakref.ref(rp.df)
+    assert len(td.read_td_job(job_id, engine)) == 4
+    del rp
+    gc.collect()
+    assert frame() is None
+    with pytest.raises(KeyError):
+        td.read_td_job(job_id, engine)
 
 
 def test_catalog_listing(con):

@@ -231,6 +231,42 @@ def test_td_scheduled_time_pin_unpin(spark):
     assert abs(got - now) < 120
 
 
+def test_registration_runs_once_and_pin_reaches_compat_calls(
+    spark, tmp_path, monkeypatch
+):
+    """A session that has the td_* and Presto functions gets no DDL from a
+    second ``get_spark()`` or ``__spark_entry__._prepare``, and a
+    ``set_scheduled_time`` pin is what a compat call sees through the
+    session clone it runs in."""
+    import __spark_entry__
+    import pandas_td_spark as td
+    from pandas_td_spark.engine.session import get_spark
+    from pandas_td_spark.functions.td import set_scheduled_time
+
+    issued = []
+    sql = spark.sql
+
+    def spy(text, *args, **kwargs):
+        issued.append(text)
+        return sql(text, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", spy)
+    assert get_spark(app_name="pandas_td_spark_tests") is spark
+    __spark_entry__._prepare(spark)
+    monkeypatch.undo()
+    assert issued == []
+
+    engine = td.create_engine(
+        "presto:nodb", con=td.connect(warehouse=str(tmp_path), spark=spark)
+    )
+    set_scheduled_time(spark, 1705708800)
+    try:
+        got = td.read_td_query("SELECT td_scheduled_time() AS t", engine)
+        assert got.t.tolist() == [1705708800]
+    finally:
+        set_scheduled_time(spark, None)
+
+
 def test_td_url_decode_and_parse_agent(spark):
     from pandas_td_spark.functions.td import register_td_functions
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -45,10 +46,14 @@ def main() -> None:
     tag = "base"
     if "--confs" in args:
         i = args.index("--confs")
+        if i + 1 == len(args):
+            sys.exit("--confs needs a value: k=v[,k=v...]")
         for kv in args[i + 1].split(","):
             k, v = kv.split("=", 1)
             confs[k] = v
-        tag = args[i + 1].replace("spark.sql.", "").replace("=", "_")[:60]
+        tag = re.sub(
+            r"[^A-Za-z0-9._-]", "_", args[i + 1].replace("spark.sql.", "")
+        )[:60]
         del args[i : i + 2]
     names = args or DEFAULT_NAMES
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -113,7 +118,6 @@ def main() -> None:
         c_med, c_ts = median_of(lambda: fn(spark, sf_dir))
         dfs = fn(spark, sf_dir)
         gc_drain()
-        jobs_before = len(st.getJobIdsForGroup() or [])
         e_med, e_ts = median_of(lambda: noop(dfs))
         # job count of one fresh execution
         sc.setJobGroup(f"fp-{name}", name)
