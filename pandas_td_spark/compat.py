@@ -115,10 +115,7 @@ class Connection:
                     from pandas_td_spark.sources.io import resolve_data_path
 
                     path = resolve_data_path(os.path.join(dbdir, f))
-                    try:
-                        count = self.spark.read.parquet(path).count()
-                    except Exception:
-                        count = None
+                    count = self.spark.read.parquet(path).count()
                     rows.append({"name": name, "count": count})
         return pd.DataFrame(rows, columns=["name", "count"])
 

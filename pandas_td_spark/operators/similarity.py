@@ -5,11 +5,15 @@ Charikar '02 / REPOSE ICDE'21).
 Embeddings are ``array<float>`` (fixed dim). The dot product is a
 ``zip_with`` + ``aggregate`` fold evaluated left-to-right in DOUBLE:
 
-* stays inside whole-stage codegen as a LOOP (no Python, no Arrow hop,
-  no janino 64 KB method blowup — see :func:`dot_chain`);
+* both higher-order functions are ``CodegenFallback`` in Spark 4.1, so
+  the fold is interpreted one element at a time (it does avoid the
+  janino 64 KB method blowup of an expanded chain — see
+  :func:`dot_chain`);
 * bit-identical across engines that evaluate IEEE doubles left-to-right —
   which is what lets the DuckDB oracle hash-match exactly (the same sum
-  is generated as expanded SQL text by :func:`dot_sql`).
+  is generated as expanded SQL text by :func:`dot_sql`). :func:`ivf_topk`
+  scores in numpy with :func:`_chain_dot`, the same left-to-right double
+  order, so its cosines carry the fold's bits without the interpreter.
 
 Scale path: brute-force top-k is a broadcast of the (small) query set
 against a full scan — linear, shuffle-free until the final per-query top-k
@@ -379,19 +383,36 @@ def bucket_array_udf(dim: int, n_planes: int, n_tables: int, seed: int = 7):
     return _buckets
 
 
+def _nearest_cell(A: np.ndarray, centers: np.ndarray) -> np.ndarray:
+    """Index of each row's nearest centroid: argmin of ||x||^2-2x.c (the
+    ||c||^2 term is constant per candidate set and drops out of the
+    argmin). The one assignment rule of IVF and SemDeDup."""
+    d = (A * A).sum(1)[:, None] - 2.0 * (A @ centers.T)
+    return d.argmin(1).astype(np.int32)
+
+
+def _chain_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Σ A[..., i]·B[..., i] over the last axis, accumulated left to right
+    in double from 0.0 — :func:`dot_chain`'s order, one IEEE multiply and
+    add per term, so the results are its bits. Leading axes broadcast."""
+    acc = np.zeros(np.broadcast_shapes(A.shape[:-1], B.shape[:-1]))
+    for i in range(A.shape[-1]):
+        acc = acc + A[..., i] * B[..., i]
+    return acc
+
+
 def _cell_assigner(centers):
-    """Pandas UDF assigning each vector to its nearest centroid. Shared by
-    IVF and SemDeDup so the assignment rule (argmin of ||x||^2-2x.c —
-    the ||c||^2 term is constant per candidate set and drops out of the
-    argmin) can never silently diverge between the two."""
+    """Pandas UDF assigning each vector to its nearest centroid by
+    :func:`_nearest_cell`, the numpy rule :func:`ivf_topk`'s scoring
+    kernel calls too — so SemDeDup's and IVF's cells can never silently
+    diverge."""
 
     @F.pandas_udf("int")
     def cell_of(col: pd.Series) -> pd.Series:
         if len(col) == 0 or len(centers) == 0:
             return pd.Series([], dtype="int32")
         A = np.vstack([np.asarray(v, dtype=np.float64) for v in col])
-        d = (A * A).sum(1)[:, None] - 2.0 * (A @ centers.T)
-        return pd.Series(d.argmin(1).astype(np.int32))
+        return pd.Series(_nearest_cell(A, centers))
 
     return cell_of
 
@@ -462,78 +483,100 @@ def ivf_topk(
     bounded deterministic hash-sample of the corpus (how IVF quantizers
     are actually trained at scale — FAISS samples ~max(10k, 256·k)
     vectors regardless of corpus size; the full corpus is never
-    collected). Cell assignment is one Arrow-vectorized pandas_udf pass
-    (batched argmin against the broadcast centroid matrix). Replaces the
-    round-1 ``pyspark.ml`` KMeans fit whose job-per-Lloyd-iteration
-    overhead dominated the query (~4.4 s of q66's 8 s at sf0.1). Each
-    query touches n_probe/n_clusters of the corpus — the classic IVF
-    trade. Recall vs the exact path is asserted in tests/test_llm.py.
+    collected). Replaces the round-1 ``pyspark.ml`` KMeans fit whose
+    job-per-Lloyd-iteration overhead dominated the query (~4.4 s of
+    q66's 8 s at sf0.1).
+
+    Search is one Arrow pass over the corpus with no persisted
+    intermediate. The ``len(query_ids)`` query vectors are fetched in
+    one small job (the only rows collected besides the training
+    sample) and each query's probe list is ranked in numpy by
+    ``(squared distance, cell)``. One ``mapInArrow`` kernel then, per
+    batch, assigns cells by :func:`_nearest_cell`, scores the rows in a
+    probed cell (self excluded) with :func:`_chain_dot` norms and dots —
+    the cosines :func:`dot_chain` gives, bit for bit — and emits at most
+    k rows per query; a ``row_number`` window over those |Q|·k rows per
+    batch makes the final rank. A zero norm product on a scored pair
+    raises under ANSI mode and scores NULL otherwise, as SQL division
+    does. Each query touches n_probe/n_clusters of the corpus — the
+    classic IVF trade. Recall vs the exact path is asserted in
+    tests/test_llm.py. ``dim`` is kept for signature stability (the
+    vectors' own length is used).
     """
     emb = emb.where(F.col(vec).isNotNull())  # null vectors excluded
     centers = _train_ivf_quantizer(
         emb, id_col=id_col, vec=vec, n_clusters=n_clusters, seed=seed
     )
+    qrows = (
+        emb.where(F.col(id_col).isin(query_ids))
+        .select(id_col, F.col(vec).cast("array<double>"))
+        .collect()
+    )
+    qids = np.array([r[0] for r in qrows])
+    Q = np.array([r[1] for r in qrows], dtype=np.float64).reshape(
+        len(qrows), centers.shape[1]
+    )
+    # probe lists: (q-c)*(q-c) summed left to right, ranked (dist, cell)
+    D = Q[:, None, :] - centers[None, :, :]
+    dist = _chain_dot(D, D)
+    probed = np.zeros(dist.shape, dtype=bool)
+    for j in range(len(qids)):
+        cells = np.lexsort((np.arange(len(centers)), dist[j]))
+        probed[j, cells[: max(n_probe, 0)]] = True
+    q_norm = np.sqrt(_chain_dot(Q, Q))
+    ansi = emb.sparkSession.conf.get("spark.sql.ansi.enabled") == "true"
+    id_type = emb.schema[id_col].dataType.simpleString()
+    k_cut = max(k, 0)
 
-    cell_of = _cell_assigner(centers)
+    def score(batches):
+        import pyarrow as pa
 
-    # assigned feeds the probe-list, the query-vector fetch, and the
-    # candidate join; cache the one assignment pass instead of re-running
-    # the UDF scan three times (at 100 TB this is a written/cached
-    # intermediate — the IVF "index build" step).
-    assigned = _with_norm(
-        emb.withColumn("__cell", cell_of(F.col(vec))), dim, vec
-    ).persist()
+        for rb in batches:
+            if not len(qids):
+                continue
+            X = rb.column(1).flatten().to_numpy(zero_copy_only=False)
+            X = X.astype(np.float64).reshape(rb.num_rows, Q.shape[1])
+            ids = rb.column(0).to_numpy(zero_copy_only=False)
+            hit = probed[:, _nearest_cell(X, centers)].T  # (rows, |Q|)
+            hit &= ids[:, None] != qids[None, :]
+            rows = np.flatnonzero(hit.any(1))
+            X, ids, hit = X[rows], ids[rows], hit[rows]
+            denom = q_norm[None, :] * np.sqrt(_chain_dot(X, X))[:, None]
+            null = hit & (denom == 0)
+            if ansi and null.any():
+                raise ArithmeticError(
+                    "[DIVIDE_BY_ZERO] ivf_topk: zero-norm vector in a "
+                    "scored pair"
+                )
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = _chain_dot(X[:, None, :], Q[None, :, :]) / denom
+            # Spark's DESC order: NaN first, NULL last, ties by n_id
+            cls = np.where(null, 2, np.where(np.isnan(cos), 0, 1))
+            key = np.where(cls == 1, -cos, 0.0)
+            rr, jj = [], []
+            for j in range(len(qids)):
+                c = np.flatnonzero(hit[:, j])
+                top = c[np.lexsort((ids[c], key[c, j], cls[c, j]))[:k_cut]]
+                rr.append(top)
+                jj.append(np.full(len(top), j))
+            r, j = np.concatenate(rr), np.concatenate(jj)
+            id_arrow = rb.schema.field(0).type
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(qids[j], type=id_arrow),
+                    pa.array(ids[r], type=id_arrow),
+                    pa.array(cos[r, j], mask=null[r, j]),
+                ],
+                names=["q_id", "n_id", "cosine"],
+            )
 
-    # per-query probe list: n_probe nearest centroids. The centroid table
-    # is model state (n_clusters rows — driver-held by definition, like any
-    # broadcast model); the QUERY vectors stay executor-side: distances are
-    # a broadcast join of queries × centroids and the probe cut is a
-    # per-query window rank — no corpus/query .collect() (round-1 advisor:
-    # the old driver-side argsort pulled every query row to the driver).
-    spark = emb.sparkSession
-    centers_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-        "__cell int, __center array<double>",
-    )
-    qv = assigned.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec).cast("array<double>").alias("__qv"),
-    )
-    sq_dist = F.aggregate(
-        F.zip_with("__qv", "__center", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wp = W.partitionBy("q_id").orderBy(F.col("__dist"), F.col("__cell"))
-    probes = (
-        qv.join(F.broadcast(centers_df))
-        .select("q_id", "__cell", sq_dist.alias("__dist"))
-        .withColumn("__prnk", F.row_number().over(wp))
-        .where(F.col("__prnk") <= n_probe)
-        .select("q_id", "__cell")
-    )
-
-    q = assigned.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec).alias("q_vec"),
-        F.col("__norm").alias("q_norm"),
-    )
-    cand = (
-        F.broadcast(probes.join(q, "q_id"))
-        .join(assigned, "__cell")
-        .where(F.col("q_id") != F.col(id_col))
-        .select(
-            "q_id",
-            "q_vec",
-            "q_norm",
-            F.col(id_col).alias("n_id"),
-            F.col(vec).alias("c_vec"),
-            F.col("__norm").alias("c_norm"),
+    scored = (
+        emb.where(F.col(id_col).isNotNull())
+        .select(id_col, vec)
+        .mapInArrow(
+            score, f"q_id {id_type}, n_id {id_type}, cosine double"
         )
-        .dropDuplicates(["q_id", "n_id"])
     )
-    cos = dot_chain("q_vec", "c_vec", dim) / (F.col("q_norm") * F.col("c_norm"))
-    scored = cand.select("q_id", "n_id", cos.alias("cosine"))
     w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))

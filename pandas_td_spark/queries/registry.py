@@ -208,7 +208,7 @@ _IMPL_CHANGED_SINCE_LAST_CHECK: dict[str, int] = {
     "q55_embedding_topk": 7,
     # (q109_semdedup_pairs's r7 entry superseded by its r13
     # oracle-conversion row below)
-    "q66_embedding_ivf_topk": 7,
+    # (q66_embedding_ivf_topk's r7 entry superseded by its r17 row below)
     "q116_embedding_pq_topk": 7,
     # (q118_kmeans_clusters's r7 entry superseded by its r12 row below)
     # the round-7 end-of-round snapshot (c02951c) rewrote these AFTER the
@@ -426,6 +426,10 @@ _IMPL_CHANGED_SINCE_LAST_CHECK: dict[str, int] = {
     # redefining the function instead of setting a session variable;
     # values and plan identical, oracle re-checked at sf0.001/sf0.01:
     "q75_td_scheduled_time": 17,
+    # ivf_topk scores in one mapInArrow numpy pass (no persist, joins or
+    # probe window); ids, ranks and cosine bits identical at
+    # sf0.001/sf0.01 (rows-only query, check_query re-run at both):
+    "q66_embedding_ivf_topk": 17,
 }
 
 

@@ -242,6 +242,24 @@ def test_catalog_listing(con):
     assert t.name.tolist() == ["t1"] and t["count"].tolist() == [4]
 
 
+def test_catalog_listing_raises_on_unreadable_table(con):
+    """A table that cannot be read fails the listing instead of showing
+    a NULL count."""
+    import glob
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    _seed(con)
+    td.to_td(pd.DataFrame({"x": [1, 2]}), "testdb.t2", con, index=False)
+    data = os.path.join(con.table_path("testdb", "t2"), "**", "*.parquet")
+    for f in glob.glob(data, recursive=True):
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Py4JJavaError):
+        con.tables("testdb")
+
+
 def test_params_and_index_col(con):
     _seed(con)
     engine = td.create_engine("presto:testdb", con=con)

@@ -89,6 +89,70 @@ def test_ivf_topk_recall(spark):
     assert recall >= 0.4, f"IVF recall {recall:.2f} < 0.4"
 
 
+def _bits(rows):
+    import struct
+
+    return [
+        (r.q_id, r.n_id, r.rnk, struct.unpack("<q", struct.pack("<d", r.cosine))[0])
+        for r in rows
+    ]
+
+
+def test_ivf_topk_probing_every_cell_equals_exact(spark):
+    """With every cell probed IVF is the exact path: same (q_id, n_id,
+    rnk) rows and the same cosine bits as cosine_topk."""
+    from pandas_td_spark.operators.similarity import ivf_topk
+
+    register_views(spark, SF)
+    emb = spark.table("embeddings")
+    qids = list(range(10))
+    order = ["q_id", "rnk"]
+    exact = cosine_topk(emb, qids, k=5).orderBy(order).collect()
+    ivf = ivf_topk(emb, qids, k=5, n_clusters=16, n_probe=16)
+    got = ivf.orderBy(order).collect()
+    assert len(exact) == 50
+    assert _bits(got) == _bits(exact)
+
+
+def test_ivf_topk_edge_cases(spark):
+    from pandas_td_spark.operators.similarity import ivf_topk
+
+    rows = [
+        (1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0]),
+        (4, None), (5, [0.5, 0.5]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def run(df, qids, k):
+        out = ivf_topk(df, qids, k=k, dim=2, n_clusters=2, n_probe=2)
+        return out, {(r.q_id, r.n_id, r.rnk) for r in out.collect()}
+
+    # k above the candidate count returns every candidate; the null
+    # embedding (id 4) is neither a query nor a neighbour
+    _, got = run(emb, [1, 4], k=10)
+    assert got == {(1, 2, 1), (1, 5, 2), (1, 3, 3)}
+    # a query id missing from the corpus yields no rows
+    assert run(emb, [99], k=5)[1] == set()
+    # an empty corpus returns an empty frame with the same schema
+    out, got = run(emb.limit(0), [1], k=5)
+    assert got == set()
+    assert out.schema == ivf_topk(emb, [1], k=5, dim=2, n_clusters=2).schema
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("q_id", "bigint"), ("n_id", "bigint"),
+        ("cosine", "double"), ("rnk", "bigint"),
+    ]
+
+
+def test_ivf_topk_leaves_no_cached_data(spark):
+    from pandas_td_spark.operators.similarity import ivf_topk
+
+    register_views(spark, SF)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    ivf_topk(spark.table("embeddings"), list(range(10)), k=5).collect()
+    assert cache.isEmpty()
+
+
 def test_prefix_jaccard_equals_naive(spark):
     """jaccard_pairs_prefix must produce EXACTLY the naive inverted-index
     join's output — the prefix filter is a pruning, not an approximation."""

@@ -30,6 +30,7 @@ OPS = (
     "Generate",
     "ArrowEvalPython",
     "MapInPandas",
+    "MapInArrow",
     "FlatMapGroupsInPandas",
     "BatchEvalPythonUDTF",
     "Exchange",
@@ -48,7 +49,7 @@ broadcasts), not only shuffles — e.g. q02's Exchange counts are mostly
 broadcasts plus one aggregation shuffle; `CartesianProduct` should never
 appear (and doesn't); BroadcastNestedLoopJoin appears only where a side is
 deliberately broadcast (theta/range/all-pairs ops); Python operators
-(ArrowEvalPython/MapInPandas/FlatMapGroupsInPandas/BatchEvalPythonUDTF) only in the
+(ArrowEvalPython/MapInPandas/MapInArrow/FlatMapGroupsInPandas/BatchEvalPythonUDTF) only in the
 deliberate vectorized-UDF paths.
 
 Iterative / checkpointed operators (BFS, k-core, PageRank, connected
