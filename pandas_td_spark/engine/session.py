@@ -21,6 +21,7 @@ Design notes for 100 TB / 1000-executor scale
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -119,8 +120,10 @@ def get_spark(
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
             logger.getName(), jvm.org.apache.logging.log4j.Level.ERROR
         )
-    except Exception:
-        pass  # non-JVM session (Spark Connect) or log4j-core absent
+    except Exception as exc:  # non-JVM session (Spark Connect), no log4j-core
+        logging.getLogger(__name__).warning(
+            "WindowExec logger left at its level (pin to ERROR failed: %r)", exc
+        )
     # TD-compatible SQL function surface (td_time_range etc.) is registered
     # here so ``spark.sql`` text can use them like the reference's
     # delegated engines did; on a reused session both calls return at once.

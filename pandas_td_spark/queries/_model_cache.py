@@ -1,23 +1,24 @@
-"""Shared LRU + storage-release discipline for memoized model frames.
+"""The one store for model frames memoized per (session, view dir).
 
-Several query families memoize a localCheckpoint()ed model table per
-(session, registered fixture dir) — dedup pair sets, SimHash signatures,
-LSH indexes (queries/llm.py), DSIR weights (queries/curation.py), BPE
-merges, the graph edge cache (queries/advanced.py). Before round 11 each
-cache capped growth with ``dict.clear()`` on overflow, which (a) dropped
-entries belonging to other LIVE (session, fixture) keys and (b) released
-the checkpointed RDD blocks only when the Python handles were eventually
-GC'd (ADVICE r10). This module centralizes the contract:
+Several query families reuse a derived table per registered corpus —
+dedup pair sets, SimHash signatures, the LSH index (queries/llm.py),
+DSIR weights, BPE merges (queries/curation.py) and the co-purchase
+graph's order-part, edge, oriented and adjacency frames
+(queries/advanced.py). Each helper wraps its build in ``memo``:
 
-* ``cache_put`` evicts LEAST-RECENTLY-USED entries (insertion order plus
-  ``cache_touch`` refreshes — plain dict ordering) until under the cap.
-  Capacity eviction DROPS the reference only — callers may still hold
-  lazy plans built on the evicted checkpoint, so its blocks must stay
+* ``memo(spark, kind, build)`` keys a GROUP by ``(spark, view dir)`` —
+  the dir ``sources.io.register_views`` last bound for that session —
+  and returns the group's ``kind`` entry, calling ``build()`` once on a
+  miss. Groups are dropped LEAST-RECENTLY-USED (a hit refreshes its
+  group) past ``_MAX_GROUPS``. A capacity drop DROPS references only:
+  callers may still hold lazy plans over a dropped checkpoint (a
+  query's unexecuted frame over the edges, say), so its blocks stay
   alive until Python GC (releasing here would fail those deferred
   actions with unrecoverable truncated lineage);
-* ``cache_evict`` is EXPLICIT invalidation (register_views(force=True),
-  fixture regeneration): the data is wrong anyway, so it releases each
-  frame's checkpoint blocks eagerly via ``release_checkpoint``;
+* ``evict(spark, view_dir)`` is EXPLICIT invalidation
+  (``register_views`` on a dir switch or ``force=True``): the data is
+  wrong anyway, so it releases every frame of the group eagerly via
+  ``release_checkpoint``. Bare ``evict()`` releases every group;
 * ``release_checkpoint`` frees a local checkpoint's blocks through the
   analyzed plan's ``LogicalRDD`` — ``DataFrame.unpersist()`` only clears
   CacheManager entries and does nothing for checkpoints. A stopped or
@@ -26,7 +27,14 @@ GC'd (ADVICE r10). This module centralizes the contract:
 
 from __future__ import annotations
 
-__all__ = ["release_checkpoint", "cache_touch", "cache_put", "cache_evict"]
+__all__ = ["release_checkpoint", "memo", "evict"]
+
+#: Live (session, view dir) groups kept before the least-recently-used
+#: one is dropped.
+_MAX_GROUPS = 8
+
+# (spark, view dir) -> {kind: frame}; dict order is the LRU order
+_GROUPS: dict = {}
 
 
 def release_checkpoint(df) -> None:
@@ -69,33 +77,28 @@ def release_checkpoint(df) -> None:
 release_checkpoint._warned = False
 
 
-def cache_touch(cache: dict, key):
-    """Return ``cache[key]`` (or None) and mark it most-recently-used."""
-    df = cache.get(key)
-    if df is not None:
-        cache.pop(key)
-        cache[key] = df
-    return df
+def memo(spark, kind: str, build):
+    """Return the ``kind`` frame of ``spark``'s current view dir, calling
+    ``build()`` once per group on a miss. ``build`` may itself call
+    ``memo`` for another kind of the same group."""
+    from pandas_td_spark.sources.io import _CURRENT_VIEWS
+
+    key = (spark, _CURRENT_VIEWS.get(spark))
+    group = _GROUPS.pop(key, None)
+    if group is None:
+        group = {}
+        while len(_GROUPS) >= _MAX_GROUPS:
+            _GROUPS.pop(next(iter(_GROUPS)))  # reference only, see above
+    _GROUPS[key] = group
+    if kind not in group:
+        group[kind] = build()
+    return group[kind]
 
 
-def cache_put(cache: dict, key, df, cap: int = 8):
-    """Insert ``df`` under ``key``, LRU-dropping down to ``cap`` entries.
-    Capacity drops do NOT release checkpoint blocks — a caller may still
-    hold a lazy frame over them (GC reclaims once every reference dies);
-    only explicit invalidation (``cache_evict``) releases eagerly.
-    Returns ``df`` for chaining."""
-    while len(cache) >= cap:
-        cache.pop(next(iter(cache)))
-    cache[key] = df
-    return df
-
-
-def cache_evict(cache: dict, key=None) -> None:
-    """Release-and-drop one entry (``key``) or every entry (``None``)."""
-    if key is None:
-        for k in list(cache):
-            release_checkpoint(cache.pop(k))
-        return
-    df = cache.pop(key, None)
-    if df is not None:
-        release_checkpoint(df)
+def evict(spark=None, view_dir=None) -> None:
+    """Release-and-drop the ``(spark, view_dir)`` group, or every group
+    when called bare."""
+    keys = list(_GROUPS) if spark is None else [(spark, view_dir)]
+    for key in keys:
+        for df in _GROUPS.pop(key, {}).values():
+            release_checkpoint(df)

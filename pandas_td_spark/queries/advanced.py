@@ -8,11 +8,7 @@ from pyspark.sql import functions as F
 
 from pandas_td_spark.operators.asof import asof_join
 from pandas_td_spark.operators.multimodal import featurize_binary, with_media_meta
-from pandas_td_spark.queries._model_cache import (
-    cache_evict,
-    cache_put,
-    cache_touch,
-)
+from pandas_td_spark.queries._model_cache import memo
 from pandas_td_spark.queries.registry import query
 
 
@@ -1073,22 +1069,6 @@ _COPURCHASE_EDGES_SQL = """
 """
 
 
-_EDGE_CACHE: dict = {}
-
-
-def _edge_cache_put(key, df):
-    """Edge-cache insert. Entries under one (session, fixture) are
-    INTERDEPENDENT — the oriented frame is a lazy plan over the edges
-    CHECKPOINT — so overflow must never RELEASE blocks (a capacity drop
-    of the edges entry while a sibling entry or a caller-held plan still
-    references it would leave unrecoverable truncated lineage; the
-    round-11 pre-close review caught exactly that in the first draft).
-    cache_put drops the reference only; blocks live until GC. Eager
-    release happens solely in evict_edge_cache (EXPLICIT invalidation —
-    stale fixture data, whole group dropped at once)."""
-    return cache_put(_EDGE_CACHE, key, df, cap=16)
-
-
 def distinct_order_parts(spark: SparkSession):
     """Distinct ``(o, p)`` order-part incidence rows, MEMOIZED per
     (session, registered fixture dir) and localCheckpointed (bounded:
@@ -1097,16 +1077,13 @@ def distinct_order_parts(spark: SparkSession):
     self-joins it and q158's association rules read it three times
     (marginals, pair join both sides); without the checkpoint each use
     re-runs the lineitem scan + distinct."""
-    from pandas_td_spark.sources.io import _CURRENT_VIEWS
-
-    key = (spark, _CURRENT_VIEWS.get(spark), "op")
-    got = cache_touch(_EDGE_CACHE, key)
-    if got is not None:
-        return got
-    li = spark.table("lineitem").select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct().localCheckpoint()
-    return _edge_cache_put(key, li)
+    return memo(
+        spark,
+        "order_parts",
+        lambda: spark.table("lineitem").select(
+            F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
+        ).distinct().localCheckpoint(),
+    )
 
 
 def _copurchase_edges(spark: SparkSession):
@@ -1118,19 +1095,16 @@ def _copurchase_edges(spark: SparkSession):
     starts from; here the checkpoint also cuts each consumer's lineage
     at the graph boundary (the q65/q164 recomputation lesson)."""
     from pandas_td_spark.operators.graph import undirected_edges
-    from pandas_td_spark.sources.io import _CURRENT_VIEWS
 
-    key = (spark, _CURRENT_VIEWS.get(spark))
-    got = cache_touch(_EDGE_CACHE, key)
-    if got is not None:
-        return got
-    li = distinct_order_parts(spark)
-    pairs = li.alias("a").join(
-        li.alias("b"),
-        (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")),
-    ).select(F.col("a.p").alias("pa"), F.col("b.p").alias("pb"))
-    e = undirected_edges(pairs, "pa", "pb").localCheckpoint()
-    return _edge_cache_put(key, e)
+    def build():
+        li = distinct_order_parts(spark)
+        pairs = li.alias("a").join(
+            li.alias("b"),
+            (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")),
+        ).select(F.col("a.p").alias("pa"), F.col("b.p").alias("pb"))
+        return undirected_edges(pairs, "pa", "pb").localCheckpoint()
+
+    return memo(spark, "edges", build)
 
 
 def _copurchase_oriented(spark: SparkSession):
@@ -1141,14 +1115,12 @@ def _copurchase_oriented(spark: SparkSession):
     reruns — like any production session running several graph queries —
     should pay it once per fixture, not once per action."""
     from pandas_td_spark.operators.graph import orient_edges
-    from pandas_td_spark.sources.io import _CURRENT_VIEWS
 
-    key = (spark, _CURRENT_VIEWS.get(spark), "oriented")
-    got = cache_touch(_EDGE_CACHE, key)
-    if got is not None:
-        return got
-    o = orient_edges(_copurchase_edges(spark), materialize=False)
-    return _edge_cache_put(key, o)
+    return memo(
+        spark,
+        "oriented",
+        lambda: orient_edges(_copurchase_edges(spark), materialize=False),
+    )
 
 
 def _copurchase_adjacency(spark: SparkSession):
@@ -1157,40 +1129,14 @@ def _copurchase_adjacency(spark: SparkSession):
     bfs_levels call otherwise re-persists its own copy per action — a
     production graph session materializes the adjacency once per graph,
     exactly like the oriented frame above."""
-    from pandas_td_spark.sources.io import _CURRENT_VIEWS
 
-    key = (spark, _CURRENT_VIEWS.get(spark), "adjacency")
-    got = cache_touch(_EDGE_CACHE, key)
-    if got is not None:
-        return got
-    e = _copurchase_edges(spark)
-    adj = e.unionAll(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint()
-    return _edge_cache_put(key, adj)
+    def build():
+        e = _copurchase_edges(spark)
+        return e.unionAll(
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        ).localCheckpoint()
 
-
-def evict_edge_cache(spark=None, view_dir=None) -> None:
-    """Drop memoized edge/oriented/adjacency checkpoints for one
-    (session, view dir) — register_views(force=True) calls this so a
-    regenerated fixture dir can't serve stale edges — or everything
-    when called bare. Checkpoint blocks are released EAGERLY through
-    the analyzed plan's LogicalRDD (_model_cache.release_checkpoint,
-    ADVICE r10 — DataFrame.rdd builds a NEW un-persisted RDD, but the
-    plan node holds the persisted one). r11 also fixes the keyed path
-    missing the "adjacency" sub-key."""
-    keys = (
-        [
-            (spark, view_dir),
-            (spark, view_dir, "oriented"),
-            (spark, view_dir, "op"),
-            (spark, view_dir, "adjacency"),
-        ]
-        if spark is not None
-        else list(_EDGE_CACHE)
-    )
-    for k in keys:
-        cache_evict(_EDGE_CACHE, k)
+    return memo(spark, "adjacency", build)
 
 
 # ---------------------------------------------------------------------------

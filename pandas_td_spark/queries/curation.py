@@ -22,11 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pandas_td_spark.engine.session import spread
-from pandas_td_spark.queries._model_cache import (
-    cache_evict,
-    cache_put,
-    cache_touch,
-)
+from pandas_td_spark.queries._model_cache import memo
 from pandas_td_spark.queries.registry import query
 
 
@@ -1167,19 +1163,6 @@ def q108_gopher_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (operators/dsir.py). Bucket hashing is xxhash64 → not oracle-expressible;
 # enrichment/determinism properties pinned in tests/test_curation.py.
 # ---------------------------------------------------------------------------
-_DSIR_WEIGHTS_CACHE: dict = {}
-
-
-def evict_dsir_cache(spark=None, view_dir=None) -> None:
-    """Drop memoized DSIR weight tables for one (session, view dir) —
-    register_views(force=True) calls this alongside the other derived-
-    state evictors — or everything when called bare. Checkpoint blocks
-    are released eagerly (_model_cache, ADVICE r10)."""
-    cache_evict(
-        _DSIR_WEIGHTS_CACHE, None if spark is None else (spark, view_dir)
-    )
-
-
 def _dsir_weights_cached(spark: SparkSession) -> DataFrame:
     """q117's importance-weight table, MEMOIZED per (session, registered
     fixture dir) and localCheckpointed — the doc-grain feature/model
@@ -1187,21 +1170,15 @@ def _dsir_weights_cached(spark: SparkSession) -> DataFrame:
     (featurization + two 1024-bucket fits); the resample step stays
     per-call."""
     from pandas_td_spark.operators.dsir import dsir_weights
-    from pandas_td_spark.sources.io import _CURRENT_VIEWS
 
-    key = (spark, _CURRENT_VIEWS.get(spark))
-    got = cache_touch(_DSIR_WEIGHTS_CACHE, key)
-    if got is None:
+    def build():
         d = spark.table("documents")
         target = d.where(
             (F.col("lang") == "en") & (F.col("doc_id") % 5 == 0)
         )
-        got = cache_put(
-            _DSIR_WEIGHTS_CACHE,
-            key,
-            dsir_weights(d, target).localCheckpoint(),
-        )
-    return got
+        return dsir_weights(d, target).localCheckpoint()
+
+    return memo(spark, "dsir_weights", build)
 
 
 # Oracle-backed since r10: bucket and Gumbel hashing use the seeded-md5
@@ -2534,37 +2511,20 @@ def _bpe_oracle(n_merges: int) -> str:
     )
 
 
-
-_BPE_MERGE_CACHE: dict = {}
-
-
-def evict_bpe_cache(spark=None, view_dir=None) -> None:
-    """Drop memoized BPE merge tables for one (session, view dir) —
-    register_views(force=True) calls this alongside the edge/pairs cache
-    evictors (ADVICE r9: a regenerated fixture dir under the same path
-    must not serve a stale merge table to q265/q270) — or everything
-    when called bare."""
-    cache_evict(
-        _BPE_MERGE_CACHE, None if spark is None else (spark, view_dir)
-    )
-
-
 def _bpe_merges_cached(spark: SparkSession) -> list:
     """q265-trained merge rows, MEMOIZED per (session, registered
     fixture dir) — q265 and q270 share one training run per fixture
-    (the _near_dup_pairs_cached pattern; the merge table is model
-    state, ≤8 driver-side rows)."""
+    (the merge table is model state, ≤8 driver-side rows). Like every
+    memo it is evicted by register_views on a dir switch or
+    ``force=True``, so a regenerated fixture dir under the same path
+    cannot serve a stale merge table to q265/q270 (ADVICE r9)."""
     from pandas_td_spark.operators.bpe import bpe_train, words_with_counts
-    from pandas_td_spark.sources.io import _CURRENT_VIEWS
 
-    key = (spark, _CURRENT_VIEWS.get(spark))
-    got = cache_touch(_BPE_MERGE_CACHE, key)
-    if got is None:
+    def build():
         words = words_with_counts(spread(spark.table("documents"), by="doc_id"))
-        got = cache_put(
-            _BPE_MERGE_CACHE, key, bpe_train(words, _BPE_MERGES).collect()
-        )
-    return got
+        return bpe_train(words, _BPE_MERGES).collect()
+
+    return memo(spark, "bpe_merges", build)
 
 
 @query(

@@ -37,18 +37,11 @@ from pandas_td_spark.operators.similarity import (
     lsh_topk_exact,
     plane_matrix,
 )
-from pandas_td_spark.queries._model_cache import (
-    cache_evict,
-    cache_put,
-    cache_touch,
-)
+from pandas_td_spark.queries._model_cache import memo
 from pandas_td_spark.queries.registry import query
 
 _DIM = 64
 _QUERY_IDS = [0, 1, 2, 3, 4]
-
-
-_PAIRS_CACHE: dict = {}
 
 
 def _near_dup_pairs_cached(spark: SparkSession) -> DataFrame:
@@ -57,28 +50,23 @@ def _near_dup_pairs_cached(spark: SparkSession) -> DataFrame:
     fixture dir) and localCheckpointed — the q80/q235/q65/q159 family
     all consume the same pair set (the prefix filter is EXACT, proven
     by q80 hash-matching the all-pairs oracle), and rebuilding the
-    inverted index for each cost ~2 s per query at sf0.1. Same pattern
-    and eviction contract as advanced.py's graph edge cache: in
-    production this is the materialized candidate-pair table every
-    dedup consumer starts from. The checkpointed frame is bounded by
-    the matching-pair count, never the corpus."""
+    inverted index for each cost ~2 s per query at sf0.1. In production
+    this is the materialized candidate-pair table every dedup consumer
+    starts from (_model_cache.memo owns the key and the eviction). The
+    checkpointed frame is bounded by the matching-pair count, never the
+    corpus."""
     from pandas_td_spark.operators.dedup import jaccard_pairs_auto
-    from pandas_td_spark.sources.io import _CURRENT_VIEWS
 
-    key = (spark, _CURRENT_VIEWS.get(spark))
-    got = cache_touch(_PAIRS_CACHE, key)
-    if got is not None:
-        return got
     # size-gated (r8): exact prefix filter at fixture scales, banded
     # MinHash + exact verify above EXACT_PAIRS_MAX_DOCS — the gate's
     # count probe runs ONCE per cache fill, not per consumer
-    pairs = jaccard_pairs_auto(
-        spark.table("documents"), shingle_n=3, threshold=0.6
-    ).localCheckpoint()
-    return cache_put(_PAIRS_CACHE, key, pairs)
-
-
-_LSH_INDEX_CACHE: dict = {}
+    return memo(
+        spark,
+        "near_dup_pairs",
+        lambda: jaccard_pairs_auto(
+            spark.table("documents"), shingle_n=3, threshold=0.6
+        ).localCheckpoint(),
+    )
 
 
 def _lsh_index_cached(spark: SparkSession) -> DataFrame:
@@ -86,54 +74,30 @@ def _lsh_index_cached(spark: SparkSession) -> DataFrame:
     registered fixture dir) and localCheckpointed — the materialized
     ANN index a production session builds once per corpus (the
     interpreted fold-dot bucket build is the expensive part; probes are
-    cheap). Same pattern/eviction contract as the pair cache."""
+    cheap)."""
     from pandas_td_spark.operators.similarity import lsh_index_exact
-    from pandas_td_spark.sources.io import _CURRENT_VIEWS
 
-    key = (spark, _CURRENT_VIEWS.get(spark))
-    got = cache_touch(_LSH_INDEX_CACHE, key)
-    if got is None:
-        got = cache_put(
-            _LSH_INDEX_CACHE,
-            key,
-            lsh_index_exact(
-                spark.table("embeddings"), dim=_DIM, n_planes=4, n_tables=8
-            ).localCheckpoint(),
-        )
-    return got
-
-
-_SIMHASH_SIGS_CACHE: dict = {}
+    return memo(
+        spark,
+        "lsh_index",
+        lambda: lsh_index_exact(
+            spark.table("embeddings"), dim=_DIM, n_planes=4, n_tables=8
+        ).localCheckpoint(),
+    )
 
 
 def _simhash_sigs_cached(spark: SparkSession) -> DataFrame:
     """q54's 60-bit signature table, MEMOIZED per (session, registered
     fixture dir) and localCheckpointed — the doc-grain materialized
-    signature table a production SimHash session builds once per corpus
-    (same pattern/eviction contract as _near_dup_pairs_cached)."""
+    signature table a production SimHash session builds once per
+    corpus."""
     from pandas_td_spark.operators.dedup import simhash_signatures
-    from pandas_td_spark.sources.io import _CURRENT_VIEWS
 
-    key = (spark, _CURRENT_VIEWS.get(spark))
-    got = cache_touch(_SIMHASH_SIGS_CACHE, key)
-    if got is None:
-        got = cache_put(
-            _SIMHASH_SIGS_CACHE,
-            key,
-            simhash_signatures(spark.table("documents")).localCheckpoint(),
-        )
-    return got
-
-
-def evict_pairs_cache(spark=None, view_dir=None) -> None:
-    """Drop memoized pair/signature/index checkpoints for one (session,
-    view dir) — register_views(force=True) calls this — or everything
-    when bare. Eviction RELEASES each frame's checkpoint blocks eagerly
-    (_model_cache.release_checkpoint), not at Python GC (ADVICE r10)."""
-    key = None if spark is None else (spark, view_dir)
-    cache_evict(_PAIRS_CACHE, key)
-    cache_evict(_SIMHASH_SIGS_CACHE, key)
-    cache_evict(_LSH_INDEX_CACHE, key)
+    return memo(
+        spark,
+        "simhash_sigs",
+        lambda: simhash_signatures(spark.table("documents")).localCheckpoint(),
+    )
 
 
 # ---------------------------------------------------------------------------

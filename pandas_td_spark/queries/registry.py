@@ -164,17 +164,17 @@ _IMPL_CHANGED_SINCE_LAST_CHECK: dict[str, int] = {
     # across the pairs/sigs/index/DSIR/BPE/edge caches (ADVICE r10).
     # Values and plans identical — only the memo bookkeeping changed:
     # ("q54_simhash_pairs" r11 entry superseded by its r15 row below)
-    "q56_embedding_lsh_topk": 11,
+    # (q56_embedding_lsh_topk r11 entry superseded by its r17 row below)
     # (q65_near_dup_clusters / q80_near_dup_prefix r11 entries
     # superseded by their r12 rows below)
-    "q117_dsir_select": 11,
-    "q121_triangle_count": 11,
-    "q158_basket_lift": 11,
+    # (q117_dsir_select r11 entry superseded by its r17 row below)
+    # (q121_triangle_count r11 entry superseded by its r17 row below)
+    # (q158_basket_lift r11 entry superseded by its r17 row below)
     # (q159_cluster_survivor's r11 entry superseded by its r12 row below)
-    "q164_bfs_levels": 11,
-    "q165_degree_histogram": 11,
+    # (q164_bfs_levels r11 entry superseded by its r17 row below)
+    # (q165_degree_histogram r11 entry superseded by its r17 row below)
     # (q166_kcore's r11 entry superseded by its r12 row below)
-    "q197_link_prediction": 11,
+    # (q197_link_prediction r11 entry superseded by its r17 row below)
     # (q235_dup_rate_by_source / q264_split_leakage r11 entries
     # superseded by their r12 rows below)
     # ("q265_bpe_train" r11 entry superseded by its r15 row below)
@@ -321,7 +321,8 @@ _IMPL_CHANGED_SINCE_LAST_CHECK: dict[str, int] = {
     # (plans/guards.py MERGE hint past 1 M footer rows — plan identical
     # at sf0.1 where 150 k rows keep the broadcast; kills the 10x
     # broadcast-threshold cliff)
-    "q166_kcore": 15,  # r13: docstring-only clean re-A/B in kcore_peel
+    # (q166_kcore r15 entry superseded by its r17 row below) r13:
+    # docstring-only clean re-A/B in kcore_peel
     # (lazy keep confirmed, 2.62 vs 2.90 median); r15: ORACLE-side only
     # — MATERIALIZED hints on the shared co-purchase CTEs + per-round
     # peel CTEs stop DuckDB's inlining re-expansion (the >8 GB sf0.1
@@ -363,27 +364,27 @@ _IMPL_CHANGED_SINCE_LAST_CHECK: dict[str, int] = {
     "q29_stats_agg": 15,
     "q52_near_dup_pairs": 15,
     "q53_minhash_lsh_pairs": 15,
-    "q54_simhash_pairs": 15,
-    "q65_near_dup_clusters": 15,
-    "q80_near_dup_prefix": 15,
+    # (q54_simhash_pairs r15 entry superseded by its r17 row below)
+    # (q65_near_dup_clusters r15 entry superseded by its r17 row below)
+    # (q80_near_dup_prefix r15 entry superseded by its r17 row below)
     "q85_repetition_stats": 15,
     "q92_winnowing": 15,
     "q95_unigram_nll": 15,
     "q108_gopher_verdict": 15,
     "q128_ngram_novelty": 15,
-    "q159_cluster_survivor": 15,
+    # (q159_cluster_survivor r15 entry superseded by its r17 row below)
     "q186_bigram_nll": 15,
     "q204_pmi_collocations": 15,
     "q207_zipf_fit": 15,
     "q211_source_overlap": 15,
-    "q235_dup_rate_by_source": 15,
+    # (q235_dup_rate_by_source r15 entry superseded by its r17 row below)
     "q256_sequence_packing": 15,
     "q258_bpe_pair_counts": 15,
     "q259_truncation_loss": 15,
-    "q264_split_leakage": 15,
-    "q265_bpe_train": 15,
+    # (q264_split_leakage r15 entry superseded by its r17 row below)
+    # (q265_bpe_train r15 entry superseded by its r17 row below)
     "q269_curation_funnel": 15,
-    "q270_bpe_encode_stats": 15,
+    # (q270_bpe_encode_stats r15 entry superseded by its r17 row below)
     # round 15 (optimization): _spread_docs hash-spread of the one-split
     # documents scan before heavy per-row Python codec work
     # (queries/llm.py — guide §2.5 input skew; values identical, oracle
@@ -430,6 +431,27 @@ _IMPL_CHANGED_SINCE_LAST_CHECK: dict[str, int] = {
     # probe window); ids, ranks and cosine bits identical at
     # sf0.001/sf0.01 (rows-only query, check_query re-run at both):
     "q66_embedding_ivf_topk": 17,
+    # the per-corpus model memos (pair set, SimHash signatures, LSH
+    # index, DSIR weights, BPE merges, co-purchase graph frames) are one
+    # _model_cache.memo store instead of six dicts and four evictors;
+    # builds, values and plans identical, oracles re-checked at
+    # sf0.001/sf0.01:
+    "q54_simhash_pairs": 17,
+    "q56_embedding_lsh_topk": 17,
+    "q65_near_dup_clusters": 17,
+    "q80_near_dup_prefix": 17,
+    "q117_dsir_select": 17,
+    "q121_triangle_count": 17,
+    "q158_basket_lift": 17,
+    "q159_cluster_survivor": 17,
+    "q164_bfs_levels": 17,
+    "q165_degree_histogram": 17,
+    "q166_kcore": 17,
+    "q197_link_prediction": 17,
+    "q235_dup_rate_by_source": 17,
+    "q264_split_leakage": 17,
+    "q265_bpe_train": 17,
+    "q270_bpe_encode_stats": 17,
 }
 
 

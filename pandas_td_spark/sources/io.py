@@ -34,6 +34,7 @@ from pandas_td_spark.functions.td import (
     is_timestamp_dtype,
     td_time_range,
 )
+from pandas_td_spark.queries import _model_cache
 
 __all__ = [
     "TABLES",
@@ -248,20 +249,6 @@ def _ns_timestamp_columns(path: str) -> list[str]:
     ]
 
 
-def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table, normalizing ns-timestamp columns back to
-    TimestampType (µs) — lossless when sub-µs components are zero, which
-    holds for the driver fixtures (verified via DuckDB ``epoch_ns % 1000``)."""
-    path = resolve_data_path(table_path(sf_dir, name))
-    df = spark.read.parquet(path)
-    for c in _ns_timestamp_columns(path):
-        if dict(df.dtypes).get(c) == "bigint":
-            # integer `div`: double division would lose precision at
-            # ~1.7e18 ns (beyond double's 53-bit mantissa)
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
-
-
 def read_table(
     spark: SparkSession,
     sf_dir: str,
@@ -321,6 +308,8 @@ def read_table(
             else:
                 df = df.where(td_time_range(t, s, e))
     for c in ns_cols:
+        # integer `div`: double division would lose precision at ~1.7e18
+        # ns (beyond double's 53-bit mantissa)
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     if columns:
         df = df.select(*columns)
@@ -728,31 +717,14 @@ def register_views(
     target = os.path.abspath(sf_dir)
     if not force and _CURRENT_VIEWS.get(spark) == target:
         return
-    # a forced refresh (or dir switch) must also invalidate any memoized
-    # derived state keyed on (session, view dir) — the graph edge cache
-    # would otherwise serve checkpointed edges built from the OLD files
-    try:
-        from pandas_td_spark.queries.advanced import evict_edge_cache
-        from pandas_td_spark.queries.curation import (
-            evict_bpe_cache,
-            evict_dsir_cache,
-        )
-        from pandas_td_spark.queries.llm import evict_pairs_cache
-
-        for evict in (
-            evict_edge_cache,
-            evict_pairs_cache,
-            evict_bpe_cache,
-            evict_dsir_cache,
-        ):
-            evict(spark, _CURRENT_VIEWS.get(spark))
-            if force:
-                evict(spark, target)
-    except Exception:
-        pass  # queries package optional for bare-io users
+    # a forced refresh (or dir switch) must also release the model frames
+    # memoized for the session's current view dir — the graph edge memo
+    # would otherwise serve checkpointed edges built from the OLD files.
+    # memo only builds for the current dir, so no other dir has a group.
+    _model_cache.evict(spark, _CURRENT_VIEWS.get(spark))
     for name in TABLES:
         if os.path.exists(table_path(sf_dir, name)):
-            _load(spark, sf_dir, name).createOrReplaceTempView(name)
+            read_table(spark, sf_dir, name).createOrReplaceTempView(name)
     _CURRENT_VIEWS[spark] = target
 
 

@@ -135,27 +135,35 @@ def test_engines_on_two_databases_read_their_own_tables(con):
 
 def test_nanosecond_directory_table_reads_as_timestamp(con):
     """A directory table whose data files store parquet TIMESTAMP(NANOS)
-    (as pyarrow writes them) reads as a timestamp through ``read_table``,
-    and ``read_td_table`` and ``read_td_query`` return the same dtypes."""
+    (as pyarrow writes them) reads as a timestamp through ``read_table``
+    and through the views ``register_views`` binds, and ``read_td_table``
+    and ``read_td_query`` return the same dtypes."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pandas_td_spark.sources.io import read_table
+    from pandas_td_spark.sources.io import read_table, register_views
 
     dbdir = os.path.join(con.warehouse, "nsdb")
-    os.makedirs(os.path.join(dbdir, "ev.parquet"))
+    viewdir = os.path.join(con.warehouse, "views")
     ts = pd.to_datetime(["2024-01-01 00:00:01", "2024-01-02 03:04:05"])
-    pq.write_table(
-        pa.table({
-            "id": [1, 2],
-            "ts": pa.array(ts.values, pa.timestamp("ns")),
-            "time": [1704067201, 1704164645],
-        }),
-        os.path.join(dbdir, "ev.parquet", "part-00000.parquet"),
-    )
+    table = pa.table({
+        "id": [1, 2],
+        "ts": pa.array(ts.values, pa.timestamp("ns")),
+        "time": [1704067201, 1704164645],
+    })
+    for path in (
+        os.path.join(dbdir, "ev.parquet"),
+        os.path.join(viewdir, "events.parquet"),  # a name register_views binds
+    ):
+        os.makedirs(path)
+        pq.write_table(table, os.path.join(path, "part-00000.parquet"))
     assert dict(read_table(con.spark, dbdir, "ev").dtypes)["ts"] == "timestamp"
+    views = con.spark.newSession()
+    register_views(views, viewdir)
+    assert dict(views.table("events").dtypes)["ts"] == "timestamp"
+    assert views.table("events").orderBy("id").toPandas().ts.tolist() == list(ts)
     engine = td.create_engine("presto:nsdb", con=con)
     by_table = td.read_td_table("ev", engine).sort_values("id")
     by_query = td.read_td_query("SELECT * FROM ev ORDER BY id", engine)

@@ -2,20 +2,22 @@
 
 The Spark-side block-release behavior is pinned in
 tests/test_edge_cache.py (persistent-RDD count drops on evict); these
-tests pin the pure bookkeeping: LRU order (touch refreshes), cap
-enforcement with per-entry release (never clear()-everything), and
-release tolerance for non-DataFrame values (the BPE cache stores
-collected row lists).
+tests pin the store's behavior with stand-in sessions and frames: build
+counts, LRU order (a hit refreshes its group), capacity drops that never
+release, explicit eviction that does, and release tolerance for
+non-DataFrame values (the BPE memo stores collected row lists).
 """
 
 from __future__ import annotations
 
-from pandas_td_spark.queries._model_cache import (
-    cache_evict,
-    cache_put,
-    cache_touch,
-    release_checkpoint,
-)
+import pytest
+
+from pandas_td_spark.queries import _model_cache as mc
+from pandas_td_spark.queries._model_cache import evict, memo, release_checkpoint
+
+
+class _Session:
+    """Stand-in session: hashable and weak-referenceable, like SparkSession."""
 
 
 class _FakeFrame:
@@ -32,50 +34,97 @@ class _FakeFrame:
         raise RuntimeError("stop here — release attempt recorded")
 
 
+@pytest.fixture(autouse=True)
+def _private_store(monkeypatch):
+    monkeypatch.setattr(mc, "_GROUPS", {})
+
+
+def _get(sessions, i, log, builds):
+    def build():
+        builds.append(i)
+        return _FakeFrame(log, i)
+
+    return memo(sessions[i], "k", build)
+
+
 def test_lru_eviction_order_and_touch():
-    log: list = []
-    cache: dict = {}
-    for i in range(4):
-        cache_put(cache, i, _FakeFrame(log, i), cap=4)
-    assert cache_touch(cache, 0)  # 0 becomes most-recently-used
-    cache_put(cache, 9, _FakeFrame(log, 9), cap=4)  # drops LRU = 1, not 0
-    assert list(cache) == [2, 3, 0, 9]
-    # capacity drops must NOT release storage: a caller may still hold a
-    # lazy plan over the dropped checkpoint (r11 review — releasing here
-    # would fail its deferred action with truncated lineage); GC reclaims
+    log, builds = [], []
+    sessions = [_Session() for _ in range(mc._MAX_GROUPS + 1)]
+    for i in range(mc._MAX_GROUPS):
+        _get(sessions, i, log, builds)
+    _get(sessions, 0, log, builds)  # a hit: 0 becomes most-recently-used
+    assert builds == list(range(mc._MAX_GROUPS))
+    _get(sessions, mc._MAX_GROUPS, log, builds)  # drops LRU = 1, not 0
+    builds.clear()
+    _get(sessions, 0, log, builds)
+    assert builds == [], "the touched group must survive the overflow"
+    _get(sessions, 1, log, builds)
+    assert builds == [1], "the least-recently-used group is the one dropped"
+    # capacity drops must NOT release storage: a caller may still hold
+    # a lazy plan over the dropped checkpoint (r11 review — releasing
+    # here would fail its deferred action with truncated lineage); GC
+    # reclaims
     assert log == []
 
 
 def test_cap_drops_down_not_clear():
-    log: list = []
-    cache: dict = {}
-    for i in range(8):
-        cache_put(cache, i, _FakeFrame(log, i), cap=8)
-    cache_put(cache, 100, _FakeFrame(log, 100), cap=8)
-    # one slot freed — the other 7 live entries survive (the old
+    log, builds = [], []
+    sessions = [_Session() for _ in range(mc._MAX_GROUPS + 1)]
+    for i in range(mc._MAX_GROUPS + 1):
+        _get(sessions, i, log, builds)
+    builds.clear()
+    # one group freed — the other live groups survive (the old
     # clear()-on-overflow dropped entries of other live fixtures)
-    assert len(cache) == 8 and 100 in cache and 0 not in cache
+    for i in range(1, mc._MAX_GROUPS + 1):
+        _get(sessions, i, log, builds)
+    assert builds == []
     assert log == [], "capacity drop must not release (see above)"
 
 
 def test_evict_one_and_all_release():
-    log: list = []
-    cache = {
-        "a": _FakeFrame(log, "a"),
-        "b": _FakeFrame(log, "b"),
-    }
-    cache_evict(cache, "a")
-    assert list(cache) == ["b"] and log == ["a"]
-    cache_evict(cache, "missing")  # no-op
-    cache_evict(cache, None)
-    assert not cache and log == ["a", "b"]
+    log = []
+    a, b = _Session(), _Session()
+    memo(a, "x", lambda: _FakeFrame(log, "a.x"))
+    memo(a, "y", lambda: _FakeFrame(log, "a.y"))
+    memo(b, "x", lambda: _FakeFrame(log, "b.x"))
+    evict(a, None)
+    assert log == ["a.x", "a.y"]
+    evict(_Session(), "/missing")  # no-op
+    evict()
+    assert log == ["a.x", "a.y", "b.x"]
+    builds = []
+    memo(a, "x", lambda: builds.append("a.x") or _FakeFrame(log, "a.x"))
+    assert builds == ["a.x"], "an evicted group rebuilds on the next call"
 
 
 def test_release_tolerates_non_frames():
     release_checkpoint([("rank", "l", "r")])  # BPE stores row lists
     release_checkpoint(None)
     release_checkpoint(object())
+    s = _Session()
+    rows = memo(s, "bpe_merges", lambda: [("rank", "l", "r")])
+    evict(s, None)
+    assert rows == [("rank", "l", "r")]
 
 
-def test_touch_missing_returns_none():
-    assert cache_touch({}, "nope") is None
+def test_memo_builds_once_per_kind_and_view_dir():
+    from pandas_td_spark.sources.io import _CURRENT_VIEWS
+
+    builds = []
+    s = _Session()
+
+    def base():
+        builds.append("base")
+        return "base"
+
+    def derived():  # a build may memo another kind of its own group
+        builds.append("derived")
+        return memo(s, "base", base) + "+derived"
+
+    assert memo(s, "derived", derived) == "base+derived"
+    assert memo(s, "base", base) == "base"
+    assert memo(s, "derived", derived) == "base+derived"
+    assert builds == ["derived", "base"]
+    _CURRENT_VIEWS[s] = "/other/dir"  # what register_views records
+    assert memo(s, "base", base) == "base"
+    assert builds == ["derived", "base", "base"]
