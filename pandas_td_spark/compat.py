@@ -32,9 +32,11 @@ The remote job lifecycle (HTTP POST → poll → msgpack download; SURVEY §3.1
 boundaries #1/#2) collapses into Spark job execution; ``show_progress`` is
 accepted and not used yet. Each :meth:`QueryEngine.execute` runs in a
 throwaway clone of ``Connection.spark`` (which carries its temp views,
-``td_*`` functions and SQL conf): the call's table views and
-``distributed_join`` conf go into the clone only, and the clone dies with
-the call's :class:`ResultProxy`, which ``Connection._jobs`` holds weakly.
+``td_*`` functions and SQL conf): views of the database tables the query
+names and the ``distributed_join`` conf go into the clone only, and the
+clone dies with the call's :class:`ResultProxy`, which ``Connection._jobs``
+holds weakly. Every other name (CTEs, the shared session's temp views)
+resolves as the clone inherits it.
 """
 
 from __future__ import annotations
@@ -52,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pandas_td_spark.functions.td import TimeLike
 from pandas_td_spark.sources.io import read_table as _read_table
+from pandas_td_spark.sources.io import resolve_data_path
 from pandas_td_spark.sources.io import write_table as _write_table
 
 __all__ = [
@@ -68,6 +71,15 @@ __all__ = [
 ]
 
 __version__ = "0.1.0"
+
+
+def _table_names(dbdir: str) -> list[str]:
+    """Sorted names of the ``<name>.parquet`` tables in a database dir."""
+    if not os.path.isdir(dbdir):
+        return []
+    return sorted(
+        f[: -len(".parquet")] for f in os.listdir(dbdir) if f.endswith(".parquet")
+    )
 
 
 class Connection:
@@ -108,15 +120,10 @@ class Connection:
         db = database or self.default_database
         dbdir = os.path.join(self.warehouse, db)
         rows = []
-        if os.path.isdir(dbdir):
-            for f in sorted(os.listdir(dbdir)):
-                if f.endswith(".parquet"):
-                    name = f[: -len(".parquet")]
-                    from pandas_td_spark.sources.io import resolve_data_path
-
-                    path = resolve_data_path(os.path.join(dbdir, f))
-                    count = self.spark.read.parquet(path).count()
-                    rows.append({"name": name, "count": count})
+        for name in _table_names(dbdir):
+            path = resolve_data_path(self.table_path(db, name))
+            count = self.spark.read.parquet(path).count()
+            rows.append({"name": name, "count": count})
         return pd.DataFrame(rows, columns=["name", "count"])
 
     def table_path(self, database: str, table: str) -> str:
@@ -175,11 +182,14 @@ class QueryEngine:
             root.sparkContext, root._jsparkSession.cloneSession()
         )
         dbdir = os.path.join(self.con.warehouse, self.database)
-        if os.path.isdir(dbdir):
-            for f in os.listdir(dbdir):
-                if f.endswith(".parquet"):
-                    name = f[: -len(".parquet")]
-                    _read_table(spark, dbdir, name).createOrReplaceTempView(name)
+        for name in _table_names(dbdir):
+            # bind a table only where the query names it as a whole
+            # identifier: a superset of what it can resolve from the
+            # database, subqueries and backquoted names included
+            named = r"(?<![A-Za-z0-9_])" + re.escape(name) + r"(?![A-Za-z0-9_])"
+            if re.search(named, query, re.I):
+                view = "`" + name.replace("`", "``") + "`"  # e.g. my-table
+                _read_table(spark, dbdir, name).createOrReplaceTempView(view)
         if distributed_join:
             # Presto session property distributed_join='true' analogue:
             # force partitioned (non-broadcast) joins. The strategy is chosen

@@ -133,6 +133,96 @@ def test_engines_on_two_databases_read_their_own_tables(con):
     assert temp_views() == before
 
 
+def _corrupt(con, table):
+    """Overwrite every data file of ``testdb.<table>`` with garbage."""
+    import glob
+    import os
+
+    data = os.path.join(con.table_path("testdb", table), "**", "*.parquet")
+    for f in glob.glob(data, recursive=True):
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+
+
+def test_unreadable_table_breaks_only_queries_that_name_it(con):
+    """A query binds only the tables it names, so one unreadable table
+    in the database fails the queries on it and no others."""
+    from py4j.protocol import Py4JJavaError
+
+    _seed(con)
+    td.to_td(pd.DataFrame({"x": [1, 2]}), "testdb.t2", con, index=False)
+    _corrupt(con, "t2")
+    engine = td.create_engine("presto:testdb", con=con)
+    assert td.read_td_query("SELECT count(*) AS n FROM t1", engine).n[0] == 4
+    with pytest.raises(Py4JJavaError):
+        td.read_td_query("SELECT count(*) AS n FROM t2", engine)
+
+
+def _seed_three(con):
+    _seed(con)
+    for name, xs in (("t2", [5, 6]), ("t3", [7])):
+        td.to_td(pd.DataFrame({"x": xs}), f"testdb.{name}", con, index=False,
+                 time_value=0)
+    return td.create_engine("presto:testdb", con=con)
+
+
+def test_execute_binds_only_the_tables_the_query_names(con, monkeypatch):
+    """A one-table query over a three-table database reads one table."""
+    from pandas_td_spark import compat
+
+    engine = _seed_three(con)
+    bound, read_table = [], compat._read_table
+
+    def spy(spark, dbdir, name, *args, **kwargs):
+        bound.append(name)
+        return read_table(spark, dbdir, name, *args, **kwargs)
+
+    monkeypatch.setattr(compat, "_read_table", spy)
+    out = td.read_td_query("SELECT x FROM t1 ORDER BY x", engine)
+    assert out.x.tolist() == [1, 2, 3, 4]
+    assert bound == ["t1"]
+
+
+def test_binding_rule_keeps_every_name_resolving(con):
+    """Names the query can resolve from the database are bound wherever
+    they occur; every other name resolves as the shared session has it."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    engine = _seed_three(con)
+
+    def rows(sql):
+        return td.read_td_query(sql, engine).values.tolist()
+
+    # a CTE named like a table wins over the table, as Spark resolves it
+    assert rows("WITH t1 AS (SELECT 99 AS x) SELECT x FROM t1") == [[99]]
+    # tables named only inside scalar subqueries
+    assert rows(
+        "SELECT (SELECT COUNT(*) FROM t1) AS t1, (SELECT COUNT(*) FROM t2) AS t2"
+    ) == [[4, 2]]
+    # mixed case
+    assert rows("SELECT x FROM T1 WHERE x > 2 ORDER BY x") == [[3], [4]]
+    # a pyarrow-written directory table whose name needs backquotes
+    path = con.table_path("testdb", "my-table")
+    os.makedirs(path)
+    pq.write_table(pa.table({"v": [1, 2, 3]}),
+                   os.path.join(path, "part-00000.parquet"))
+    assert rows("SELECT sum(v) AS s FROM `my-table`") == [[6]]
+    # a temp view of the shared session that is no table file (as the
+    # uploader's in-memory rollup is), joined to a table
+    con.spark.createDataFrame(
+        pd.DataFrame({"x": [3, 7], "n": [30, 70]})
+    ).createOrReplaceTempView("rollup_mem")
+    try:
+        assert rows(
+            "SELECT r.x, r.n FROM rollup_mem r JOIN t3 ON r.x = t3.x"
+        ) == [[7, 70]]
+    finally:
+        con.spark.catalog.dropTempView("rollup_mem")
+
+
 def test_nanosecond_directory_table_reads_as_timestamp(con):
     """A directory table whose data files store parquet TIMESTAMP(NANOS)
     (as pyarrow writes them) reads as a timestamp through ``read_table``
@@ -253,17 +343,11 @@ def test_catalog_listing(con):
 def test_catalog_listing_raises_on_unreadable_table(con):
     """A table that cannot be read fails the listing instead of showing
     a NULL count."""
-    import glob
-    import os
-
     from py4j.protocol import Py4JJavaError
 
     _seed(con)
     td.to_td(pd.DataFrame({"x": [1, 2]}), "testdb.t2", con, index=False)
-    data = os.path.join(con.table_path("testdb", "t2"), "**", "*.parquet")
-    for f in glob.glob(data, recursive=True):
-        with open(f, "wb") as fh:
-            fh.write(b"not a parquet file")
+    _corrupt(con, "t2")
     with pytest.raises(Py4JJavaError):
         con.tables("testdb")
 
