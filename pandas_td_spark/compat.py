@@ -52,9 +52,9 @@ from collections.abc import Iterator, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from pandas_td_spark.functions.td import TimeLike
+from pandas_td_spark.functions.td import TimeLike, to_epoch_seconds
 from pandas_td_spark.sources.io import read_table as _read_table
-from pandas_td_spark.sources.io import resolve_data_path
+from pandas_td_spark.sources.io import resolve_data_path, table_names
 from pandas_td_spark.sources.io import write_table as _write_table
 
 __all__ = [
@@ -71,15 +71,6 @@ __all__ = [
 ]
 
 __version__ = "0.1.0"
-
-
-def _table_names(dbdir: str) -> list[str]:
-    """Sorted names of the ``<name>.parquet`` tables in a database dir."""
-    if not os.path.isdir(dbdir):
-        return []
-    return sorted(
-        f[: -len(".parquet")] for f in os.listdir(dbdir) if f.endswith(".parquet")
-    )
 
 
 class Connection:
@@ -120,7 +111,7 @@ class Connection:
         db = database or self.default_database
         dbdir = os.path.join(self.warehouse, db)
         rows = []
-        for name in _table_names(dbdir):
+        for name in table_names(dbdir):
             path = resolve_data_path(self.table_path(db, name))
             count = self.spark.read.parquet(path).count()
             rows.append({"name": name, "count": count})
@@ -182,7 +173,7 @@ class QueryEngine:
             root.sparkContext, root._jsparkSession.cloneSession()
         )
         dbdir = os.path.join(self.con.warehouse, self.database)
-        for name in _table_names(dbdir):
+        for name in table_names(dbdir):
             # bind a table only where the query names it as a whole
             # identifier: a superset of what it can resolve from the
             # database, subqueries and backquoted names included
@@ -347,8 +338,6 @@ def to_td(
     tv = time_value
     if time_col is None and "time" not in frame.columns and tv is None:
         tv = int(_dt.datetime.now(tz=_dt.timezone.utc).timestamp())
-    from pandas_td_spark.functions.td import to_epoch_seconds
-
     _write_table(
         sdf,
         con.table_path(db, table),

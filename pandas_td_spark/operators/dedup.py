@@ -36,7 +36,6 @@ __all__ = [
     "verify_jaccard_on_pairs",
     "lsh_candidate_pairs",
     "jaccard_pairs",
-    "simhash64",
     "simhash_signatures",
     "simhash_pairs",
     "substring_run_pairs",
@@ -571,60 +570,6 @@ def jaccard_pairs_auto(
 #: signatures, blocks, and Hamming distances are oracle-reproducible.
 #: 4 blocks of 15 bits keep the Manku ham<=3 banding guarantee.
 SIMHASH_BITS = 60
-
-
-def simhash64(text_col: str | Column = "text") -> Column:
-    """SimHash of the whitespace token bag (row-local fold form;
-    :func:`simhash_signatures` is the partial-agg form big corpora use).
-
-    Per token: md5-hex prefix → 60 bits (the seeded-md5 oracle
-    discipline); per bit: +1 if set else -1, summed over tokens via
-    ``F.aggregate`` (fold) into a 60-slot int array; final hash sets
-    bit i when slot i > 0. Entirely JVM-side expression work. (Kept
-    name for API stability; width is :data:`SIMHASH_BITS`.)
-    """
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    words = F.split(c, " ")
-    # hash each token ONCE up front: referencing the md5+conv expression
-    # inside the per-bit transform would inline it 60x per token (HOF
-    # lambdas get no common-subexpression elimination — the q167 lesson);
-    # folding over the materialized hash array keeps it one digest/token
-    hashes = F.transform(
-        words,
-        lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast(
-            "bigint"
-        ),
-    )
-    bitsums = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), SIMHASH_BITS),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1)),
-                lambda i: F.when(
-                    F.call_function("shiftright", h, i)
-                    .bitwiseAND(F.lit(1)) == 1,
-                    F.lit(1),
-                ).otherwise(F.lit(-1)),
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-    packed = F.aggregate(
-        F.zip_with(
-            bitsums,
-            F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1)),
-            lambda s, i: F.when(
-                s > 0, F.call_function("shiftleft", F.lit(1).cast("bigint"), i)
-            ).otherwise(
-                F.lit(0).cast("bigint")
-            ),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc.bitwiseXOR(x),  # slots are disjoint bits: XOR == OR == +
-    )
-    return packed
 
 
 def simhash_signatures(

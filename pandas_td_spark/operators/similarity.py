@@ -456,8 +456,7 @@ def _train_ivf_quantizer(
     rng = np.random.default_rng(seed)
     centers = X[rng.choice(len(X), size=min(n_clusters, len(X)), replace=False)]
     for _ in range(n_iter):
-        d = (X * X).sum(1)[:, None] - 2.0 * (X @ centers.T)
-        a = d.argmin(1)
+        a = _nearest_cell(X, centers)
         for c in range(len(centers)):
             m = a == c
             if m.any():

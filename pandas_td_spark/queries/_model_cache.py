@@ -1,4 +1,4 @@
-"""The one store for model frames memoized per (session, view dir).
+"""The one store for model frames memoized per session.
 
 Several query families reuse a derived table per registered corpus —
 dedup pair sets, SimHash signatures, the LSH index (queries/llm.py),
@@ -6,19 +6,21 @@ DSIR weights, BPE merges (queries/curation.py) and the co-purchase
 graph's order-part, edge, oriented and adjacency frames
 (queries/advanced.py). Each helper wraps its build in ``memo``:
 
-* ``memo(spark, kind, build)`` keys a GROUP by ``(spark, view dir)`` —
-  the dir ``sources.io.register_views`` last bound for that session —
-  and returns the group's ``kind`` entry, calling ``build()`` once on a
-  miss. Groups are dropped LEAST-RECENTLY-USED (a hit refreshes its
-  group) past ``_MAX_GROUPS``. A capacity drop DROPS references only:
+* ``memo(spark, kind, build)`` keys a GROUP by the session alone and
+  returns the group's ``kind`` entry, calling ``build()`` once on a
+  miss. A session's group always belongs to the views it has bound
+  now: ``sources.io.register_views`` evicts it whenever it rebinds
+  them (another dir, or any change to the files of the bound one).
+  Groups are dropped LEAST-RECENTLY-USED (a hit refreshes its group)
+  past ``_MAX_GROUPS``. A capacity drop DROPS references only:
   callers may still hold lazy plans over a dropped checkpoint (a
   query's unexecuted frame over the edges, say), so its blocks stay
   alive until Python GC (releasing here would fail those deferred
   actions with unrecoverable truncated lineage);
-* ``evict(spark, view_dir)`` is EXPLICIT invalidation
-  (``register_views`` on a dir switch or ``force=True``): the data is
-  wrong anyway, so it releases every frame of the group eagerly via
-  ``release_checkpoint``. Bare ``evict()`` releases every group;
+* ``evict(spark)`` is EXPLICIT invalidation (``register_views`` on a
+  rebind): the data is wrong anyway, so it releases every frame of
+  the session's group eagerly via ``release_checkpoint``. Bare
+  ``evict()`` releases every group;
 * ``release_checkpoint`` frees a local checkpoint's blocks through the
   analyzed plan's ``LogicalRDD`` — ``DataFrame.unpersist()`` only clears
   CacheManager entries and does nothing for checkpoints. A stopped or
@@ -29,11 +31,11 @@ from __future__ import annotations
 
 __all__ = ["release_checkpoint", "memo", "evict"]
 
-#: Live (session, view dir) groups kept before the least-recently-used
-#: one is dropped.
+#: Live session groups kept before the least-recently-used one is
+#: dropped.
 _MAX_GROUPS = 8
 
-# (spark, view dir) -> {kind: frame}; dict order is the LRU order
+# spark -> {kind: frame}; dict order is the LRU order
 _GROUPS: dict = {}
 
 
@@ -78,27 +80,23 @@ release_checkpoint._warned = False
 
 
 def memo(spark, kind: str, build):
-    """Return the ``kind`` frame of ``spark``'s current view dir, calling
-    ``build()`` once per group on a miss. ``build`` may itself call
-    ``memo`` for another kind of the same group."""
-    from pandas_td_spark.sources.io import _CURRENT_VIEWS
-
-    key = (spark, _CURRENT_VIEWS.get(spark))
-    group = _GROUPS.pop(key, None)
+    """Return ``spark``'s ``kind`` frame, calling ``build()`` once per
+    group on a miss. ``build`` may itself call ``memo`` for another kind
+    of the same group."""
+    group = _GROUPS.pop(spark, None)
     if group is None:
         group = {}
         while len(_GROUPS) >= _MAX_GROUPS:
             _GROUPS.pop(next(iter(_GROUPS)))  # reference only, see above
-    _GROUPS[key] = group
+    _GROUPS[spark] = group
     if kind not in group:
         group[kind] = build()
     return group[kind]
 
 
-def evict(spark=None, view_dir=None) -> None:
-    """Release-and-drop the ``(spark, view_dir)`` group, or every group
-    when called bare."""
-    keys = list(_GROUPS) if spark is None else [(spark, view_dir)]
-    for key in keys:
+def evict(spark=None) -> None:
+    """Release-and-drop ``spark``'s group, or every group when called
+    bare."""
+    for key in list(_GROUPS) if spark is None else [spark]:
         for df in _GROUPS.pop(key, {}).values():
             release_checkpoint(df)

@@ -2515,9 +2515,10 @@ def _bpe_merges_cached(spark: SparkSession) -> list:
     """q265-trained merge rows, MEMOIZED per (session, registered
     fixture dir) — q265 and q270 share one training run per fixture
     (the merge table is model state, ≤8 driver-side rows). Like every
-    memo it is evicted by register_views on a dir switch or
-    ``force=True``, so a regenerated fixture dir under the same path
-    cannot serve a stale merge table to q265/q270 (ADVICE r9)."""
+    memo it is evicted when register_views rebinds the views (a dir
+    switch or changed files), so a regenerated fixture dir under the
+    same path cannot serve a stale merge table to q265/q270 (ADVICE
+    r9)."""
     from pandas_td_spark.operators.bpe import bpe_train, words_with_counts
 
     def build():

@@ -428,14 +428,16 @@ _IMPL_CHANGED_SINCE_LAST_CHECK: dict[str, int] = {
     # values and plan identical, oracle re-checked at sf0.001/sf0.01:
     "q75_td_scheduled_time": 17,
     # ivf_topk scores in one mapInArrow numpy pass (no persist, joins or
-    # probe window); ids, ranks and cosine bits identical at
+    # probe window), and its quantizer training assigns cells through
+    # _nearest_cell; ids, ranks and cosine bits identical at
     # sf0.001/sf0.01 (rows-only query, check_query re-run at both):
     "q66_embedding_ivf_topk": 17,
     # the per-corpus model memos (pair set, SimHash signatures, LSH
     # index, DSIR weights, BPE merges, co-purchase graph frames) are one
-    # _model_cache.memo store instead of six dicts and four evictors;
-    # builds, values and plans identical, oracles re-checked at
-    # sf0.001/sf0.01:
+    # _model_cache.memo store instead of six dicts and four evictors,
+    # and its groups are keyed by session alone (register_views evicts
+    # on a changed content stamp); builds, values and plans identical,
+    # oracles re-checked at sf0.001/sf0.01:
     "q54_simhash_pairs": 17,
     "q56_embedding_lsh_topk": 17,
     "q65_near_dup_clusters": 17,

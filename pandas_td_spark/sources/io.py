@@ -23,8 +23,11 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
+import shutil
+import time as _time
+import uuid as _uuid
 import weakref
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,11 +36,12 @@ from pandas_td_spark.functions.td import (
     TimeLike,
     is_timestamp_dtype,
     td_time_range,
+    to_epoch_seconds,
 )
 from pandas_td_spark.queries import _model_cache
 
 __all__ = [
-    "TABLES",
+    "table_names",
     "table_path",
     "read_table",
     "read_file",
@@ -54,20 +58,6 @@ __all__ = [
     "read_snapshot",
 ]
 
-#: Fixture tables (TESTDATA.md); register_views exposes all of them.
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 _IF_EXISTS_TO_MODE = {
     "fail": "errorifexists",
     "replace": "overwrite",
@@ -77,6 +67,15 @@ _IF_EXISTS_TO_MODE = {
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def table_names(dbdir: str) -> list[str]:
+    """Sorted names of the ``<name>.parquet`` tables in a database dir."""
+    if not os.path.isdir(dbdir):
+        return []
+    return sorted(
+        f[: -len(".parquet")] for f in os.listdir(dbdir) if f.endswith(".parquet")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -101,13 +100,8 @@ _MANIFEST = "_MANIFEST"
 def resolve_data_path(path: str) -> str:
     """The directory actually holding committed data: the manifest's
     version dir for manifest-managed tables, ``path`` itself otherwise."""
-    m = os.path.join(path, _MANIFEST)
-    if os.path.isfile(m):
-        with open(m) as fh:
-            version = fh.read().strip()
-        if version:
-            return os.path.join(path, version)
-    return path
+    version = _committed_version(path)
+    return path if version is None else os.path.join(path, version)
 
 
 def table_versions(path: str) -> list[str]:
@@ -172,8 +166,6 @@ def _committed_version(path: str) -> str | None:
 
 def _commit_manifest(path: str, version: str) -> None:
     """Atomically point _MANIFEST at ``version`` (write-temp + rename)."""
-    import uuid as _uuid
-
     tmp = os.path.join(path, f".manifest.{_uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as fh:
         fh.write(version + "\n")
@@ -182,16 +174,11 @@ def _commit_manifest(path: str, version: str) -> None:
     os.replace(tmp, os.path.join(path, _MANIFEST))
 
 
-def _atomic_replace(
-    df: DataFrame, path: str, write_fn, keep_versions: int = 1
-) -> None:
+def _atomic_replace(path: str, write_fn, keep_versions: int = 1) -> None:
     """Write a new snapshot under ``path`` and commit it atomically.
     ``write_fn(target_dir)`` performs the actual (errorifexists) write.
     Old snapshots beyond ``keep_versions`` are pruned AFTER the commit —
     in-flight readers of the immediately-previous snapshot keep working."""
-    import time as _time
-    import uuid as _uuid
-
     os.makedirs(path, exist_ok=True)
     version = f"v-{_time.time_ns():020d}-{_uuid.uuid4().hex[:8]}"
     write_fn(os.path.join(path, version))
@@ -212,8 +199,6 @@ def _atomic_replace(
         reverse=True,
     )
     survivors = {version, *older[: max(keep_versions, 0)]}
-    import shutil
-
     for entry in os.listdir(path):
         full = os.path.join(path, entry)
         if entry == _MANIFEST or entry in survivors:
@@ -224,24 +209,29 @@ def _atomic_replace(
             os.unlink(full)
 
 
+def _data_files(path: str) -> Iterator[str]:
+    """The data files of a parquet file or directory, in a fixed order
+    (sorted, top-down), skipping the ``.``/``_`` entries Spark skips."""
+    if not os.path.isdir(path):
+        yield path
+        return
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if d[0] not in "._")
+        for f in sorted(f for f in files if f[0] not in "._"):
+            yield os.path.join(dirpath, f)
+
+
 def _ns_timestamp_columns(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS). Spark 4.x cannot read
     those as timestamps (PARQUET_TYPE_ILLEGAL); with
     ``spark.sql.legacy.parquet.nanosAsLong=true`` they surface as BIGINT
-    nanos. A table directory is judged by its first data file (skipping
-    the ``.``/``_`` entries Spark skips). Footer inspection is driver-side
-    and O(1 footer), not O(data)."""
+    nanos. A table directory is judged by its first data file. Footer
+    inspection is driver-side and O(1 footer), not O(data)."""
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        for dirpath, dirs, files in os.walk(path):
-            dirs[:] = sorted(d for d in dirs if d[0] not in "._")
-            data = sorted(f for f in files if f[0] not in "._")
-            if data:
-                path = os.path.join(dirpath, data[0])
-                break
-        else:
-            return []  # empty table
+    path = next(_data_files(path), None)
+    if path is None:
+        return []  # empty table
     return [
         field.name
         for field in pq.read_schema(path)
@@ -280,8 +270,6 @@ def read_table(
     df = raw
     if time_range is not None:
         start, end = time_range
-        from pandas_td_spark.functions.td import to_epoch_seconds
-
         s, e = to_epoch_seconds(start), to_epoch_seconds(end)
         t = F.col(time_col)
         if time_col in ns_cols:
@@ -364,7 +352,6 @@ def write_table(
 
     if if_exists == "replace":
         _atomic_replace(
-            df,
             path,
             lambda target: _write(target, "errorifexists"),
             keep_versions=keep_versions,
@@ -514,7 +501,6 @@ def merge_upsert(
     # new version dir — safe: the write targets a fresh directory and the
     # manifest flips only after success
     _atomic_replace(
-        merged,
         path,
         lambda t: merged.write.mode("errorifexists").parquet(t),
         keep_versions=keep_versions,
@@ -584,7 +570,7 @@ def compact_table(
             writer = writer.partitionBy(*sorted(part_cols))
         writer.parquet(target)
 
-    _atomic_replace(df, path, _write, keep_versions=keep_versions)
+    _atomic_replace(path, _write, keep_versions=keep_versions)
     out_dir = resolve_data_path(path)
     n_after = sum(
         1
@@ -653,8 +639,6 @@ def read_time_partitioned(
     cost O(scanned window), not O(table)."""
     df = spark.read.parquet(path)
     if time_range is not None:
-        from pandas_td_spark.functions.td import to_epoch_seconds
-
         s, e = (to_epoch_seconds(v) for v in time_range)
         cond = F.lit(True)
         if s is not None:
@@ -697,35 +681,53 @@ def write_bucketed_table(
 # weak keys: a dict keyed by id(spark) can alias a NEW session that reuses
 # a garbage-collected session's id (falsely skipping registration) and
 # leaks an entry per session (round-1 advisor finding)
-_CURRENT_VIEWS: "weakref.WeakKeyDictionary[SparkSession, str]" = (
+_CURRENT_VIEWS: "weakref.WeakKeyDictionary[SparkSession, tuple]" = (
     weakref.WeakKeyDictionary()
 )
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> None:
-    """S6-adjacent: expose every fixture table as a temp view so the SQL
-    surface (``spark.sql``/oracle parity) sees the same names DuckDB does.
+def _views_stamp(sf_dir: str) -> tuple:
+    """What the views of ``sf_dir`` would read: per table, its committed
+    data path and the ``(relative path, size, mtime_ns)`` of every data
+    file under it. Stat-only (plus one manifest read per managed table),
+    so it costs microseconds where a rebind costs a schema-inference job
+    per table."""
+    stamp = []
+    for name in table_names(sf_dir):
+        path = resolve_data_path(table_path(sf_dir, name))
+        files = []
+        for f in _data_files(path):
+            st = os.stat(f)
+            files.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+        stamp.append((name, path, tuple(files)))
+    return tuple(stamp)
 
-    Skipped when this session's views already point at ``sf_dir``: every
-    registered query calls this, and re-creating 10 views (schema reads +
-    catalog round-trips) per query was measurable wall-clock in the bench
-    loop. Switching ``sf_dir`` re-registers (view names are shared);
-    ``force=True`` refreshes after external changes to the directory.
+
+def register_views(spark: SparkSession, sf_dir: str) -> None:
+    """S6-adjacent: expose every ``<name>.parquet`` table of ``sf_dir`` as
+    a temp view so the SQL surface (``spark.sql``/oracle parity) sees the
+    same names DuckDB does.
+
+    Callers bind before every query they run, so it is a no-op while
+    the directory's content stamp (:func:`_views_stamp`) equals the one this
+    session last bound. Any difference — another dir, a table rewritten,
+    appended to, added or removed — rebinds the views, drops the views of
+    tables that are gone, and evicts the session's memoized model frames
+    (``queries/_model_cache``), which were built from the old files.
     """
-    target = os.path.abspath(sf_dir)
-    if not force and _CURRENT_VIEWS.get(spark) == target:
+    stamp = _views_stamp(os.path.abspath(sf_dir))
+    old = _CURRENT_VIEWS.get(spark)
+    if old == stamp:
         return
-    # a forced refresh (or dir switch) must also release the model frames
-    # memoized for the session's current view dir — the graph edge memo
-    # would otherwise serve checkpointed edges built from the OLD files.
-    # memo only builds for the current dir, so no other dir has a group.
-    _model_cache.evict(spark, _CURRENT_VIEWS.get(spark))
-    for name in TABLES:
-        if os.path.exists(table_path(sf_dir, name)):
-            read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _CURRENT_VIEWS[spark] = target
+    _model_cache.evict(spark)
+    names = [name for name, _, _ in stamp]
+    for name, _, _ in old or ():
+        if name not in names:
+            spark.catalog.dropTempView(name)
+    for name in names:
+        view = "`" + name.replace("`", "``") + "`"
+        read_table(spark, sf_dir, name).createOrReplaceTempView(view)
+    _CURRENT_VIEWS[spark] = stamp
 
 
 class TolerantRead(tuple):

@@ -10,13 +10,12 @@ pattern in queries/relational.py.
 from __future__ import annotations
 
 import math
-import os
 
 import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from pandas_td_spark.sources.io import TABLES, table_path
+from pandas_td_spark.sources.io import table_names, table_path
 
 __all__ = ["duckdb_connection", "run_oracle", "compare_frames", "check_query"]
 
@@ -28,13 +27,12 @@ def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     # fill the disk under pytest
     con.execute("SET memory_limit='24GB'")
     con.execute("SET max_temp_directory_size='8GB'")
-    for name in TABLES:
-        path = table_path(sf_dir, name)
-        if os.path.exists(path):
-            con.sql(
-                f"CREATE OR REPLACE VIEW {name} AS "
-                f"SELECT * FROM read_parquet('{path}')"
-            )
+    for name in table_names(sf_dir):
+        view = '"' + name.replace('"', '""') + '"'
+        con.sql(
+            f"CREATE OR REPLACE VIEW {view} AS "
+            f"SELECT * FROM read_parquet('{table_path(sf_dir, name)}')"
+        )
     return con
 
 

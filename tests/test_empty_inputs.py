@@ -16,7 +16,7 @@ import tempfile
 import pytest
 
 from pandas_td_spark.queries.registry import spark_queries
-from pandas_td_spark.sources.io import TABLES, register_views, table_path
+from pandas_td_spark.sources.io import register_views, table_names, table_path
 
 SRC = "/root/testdata/sf0.001"
 
@@ -24,17 +24,15 @@ SRC = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def empty_dir(spark):
     d = tempfile.mkdtemp(prefix="sf_empty_")
-    for t in TABLES:
-        p = table_path(SRC, t)
-        if os.path.exists(p):
-            spark.read.parquet(p).limit(0).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(d, f"{t}.parquet"))
+    for t in table_names(SRC):
+        spark.read.parquet(table_path(SRC, t)).limit(0).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(d, f"{t}.parquet"))
     return d
 
 
 def test_every_query_survives_empty_tables(spark, empty_dir):
-    register_views(spark, empty_dir, force=True)
+    register_views(spark, empty_dir)
     failures = {}
     for name, fn in sorted(spark_queries().items()):
         try:
@@ -54,11 +52,8 @@ def null_dir(spark):
     from pyspark.sql import functions as F
 
     d = tempfile.mkdtemp(prefix="sf_nulls_")
-    for t in TABLES:
-        p = table_path(SRC, t)
-        if not os.path.exists(p):
-            continue
-        df = spark.read.parquet(p)
+    for t in table_names(SRC):
+        df = spark.read.parquet(table_path(SRC, t))
         if t == "documents":
             df = df.withColumn(
                 "text",
@@ -94,7 +89,7 @@ def test_every_query_survives_null_payloads(spark, null_dir):
     in codec UDFs): NULL vectors/payloads are excluded per the SQL
     convention, everything else flows through. This sweep keeps the
     class closed."""
-    register_views(spark, null_dir, force=True)
+    register_views(spark, null_dir)
     failures = {}
     for name, fn in sorted(spark_queries().items()):
         try:

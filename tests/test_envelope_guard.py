@@ -22,12 +22,6 @@ import pytest
 from tests.conftest import SF_SMALL
 
 
-def _restore_views(spark):
-    from pandas_td_spark.sources.io import register_views
-
-    register_views(spark, SF_SMALL, force=True)
-
-
 def test_q183_in_envelope_unchanged(spark):
     """The guard is value-transparent on in-envelope data."""
     from pandas_td_spark.queries.coverage import q183_grouped_ols
@@ -46,27 +40,25 @@ def test_q183_envelope_guard_fires(spark):
     ARITHMETIC_OVERFLOW (also loud — fine); under ansi=false (the silent
     wrap ADVICE r11 worried about) the assert_true envelope guard raises.
     Either way: an error, never wrong coefficients."""
+    from pyspark.sql import SparkSession
+
     from pandas_td_spark.queries.coverage import q183_grouped_ols
 
-    try:
-        spark.createDataFrame(
-            [("A", 1.0e9, 1.0)],
-            "l_returnflag string, l_quantity double, l_extendedprice double",
-        ).createOrReplaceTempView("lineitem")
-        with pytest.raises(Exception) as exc:
-            q183_grouped_ols(spark, SF_SMALL).collect()
-        msg = str(exc.value)
-        assert "envelope" in msg or "ARITHMETIC_OVERFLOW" in msg
-        # and the non-ansi wrap path is covered by the guard directly:
-        prev = spark.conf.get("spark.sql.ansi.enabled", "true")
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-        try:
-            with pytest.raises(Exception, match="envelope"):
-                q183_grouped_ols(spark, SF_SMALL).collect()
-        finally:
-            spark.conf.set("spark.sql.ansi.enabled", prev)
-    finally:
-        _restore_views(spark)
+    # the override lives in a throwaway clone of the shared session (as
+    # QueryEngine.execute scopes a call), so no other test sees it
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    clone.createDataFrame(
+        [("A", 1.0e9, 1.0)],
+        "l_returnflag string, l_quantity double, l_extendedprice double",
+    ).createOrReplaceTempView("lineitem")
+    with pytest.raises(Exception) as exc:
+        q183_grouped_ols(clone, SF_SMALL).collect()
+    msg = str(exc.value)
+    assert "envelope" in msg or "ARITHMETIC_OVERFLOW" in msg
+    # and the non-ansi wrap path is covered by the guard directly:
+    clone.conf.set("spark.sql.ansi.enabled", "false")
+    with pytest.raises(Exception, match="envelope"):
+        q183_grouped_ols(clone, SF_SMALL).collect()
 
 
 def test_release_checkpoint_warns_on_live_context_drift(spark):

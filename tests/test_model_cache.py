@@ -87,9 +87,9 @@ def test_evict_one_and_all_release():
     memo(a, "x", lambda: _FakeFrame(log, "a.x"))
     memo(a, "y", lambda: _FakeFrame(log, "a.y"))
     memo(b, "x", lambda: _FakeFrame(log, "b.x"))
-    evict(a, None)
+    evict(a)
     assert log == ["a.x", "a.y"]
-    evict(_Session(), "/missing")  # no-op
+    evict(_Session())  # no-op
     evict()
     assert log == ["a.x", "a.y", "b.x"]
     builds = []
@@ -103,13 +103,15 @@ def test_release_tolerates_non_frames():
     release_checkpoint(object())
     s = _Session()
     rows = memo(s, "bpe_merges", lambda: [("rank", "l", "r")])
-    evict(s, None)
+    evict(s)
     assert rows == [("rank", "l", "r")]
 
 
 def test_memo_builds_once_per_kind_and_view_dir():
-    from pandas_td_spark.sources.io import _CURRENT_VIEWS
-
+    """A group is the session's: it serves every kind built for the
+    views bound now, and the eviction a rebind of the views makes
+    (register_views on another dir or on changed files) starts it
+    over."""
     builds = []
     s = _Session()
 
@@ -125,6 +127,8 @@ def test_memo_builds_once_per_kind_and_view_dir():
     assert memo(s, "base", base) == "base"
     assert memo(s, "derived", derived) == "base+derived"
     assert builds == ["derived", "base"]
-    _CURRENT_VIEWS[s] = "/other/dir"  # what register_views records
-    assert memo(s, "base", base) == "base"
+    assert memo(_Session(), "base", base) == "base"  # its own group
     assert builds == ["derived", "base", "base"]
+    evict(s)  # what register_views does when it rebinds s's views
+    assert memo(s, "base", base) == "base"
+    assert builds == ["derived", "base", "base", "base"]

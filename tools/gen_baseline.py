@@ -42,16 +42,16 @@ RATIO_FLOOR_S = 0.3
 def make_duckdb(sf_dir: str):
     import duckdb
 
-    from pandas_td_spark.sources.io import TABLES
+    from pandas_td_spark.sources.io import table_names
 
     c = duckdb.connect()
     c.execute("SET memory_limit='24GB'")
     # an interrupted spill-heavy query (q166 at sf0.1 spilled 80 GB)
     # must not fill the disk before the watchdog fires
     c.execute("SET max_temp_directory_size='8GB'")
-    for t in TABLES:
+    for t in table_names(sf_dir):
         c.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
+            f"CREATE OR REPLACE VIEW \"{t}\" AS "
             f"SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
     return c
