@@ -83,16 +83,18 @@ def morton_interleave_sql(
 
 
 def _bucket_rank(col: str, boundaries: list[float]) -> Column:
-    """0-based near-uniform bucket rank via precomputed quantile cuts."""
-    n = len(boundaries) + 1
+    """0-based near-uniform bucket rank via precomputed quantile cuts.
+
+    ``boundaries`` is sorted and may repeat a value (ties in the data);
+    the rank counts the boundaries <= the value, so it is the value's
+    quantile position and spans ``[0, len(boundaries)]``."""
     arr = F.array(*[F.lit(float(b)) for b in boundaries])
     # width_bucket over explicit cut points: count boundaries <= value
-    rank = F.aggregate(
+    return F.aggregate(
         arr,
         F.lit(0),
         lambda acc, b: acc + F.when(F.col(col).cast("double") >= b, 1).otherwise(0),
     )
-    return F.least(rank, F.lit(n - 1))
 
 
 def with_zorder_key(
@@ -116,9 +118,12 @@ def with_zorder_key(
     all_cuts = df.stat.approxQuantile(list(cols), quantiles, 0.001)
     rank_cols = []
     for j, (c, cuts) in enumerate(zip(cols, all_cuts)):
-        # dedupe (heavy ties collapse cut points; rank range just shrinks)
+        # repeated cut points are kept on purpose: a rank is then a
+        # quantile position spanning [0, 2^bits), so each rank bit splits
+        # the rows evenly; deduping would shrink the range and push the
+        # top Morton split off the median
         rc = f"{out_col}_r{j}"
-        df = df.withColumn(rc, _bucket_rank(c, sorted(set(cuts))))
+        df = df.withColumn(rc, _bucket_rank(c, sorted(cuts)))
         rank_cols.append(rc)
     z = morton_interleave([F.col(rc) for rc in rank_cols], bits_per_col)
     return df.withColumn(out_col, z).drop(*rank_cols)

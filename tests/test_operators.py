@@ -936,6 +936,38 @@ def test_zorder_key_known_values(spark):
     assert got[(65535, 65535)] == (1 << 32) - 1
 
 
+def test_zorder_quantile_ranks_span_full_range(spark):
+    """Quantile ranks are positions in [0, 2^bits): the top rank bit of
+    each column splits its rows at the median. If the ranks stop short of
+    2^bits, the top Morton split moves off the median and range-written
+    files no longer line up with Morton cells."""
+    from pandas_td_spark.operators.zorder import with_zorder_key
+
+    n = 200_000
+    cols = ["x", "y"]
+    df = spark.range(n).selectExpr(
+        "pmod(hash(id), 10000) AS x", "pmod(hash(id * 7 + 3), 10000) AS y"
+    )
+    # 12 bits per column, 2 columns: bit i of column j is z bit 2*i + j,
+    # so the top rank bit (i = 11) is z bit 22 for x and 23 for y
+    shares = (
+        with_zorder_key(df, cols)
+        .select(
+            *[
+                F.avg(F.shiftright("__z", 22 + j).bitwiseAND(1)).alias(c)
+                for j, c in enumerate(cols)
+            ]
+        )
+        .first()
+    )
+    for c in cols:
+        tie_share = df.groupBy(c).count().agg(F.max("count")).first()[0] / n
+        # approxQuantile(relativeError=0.001) puts the median cut within
+        # 0.001 * n ranks of the true median; rows tied at the cut value
+        # can move the split by at most one value's share more
+        assert abs(shares[c] - 0.5) <= 0.001 + tie_share, (c, shares[c])
+
+
 def test_zorder_sql_matches_column_form(spark):
     from pandas_td_spark.operators.zorder import (
         morton_interleave,
