@@ -57,11 +57,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
+from pandas_td_spark.engine.store import memo
+
 __all__ = [
     "with_global_row_number",
-    "with_global_row_number_and_total",
     "with_global_ntile",
-    "global_ntile_agg",
     "with_global_prefix_agg",
     "SMALL_THRESHOLD",
 ]
@@ -75,14 +75,6 @@ SMALL_THRESHOLD = 100_000  # opt-in gate: below this, one sorted partition
 #: approxQuantile relative error for bucket boundaries — only bucket
 #: evenness depends on it (±0.1% of rows per boundary), never rank values
 _BOUNDARY_RELERR = 0.001
-
-#: memoized boundary lists keyed by (session, analyzed-plan semantic hash,
-#: key column, bucket count). SAFE to serve stale entries: boundary values
-#: affect only bucket EVENNESS — rank correctness comes from the monotone
-#: assignment + exact per-bucket counts, both recomputed per action. A
-#: repeated rank over the same frame (bench min-of-N, a production session
-#: ranking one table several ways) skips the boundary scan entirely.
-_BOUNDS_CACHE: dict = {}
 
 
 def _parse_first_key(c: Column | str) -> tuple[str, bool] | None:
@@ -166,33 +158,28 @@ def _boundary_buckets(
     name, desc = key
     try:
         dtype = df.schema[name].dataType
-    except Exception:
+    except KeyError:  # not a top-level field (PySparkKeyError included)
         return None
     if not isinstance(dtype, NumericType):
         return None
     probs = [i / n for i in range(1, n)]
-    try:
-        ck = (
-            id(df.sparkSession),
-            df._jdf.queryExecution().analyzed().semanticHash(),
-            name,
-            n,
-        )
-    except Exception:
-        ck = None
-    if ck is not None and ck in _BOUNDS_CACHE:
-        bounds = _BOUNDS_CACHE[ck]
-    else:
-        # one GK-sketch scan; the collected list is bounded by the
-        # partition count. (At extreme scale a .sample() feeding this
-        # scan is fine: boundary placement affects only bucket evenness.)
-        bounds = sorted(
+    # one GK-sketch scan; the collected list is bounded by the partition
+    # count. (At extreme scale a .sample() feeding this scan is fine:
+    # boundary placement affects only bucket evenness.) Memoized per
+    # (session, analyzed plan, key column, bucket count) in the store: a
+    # repeated rank over the same frame (bench min-of-N, a production
+    # session ranking one table several ways) skips the scan entirely.
+    # A stale entry could only unbalance buckets — rank correctness
+    # comes from the monotone assignment + exact per-bucket counts, both
+    # recomputed per action.
+    plan = df._jdf.queryExecution().analyzed().semanticHash()
+    bounds = memo(
+        df.sparkSession,
+        ("bounds", plan, name, n),
+        lambda: sorted(
             set(df.stat.approxQuantile(name, probs, _BOUNDARY_RELERR))
-        )
-        if ck is not None:
-            if len(_BOUNDS_CACHE) >= 64:
-                _BOUNDS_CACHE.clear()
-            _BOUNDS_CACHE[ck] = bounds
+        ),
+    )
     x = F.col(name)
     if not bounds:
         bucket = F.when(x.isNotNull(), F.lit(0))
@@ -216,10 +203,7 @@ def _offsets_frame(bucketed: DataFrame) -> DataFrame:
     """(__bkt, __off, __nt) — running-sum offsets AND the grand total
     over the per-bucket counts, so ntile/consumers never re-aggregate
     the source. ≤ buckets+2 rows: the single-partition windows are
-    bounded by cluster width, never by data. (global_ntile_agg builds
-    its own counts+offsets frame because its aggregation must fuse the
-    caller's partials into the same pass — the shapes are deliberately
-    separate, not shared.)"""
+    bounded by cluster width, never by data."""
     counts = bucketed.groupBy("__bkt").agg(F.count("*").alias("__cnt"))
     w = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
     w_all = Window.orderBy("__bkt").rowsBetween(
@@ -353,31 +337,6 @@ def with_global_row_number(
     if got is not None:
         return got[0].drop("__nt")
     return _rank_checkpointed(df, cols, out, n)[0]
-
-
-def with_global_row_number_and_total(
-    df: DataFrame,
-    order: Sequence[Column | str],
-    out: str = "rn",
-    num_partitions: int | None = None,
-    small_threshold: int = 0,
-    input_rows: int | None = None,
-) -> tuple[DataFrame, int]:
-    """``with_global_row_number`` plus the total row count as a Python
-    int (one count action on the bucketed path unless ``input_rows`` is
-    given — callers that only need the total inside the plan should
-    crossJoin a broadcast 1-row count aggregate instead and stay lazy,
-    as q205/q221 do)."""
-    cols = list(order)
-    gate = _window_gate(df, small_threshold, input_rows)
-    if gate is not None:
-        return _window_rank(df, cols, out), gate
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    got = _rank_bucketed(df, cols, out, n)
-    if got is None:
-        return _rank_checkpointed(df, cols, out, n)
-    total = df.count() if input_rows is None else input_rows
-    return got[0].drop("__nt"), total
 
 
 def _bin_from_rank(
@@ -590,128 +549,3 @@ def with_global_ntile(
         return _ntile_from_int_total(ranked, rn, out, total, buckets)
     ranked, _offsets = got
     return _bin_from_rank(ranked, rn, out, buckets).drop(rn, "__nt")
-
-
-#: global_ntile_agg aggregate kinds → (row-level fn, partial-combine fn).
-#: sum/min/max combine with themselves; count partials combine by SUM.
-_NTILE_AGGS = {
-    "count": (lambda c: F.count("*"), F.sum),
-    "sum": (F.sum, F.sum),
-    "min": (F.min, F.min),
-    "max": (F.max, F.max),
-}
-
-
-def global_ntile_agg(
-    df: DataFrame,
-    order: Sequence[Column | str],
-    buckets: int,
-    aggs: Sequence[tuple[str, str, Column | str | None]],
-    out: str = "bin",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Per-ntile-bin aggregates WITHOUT ranking every row — semantically
-    identical to ``with_global_ntile(df, order, buckets, out)
-    .groupBy(out).agg(...)`` (pinned in tests/test_ranking.py).
-
-    ``aggs`` is a list of ``(alias, kind, column)`` with kind in
-    ``{"count","sum","min","max"}`` (column ignored for count) — the
-    DECOMPOSABLE aggregates, so bucket-grain partials can re-combine to
-    bin grain. Derived quantities (avg, shares, casts) are one ``select``
-    away on the ≤ ``buckets``-row result.
-
-    Plan shape — fully lazy, the EXCHANGE bounded by the bucket count:
-
-    1. a bucket-grain pass computes the offsets counts AND the caller's
-       partial aggregates together (one map-side-combined aggregation to
-       ≤ n+2 rows); bin-of-first-rank / bin-of-last-rank per bucket come
-       from tiny single-partition windows over that frame. Buckets that
-       don't straddle an ntile cut re-combine to bin grain right there —
-       their rows never shuffle at all.
-    2. only rows in cut-STRADDLING buckets (≤ B-1 of n buckets,
-       ~(B-1)/n of rows — ≲1% at cluster-scale n) rejoin via a broadcast
-       of the straddling keys and take a window for exact intra-bucket
-       ranks, then union with the whole-bucket partials for the final
-       ≤ 2B-row combine.
-
-    WHEN TO USE: this is the bounded-exchange form — the rank path
-    shuffles the ENTIRE input to rank it, this shape shuffles ≤ n+2
-    aggregate rows plus the straddling fraction. At 100 TB that's the
-    difference between a full-table exchange and two column-pruned scans
-    with map-side aggregation. At LOCAL bench scale the rank path wins:
-    a same-session min-of-6 A/B on sf0.1 lineitem (600 k rows, r11)
-    measured rank 0.93 s vs this form 1.30 s vs a collect-driven 2-job
-    variant 1.76 s — the extra scan + AQE stages cost more than the one
-    600 k-row exchange saves, so q129/q188 keep the rank path and this
-    operator is the documented swap for shuffle-bound scales.
-    Determinism note: the bucket-grain aggregates are exact over
-    literal-boundary buckets, so duplicate execution of the cells
-    subtree (if the exchange is not reused) cannot disagree — the race
-    the lazy rank path guards against doesn't exist at aggregate grain.
-    Falls back to the rank path when literal boundaries can't be
-    derived."""
-    cols = list(order)
-    # default bucket count: at least 12x the bin count, so the straddle
-    # fraction stays ≲ (B-1)/(12B) ≈ 8% even on small local parallelism
-    # (the binary WHEN tree keeps a wide boundary list codegen-safe)
-    n = num_partitions or max(
-        df.sparkSession.sparkContext.defaultParallelism, 12 * int(buckets)
-    )
-
-    def row_aggs() -> list[Column]:
-        return [
-            _NTILE_AGGS[kind][0](c).alias(alias) for alias, kind, c in aggs
-        ]
-
-    combine = [
-        _NTILE_AGGS[kind][1](alias).alias(alias) for alias, kind, _ in aggs
-    ]
-    bucketed = _boundary_buckets(df, cols, n)
-    if bucketed is None:
-        return (
-            with_global_ntile(df, cols, buckets, out=out)
-            .groupBy(out)
-            .agg(*row_aggs())
-        )
-    b = int(buckets)
-    aliases = [a for a, _, _ in aggs]
-    # bucket-grain pass: offsets counts + caller partials together
-    cells = bucketed.groupBy("__bkt").agg(
-        F.count("*").alias("__cnt"), *row_aggs()
-    )
-    w = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("__bkt").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cells = cells.select(
-        "*",
-        F.coalesce(F.sum("__cnt").over(w), F.lit(0)).alias("__off"),
-        F.sum("__cnt").over(w_all).cast("bigint").alias("__nt"),
-    )
-    cells = _bin_from_rank(
-        cells.withColumn("__rk", F.col("__off") + 1), "__rk", "__bin_lo", b
-    )
-    cells = _bin_from_rank(
-        cells.withColumn("__rk", F.col("__off") + F.col("__cnt")),
-        "__rk",
-        "__bin_hi",
-        b,
-    ).drop("__rk")
-    whole = cells.where(F.col("__bin_lo") == F.col("__bin_hi")).select(
-        F.col("__bin_lo").alias(out), *aliases
-    )
-    # straddling buckets only: broadcast keys, window for exact ranks
-    keys = cells.where(F.col("__bin_lo") != F.col("__bin_hi")).select(
-        "__bkt", "__off", "__nt"
-    )
-    order_cols = [F.col(c) if isinstance(c, str) else c for c in cols]
-    wr = Window.partitionBy("__bkt").orderBy(*order_cols)
-    st = bucketed.join(F.broadcast(keys), "__bkt").withColumn(
-        "__rk", (F.col("__off") + F.row_number().over(wr)).cast("bigint")
-    )
-    st = (
-        _bin_from_rank(st, "__rk", out, b)
-        .groupBy(out)
-        .agg(*row_aggs())
-    )
-    return whole.unionByName(st).groupBy(out).agg(*combine)

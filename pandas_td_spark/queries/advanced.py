@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from pandas_td_spark.operators.asof import asof_join
 from pandas_td_spark.operators.multimodal import featurize_binary, with_media_meta
-from pandas_td_spark.queries._model_cache import memo
+from pandas_td_spark.engine.store import memo
 from pandas_td_spark.queries.registry import query
 
 

@@ -873,7 +873,7 @@ def q129_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast offsets), not as a one-partition window — the exact path
     stays viable at fact grain. (r11: the ``global_ntile_agg``
     bounded-exchange form lost the local A/B — see q188's docstring —
-    and remains the documented swap for shuffle-bound scales.)"""
+    and, with no caller left, was deleted.)"""
     from pandas_td_spark.operators.ranking import with_global_ntile
 
     o = spark.table("orders").select("o_totalprice", "o_orderkey")
@@ -2178,9 +2178,9 @@ def q188_woe_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     600 k-row exchange) measured 0.93 s vs 1.30 s for the
     ``global_ntile_agg`` bounded-exchange form and 1.76 s for a
     collect-driven 2-job variant — locally the extra scans/stages cost
-    more than the one exchange saves, so the rank path stays; at
-    shuffle-bound cluster scale ``global_ntile_agg`` is the documented
-    swap (its docstring carries the numbers). The marginals tail was
+    more than the one exchange saves, so the rank path stays (at
+    shuffle-bound cluster scale a bounded-exchange per-bin aggregate
+    would be the swap; the unused form was deleted). The marginals tail was
     the real win: the old broadcast-join form spent two extra jobs vs
     the whole-frame window over the 10-row bin frame (~-0.3 s).
 

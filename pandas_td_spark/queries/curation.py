@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pandas_td_spark.engine.session import spread
-from pandas_td_spark.queries._model_cache import memo
+from pandas_td_spark.engine.store import memo
 from pandas_td_spark.queries.registry import query
 
 

@@ -37,7 +37,7 @@ from pandas_td_spark.operators.similarity import (
     lsh_topk_exact,
     plane_matrix,
 )
-from pandas_td_spark.queries._model_cache import memo
+from pandas_td_spark.engine.store import memo
 from pandas_td_spark.queries.registry import query
 
 _DIM = 64
@@ -52,7 +52,7 @@ def _near_dup_pairs_cached(spark: SparkSession) -> DataFrame:
     by q80 hash-matching the all-pairs oracle), and rebuilding the
     inverted index for each cost ~2 s per query at sf0.1. In production
     this is the materialized candidate-pair table every dedup consumer
-    starts from (_model_cache.memo owns the key and the eviction). The
+    starts from (engine/store.memo owns the key and the eviction). The
     checkpointed frame is bounded by the matching-pair count, never the
     corpus."""
     from pandas_td_spark.operators.dedup import jaccard_pairs_auto

@@ -117,27 +117,17 @@ _IMPL_CHANGED_SINCE_LAST_CHECK: dict[str, int] = {
     # r12 oracle-conversion row below)
     "q142_twap": 5,  # decimal sums for twap/naive_avg (same lesson)
     # round 6:
-    "q205_quantile_normalization": 11,  # r6 lazy literal-boundary rank;
-    # r11 shared ranking.py refactor (_bin_from_rank extraction, binary
-    # WHEN-tree buckets — values identical, helper fingerprints moved)
-    "q129_equidepth_histogram": 11,  # r6 lazy rank/ntile; r11 KEPT the
-    # rank path after the A/B rejected global_ntile_agg (docstring)
+    # (q205_quantile_normalization's r11 entry — r6 lazy literal-
+    # boundary rank; r11 shared ranking.py refactor — and
+    # q129_equidepth_histogram's r11 entry — r11 KEPT the rank path
+    # after the A/B rejected global_ntile_agg — superseded by their r17
+    # rows below)
     # (q188_woe_binning's r11 entry — r6 lazy rank/ntile; r11 kept the
     # rank path + whole-frame-window marginals — superseded by its r13
     # closed-at-shape row below)
-    # r11 ranking.py refactor drift (values/plans identical for these —
-    # with_global_ntile now routes its ntile arithmetic through the
-    # extracted _bin_from_rank; _offsets_frame gained __cnt):
-    "q156_rfm_segments": 11,
-    "q140_key_skew": 11,
-    "q221_lift_curve": 11,
-    # r11 binary WHEN-tree bucket expression (same bucket values, flat
-    # CaseWhen replaced by a log-depth tree — fixes the >127-boundary
-    # codegen cliff) reaches these through prefix-agg/row-number:
-    "q202_abc_classification": 11,
-    "q245_skyline": 11,
-    "q252_compaction_plan": 11,
-    "q255_out_of_order_audit": 11,
+    # (q156/q140/q221 r11 ranking.py refactor-drift entries and the
+    # q202/q245/q252/q255 r11 binary WHEN-tree bucket entries superseded
+    # by their r17 rows below)
     # r11: operators/python_udfs.py is now importable WITHOUT a live
     # SparkContext (_geomean's return type is a DataType instance, not
     # a DDL string pyspark parses through the active context) — the
@@ -207,7 +197,7 @@ _IMPL_CHANGED_SINCE_LAST_CHECK: dict[str, int] = {
     "q64_embedding_near_dup": 7,
     "q55_embedding_topk": 7,
     # (q109_semdedup_pairs's r7 entry superseded by its r13
-    # oracle-conversion row below)
+    # oracle-conversion row, and that by its r17 row, below)
     # (q66_embedding_ivf_topk's r7 entry superseded by its r17 row below)
     "q116_embedding_pq_topk": 7,
     # (q118_kmeans_clusters's r7 entry superseded by its r12 row below)
@@ -312,8 +302,9 @@ _IMPL_CHANGED_SINCE_LAST_CHECK: dict[str, int] = {
     # the scoring join probes doc-vocab grain instead of token grain
     "q236_decontaminate_spans": 13,  # broadcast the sparse starts frame
     # into the rebuild join (corpus token arrays no longer shuffle)
-    "q188_woe_binning": 13,  # docstring-only: agg/packed-key variants
-    # re-A/B-rejected (2.37/1.82 vs 1.45-1.54 s); rank path is the floor
+    # (q188_woe_binning's r13 docstring-only entry — agg/packed-key
+    # variants re-A/B-rejected, rank path is the floor — superseded by
+    # its r17 row below)
     "q86_bm25": 13,  # docstring-only: floor audit (r12's 2.98 s was the
     # battery artifact; plan pushdown verified, 0.67 s clean)
     "q208_proration": 15,  # r13: docstring-only floor decomposition;
@@ -341,10 +332,9 @@ _IMPL_CHANGED_SINCE_LAST_CHECK: dict[str, int] = {
     # benchmark side was repartitioning + re-shingling all docs
     # (1.25 -> 0.79 s, below DuckDB's same-window 0.81 s)
     # round 13 rows-only -> FULL oracle conversion (VERDICT r12 #9):
-    "q109_semdedup_pairs": 13,  # seeded integer-geometry anchor cells
-    # (semdedup_pairs_anchored) replace the learned-kmeans cells; the
-    # anchor selection, exact-bigint Voronoi assignment, and dot_chain
-    # cosine all replay in the DuckDB oracle
+    # (q109_semdedup_pairs's r13 entry — seeded integer-geometry anchor
+    # cells replace the learned-kmeans cells, and the whole pipeline
+    # replays in the DuckDB oracle — superseded by its r17 row below)
     # round 15 perf pass (oracles unchanged, re-green at sf0.01):
     "q61_range_join": 15,  # bigint qty sum (l_quantity integral by the
     # TPC-H contract, verified) replaces the decimal(28,6) buffers:
@@ -437,7 +427,11 @@ _IMPL_CHANGED_SINCE_LAST_CHECK: dict[str, int] = {
     # _model_cache.memo store instead of six dicts and four evictors,
     # and its groups are keyed by session alone (register_views evicts
     # on a changed content stamp); builds, values and plans identical,
-    # oracles re-checked at sf0.001/sf0.01:
+    # oracles re-checked at sf0.001/sf0.01. That store has since moved
+    # to engine/store.py as one LRU dict keyed by (session, key) under
+    # one cap (the memo source in every fingerprint below moved again;
+    # builds, values and plans identical, oracles re-checked at
+    # sf0.001/sf0.01):
     "q54_simhash_pairs": 17,
     "q56_embedding_lsh_topk": 17,
     "q65_near_dup_clusters": 17,
@@ -454,6 +448,24 @@ _IMPL_CHANGED_SINCE_LAST_CHECK: dict[str, int] = {
     "q264_split_leakage": 17,
     "q265_bpe_train": 17,
     "q270_bpe_encode_stats": 17,
+    # the SemDeDup anchor rows and the literal rank boundaries are
+    # memoized in the same engine/store instead of two ad hoc dicts
+    # cleared wholesale at 16 and 64 entries, so register_views evicts
+    # them with the model frames when the files change (q109 no longer
+    # serves the cells of a rewritten file's old anchors); the dead
+    # global_ntile_agg left q129/q188's docstrings. Values and plans
+    # identical at the fixtures, oracles re-checked at sf0.001/sf0.01:
+    "q109_semdedup_pairs": 17,
+    "q129_equidepth_histogram": 17,
+    "q140_key_skew": 17,
+    "q156_rfm_segments": 17,
+    "q188_woe_binning": 17,
+    "q202_abc_classification": 17,
+    "q205_quantile_normalization": 17,
+    "q221_lift_curve": 17,
+    "q245_skyline": 17,
+    "q252_compaction_plan": 17,
+    "q255_out_of_order_audit": 17,
 }
 
 

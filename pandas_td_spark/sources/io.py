@@ -38,7 +38,7 @@ from pandas_td_spark.functions.td import (
     td_time_range,
     to_epoch_seconds,
 )
-from pandas_td_spark.queries import _model_cache
+from pandas_td_spark.engine import store
 
 __all__ = [
     "table_names",
@@ -713,13 +713,13 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     session last bound. Any difference — another dir, a table rewritten,
     appended to, added or removed — rebinds the views, drops the views of
     tables that are gone, and evicts the session's memoized model frames
-    (``queries/_model_cache``), which were built from the old files.
+    (``engine/store``), which were built from the old files.
     """
     stamp = _views_stamp(os.path.abspath(sf_dir))
     old = _CURRENT_VIEWS.get(spark)
     if old == stamp:
         return
-    _model_cache.evict(spark)
+    store.evict(spark)
     names = [name for name, _, _ in stamp]
     for name, _, _ in old or ():
         if name not in names:

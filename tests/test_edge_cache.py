@@ -1,13 +1,14 @@
-"""Lifecycle of the memoized model frames in queries/_model_cache.py
-(the co-purchase edge checkpoint q121/q164/q166/q197 share, the pair,
-signature, index, DSIR and BPE memos): eviction must actually free the
-localCheckpoint blocks, and a change to the bound files or a view-dir
-switch must invalidate the memo so a rewritten fixture can't serve
-stale frames — while leaving other sessions' memos alone. File changes
-are made on a writable copy of the sf0.001 fixture."""
+"""Lifecycle of the memoized state in engine/store.py (the co-purchase
+edge checkpoint q121/q164/q166/q197 share, the pair, signature, index,
+DSIR and BPE memos, the SemDeDup anchors): eviction must actually free
+the localCheckpoint blocks, and a change to the bound files or a
+view-dir switch must invalidate the memo so a rewritten fixture can't
+serve stale state — while leaving other sessions' memos alone. File
+changes are made on a writable copy of the sf0.001 fixture."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 
@@ -76,7 +77,7 @@ def test_force_register_invalidates_edge_cache(spark, sf_copy):
 
 
 def test_evict_edge_cache_unpersists(spark):
-    from pandas_td_spark.queries._model_cache import evict
+    from pandas_td_spark.engine.store import evict
     from pandas_td_spark.queries.advanced import _copurchase_edges
 
     register_views(spark, SF_SMALL)
@@ -164,7 +165,7 @@ def test_view_dir_switch_releases_old_dir_blocks(spark):
 
 
 def test_force_on_one_session_leaves_other_sessions_group(spark, sf_copy):
-    from pandas_td_spark.queries._model_cache import evict
+    from pandas_td_spark.engine.store import evict
     from pandas_td_spark.queries.advanced import _copurchase_edges
 
     other = spark.newSession()
@@ -189,7 +190,7 @@ def test_rewritten_table_rebuilds_stale_edges(spark, sf_copy):
     """Rewriting lineitem with its first half and re-registering the
     same dir must rebuild the edges from the new file (2726 edges at
     sf0.001), not serve the 8899 built from the old one."""
-    from pandas_td_spark.queries._model_cache import evict
+    from pandas_td_spark.engine.store import evict
     from pandas_td_spark.queries.advanced import _copurchase_edges
 
     register_views(spark, sf_copy)
@@ -209,6 +210,36 @@ def test_rewritten_table_rebuilds_stale_edges(spark, sf_copy):
     finally:
         evict(fresh)
     assert rebuilt.count() == n_fresh < n_before
+
+
+def test_rewritten_embeddings_rebuild_stale_anchors(spark, sf_copy):
+    """Rewriting embeddings without its 8 anchor rows (the smallest
+    md5(vec_id)) and re-registering the same dir must re-pick the
+    anchors from the new file: q109 then finds the 17 pairs a fresh
+    session finds, not the 14 the old anchors' cells give."""
+    from pandas_td_spark.engine.store import evict
+    from pandas_td_spark.queries.registry import spark_queries
+
+    q109 = spark_queries()["q109_semdedup_pairs"]
+    assert len(q109(spark, sf_copy).collect()) == 16
+    p = table_path(sf_copy, "embeddings")
+    emb = pq.read_table(p)
+    ids = emb.column("vec_id").to_pylist()
+    anchors = set(
+        sorted(ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))[:8]
+    )
+    keep = [i not in anchors for i in ids]
+    pq.write_table(emb.filter(keep), p)
+    register_views(spark, sf_copy)
+    assert spark.table("embeddings").count() == len(ids) - 8
+    got = sorted(q109(spark, sf_copy).collect())
+    fresh = spark.newSession()
+    try:
+        want = sorted(q109(fresh, sf_copy).collect())
+    finally:
+        evict(fresh)
+    assert len(want) == 17
+    assert got == want, "q109 served cells of the old file's anchors"
 
 
 def test_unchanged_dir_binds_nothing(spark, sf_copy, monkeypatch):

@@ -7,7 +7,7 @@
    every summed moment, evaluated in doubles so the check itself cannot
    wrap) on its 3-row tail.
 
-2. ``_model_cache.release_checkpoint`` walks private pyspark plan surface
+2. ``store.release_checkpoint`` walks private pyspark plan surface
    (queryExecution/analyzed/rdd). A failure on a LIVE context means that
    surface drifted and eager block release silently degraded to GC-timed
    release — it must warn once instead of swallowing.
@@ -64,7 +64,7 @@ def test_q183_envelope_guard_fires(spark):
 def test_release_checkpoint_warns_on_live_context_drift(spark):
     """A real DataFrame whose private plan walk breaks under a live
     SparkContext warns ONCE (RuntimeWarning), then stays quiet."""
-    from pandas_td_spark.queries import _model_cache as mc
+    from pandas_td_spark.engine import store
 
     class _Boom:
         def queryExecution(self):
@@ -72,29 +72,29 @@ def test_release_checkpoint_warns_on_live_context_drift(spark):
 
     df = spark.range(1)
     df._jdf = _Boom()
-    prev = mc.release_checkpoint._warned
-    mc.release_checkpoint._warned = False
+    prev = store.release_checkpoint._warned
+    store.release_checkpoint._warned = False
     try:
         with pytest.warns(RuntimeWarning, match="eager checkpoint-block"):
-            mc.release_checkpoint(df)
+            store.release_checkpoint(df)
         with warnings.catch_warnings():
             warnings.simplefilter("error")
-            mc.release_checkpoint(df)  # warn-once: second failure silent
+            store.release_checkpoint(df)  # warn-once: second failure silent
     finally:
-        mc.release_checkpoint._warned = prev
+        store.release_checkpoint._warned = prev
 
 
 def test_release_checkpoint_silent_for_non_frames():
     """Row lists / None (the BPE cache payloads) are expected no-ops —
     never a drift warning, live context or not."""
-    from pandas_td_spark.queries import _model_cache as mc
+    from pandas_td_spark.engine import store
 
-    prev = mc.release_checkpoint._warned
-    mc.release_checkpoint._warned = False
+    prev = store.release_checkpoint._warned
+    store.release_checkpoint._warned = False
     try:
         with warnings.catch_warnings():
             warnings.simplefilter("error")
-            mc.release_checkpoint([("rank", "l", "r")])
-            mc.release_checkpoint(None)
+            store.release_checkpoint([("rank", "l", "r")])
+            store.release_checkpoint(None)
     finally:
-        mc.release_checkpoint._warned = prev
+        store.release_checkpoint._warned = prev

@@ -18,7 +18,8 @@ _GUARDED = (
     "engine/*.py",
     "functions/*.py",
     "streaming/jobs.py",
-    "queries/_model_cache.py",
+    "operators/ranking.py",
+    "operators/similarity.py",
 )
 
 

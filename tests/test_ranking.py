@@ -12,7 +12,6 @@ from pandas_td_spark.operators.ranking import (
     SMALL_THRESHOLD,
     with_global_ntile,
     with_global_row_number,
-    with_global_row_number_and_total,
 )
 
 
@@ -89,16 +88,11 @@ def test_gated_window_path_matches_distributed(spark):
 
 def test_piggybacked_total_matches_count_both_paths(spark):
     df = _fixture(spark, n=5_000)
-    # distributed default: total comes from the offsets aggregate
-    ranked, total = with_global_row_number_and_total(df, ["k", "i"], out="rn")
-    assert total == 5_000
-    assert ranked.agg(F.max("rn")).first()[0] == 5_000
-    # opt-in window path: total echoes the caller-provided row count
-    _, total_w = with_global_row_number_and_total(
-        df, ["k", "i"], out="rn",
-        small_threshold=SMALL_THRESHOLD, input_rows=5_000,
-    )
-    assert total_w == 5_000
+    # distributed default and opt-in window path: the last rank is the
+    # row count
+    for kw in ({}, dict(small_threshold=SMALL_THRESHOLD, input_rows=5_000)):
+        ranked = with_global_row_number(df, ["k", "i"], out="rn", **kw)
+        assert ranked.agg(F.max("rn")).first()[0] == df.count() == 5_000
 
 
 def test_distributed_default_runs_no_count_gate(spark):
@@ -353,59 +347,32 @@ def test_prefix_sum_nan_null_and_tie_keys(spark):
     )
 
 
-def test_global_ntile_agg_matches_rank_path(spark):
-    """global_ntile_agg (only cut-straddling buckets windowed) must be
-    value-identical to with_global_ntile + groupBy across bin counts,
-    ties, NULL keys, and the total-under-buckets (q=0) case."""
+def test_global_ntile_matches_window_ntile_edge_cases(spark):
+    """with_global_ntile must equal Spark's window ntile row for row
+    across bin counts, ties, NULL keys, the total-under-buckets (q=0)
+    case and the non-numeric-first-key fallback."""
     import random
 
-    from pandas_td_spark.operators.ranking import (
-        global_ntile_agg,
-        with_global_ntile,
-    )
+    def check(df, order, b):
+        got = with_global_ntile(df, order, b, out="bin")
+        want = df.withColumn(
+            "bin", F.ntile(b).over(W.orderBy(*order)).cast("bigint")
+        )
+        assert sorted((r.k, r.bin) for r in got.collect()) == sorted(
+            (r.k, r.bin) for r in want.collect()
+        ), f"order={order} bins={b}"
 
     random.seed(7)
     rows = [(random.randint(0, 50), i, random.randint(0, 1)) for i in range(10_007)]
     rows += [(None, 10_000_000 + j, 1) for j in range(13)]  # NULL keys
     df = spark.createDataFrame(rows, "x int, k long, bad int").repartition(8)
-    spec = [
-        ("n", "count", None),
-        ("sb", "sum", "bad"),
-        ("mn", "min", "x"),
-        ("mx", "max", "k"),
-    ]
-    ref_aggs = [
-        F.count("*").alias("n"),
-        F.sum("bad").alias("sb"),
-        F.min("x").alias("mn"),
-        F.max("k").alias("mx"),
-    ]
     for b in (1, 3, 10, 32):
-        ref = (
-            with_global_ntile(df, ["x", "k"], b, out="bin")
-            .groupBy("bin")
-            .agg(*ref_aggs)
-        )
-        got = global_ntile_agg(df, ["x", "k"], b, spec, out="bin")
-        # same names/types (nullability may differ: combine-of-partials)
-        assert got.schema.simpleString() == ref.schema.simpleString(), (
-            f"bins={b}"
-        )
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, ref.collect())
-        ), f"bins={b}"
+        check(df, ["x", "k"], b)
     # q=0 (fewer rows than bins) and the non-numeric-first-key fallback
     tiny = spark.createDataFrame([(1, 1, 0), (2, 2, 1)], "x int, k long, bad int")
-    got = global_ntile_agg(tiny, ["x", "k"], 5, [("n", "count", None)], out="bin")
-    assert sorted((r.bin, r.n) for r in got.collect()) == [(1, 1), (2, 1)]
+    check(tiny, ["x", "k"], 5)
     s = spark.createDataFrame([(str(i % 7), i) for i in range(100)], "s string, k long")
-    ref = (
-        with_global_ntile(s, ["s", "k"], 4, out="bin")
-        .groupBy("bin")
-        .agg(F.count("*").alias("n"))
-    )
-    got = global_ntile_agg(s, ["s", "k"], 4, [("n", "count", None)], out="bin")
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
+    check(s, ["s", "k"], 4)
 
 
 def test_first_match_expr_matches_linear_reference(spark):

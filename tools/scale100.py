@@ -175,7 +175,7 @@ def _build_10x() -> None:
 
 def main() -> None:
     from pandas_td_spark.queries.registry import spark_queries
-    from pandas_td_spark.queries._model_cache import evict
+    from pandas_td_spark.engine.store import evict
     from pandas_td_spark.sources.io import register_views
 
     _build_verbatim()

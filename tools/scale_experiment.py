@@ -41,7 +41,7 @@ if not os.path.isdir(BIG):
                             dirs_exist_ok=True) if os.path.isdir(f"{BASE}/{t}.parquet") else shutil.copy(f"{BASE}/{t}.parquet", f"{BIG}/{t}.parquet")
 
 from pandas_td_spark.queries.registry import spark_queries
-from pandas_td_spark.queries._model_cache import evict
+from pandas_td_spark.engine.store import evict
 from pandas_td_spark.sources.io import register_views
 
 qs = spark_queries()
