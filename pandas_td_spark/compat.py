@@ -23,7 +23,9 @@ reference              here
 ``read_td_job``        :func:`read_td_job` — re-attach to a job id while
                        its :class:`ResultProxy` is alive
 ``to_td``              :func:`to_td` — ``if_exists`` ∈ fail/replace/append,
-                       ``time_col``/``time_index``/``index``/``chunksize``
+                       ``time_col``/``time_index``/``index``/``chunksize``;
+                       Arrow writes the frame on the driver (no Spark
+                       job), and an append lands whole with one rename
 ``ResultProxy``        :class:`ResultProxy` — ``description``, iteration,
                        ``to_dataframe``
 =====================  =====================================================
@@ -37,6 +39,13 @@ names and the ``distributed_join`` conf go into the clone only, and the
 clone dies with the call's :class:`ResultProxy`, which ``Connection._jobs``
 holds weakly. Every other name (CTEs, the shared session's temp views)
 resolves as the clone inherits it.
+
+The upload (``import_data`` of msgpack.gz chunks, SURVEY §3.3) becomes a
+local parquet write: :func:`to_td` hands its pandas frame to
+``sources.io.write_table``, whose pandas branch stores it through Arrow in
+the types a Spark write would give. ``chunksize`` sizes the row groups of
+an appended file (one file per call, renamed into place whole) and the
+files of a ``replace`` snapshot.
 """
 
 from __future__ import annotations
@@ -311,14 +320,21 @@ def to_td(
     Deviation from reference: when no time source is given the reference
     stamped wall-clock now; pass ``time_value`` to pin it (tests do), else
     now() is used (upload timestamping is legitimately wall-clock).
-    ``chunksize`` maps to output-file sizing, the Spark analogue of the
-    reference's 10 000-row msgpack.gz upload chunks.
+
+    The frame goes to :func:`~pandas_td_spark.sources.io.write_table` as
+    it is: Arrow writes it on the driver, with no Spark job, and the
+    stored types match what Spark would store for it. ``chunksize``
+    plays the part of the reference's 10 000-row msgpack.gz upload
+    chunks: an ``append`` (or a first ``fail`` write) is ONE file in row
+    groups of ``chunksize`` rows that lands with one rename, so a
+    concurrent reader sees the whole batch or none of it; a ``replace``
+    commits a snapshot of ``chunksize``-row files. ``chunksize <= 0``
+    means no split: one file, one row group.
     """
     m = re.fullmatch(r"([A-Za-z0-9_]+)\.([A-Za-z0-9_]+)", name)
     if not m:
         raise ValueError(f"table name must be 'database.table', got {name!r}")
     db, table = m.groups()
-    frame = frame.copy()
     if time_index is not None:
         # reference: use the DataFrame's datetime index (level `time_index`)
         # as the mandatory `time` column (td.py::to_td(time_index=...),
@@ -327,19 +343,17 @@ def to_td(
         ts = pd.to_datetime(level_vals)
         if ts.tz is None:
             ts = ts.tz_localize("UTC")
-        frame["time"] = (ts.asi8 // 1_000_000_000).astype("int64")
+        ns = ts.as_unit("ns").asi8  # a datetime64[us] index counts µs
+        frame = frame.assign(time=(ns // 1_000_000_000).astype("int64"))
     if index:
         frame = frame.reset_index(
             names=index_label if index_label is not None else None
         )
-    spark = con.spark
-    sdf = spark.createDataFrame(frame)
-    os.makedirs(os.path.join(con.warehouse, db), exist_ok=True)
     tv = time_value
     if time_col is None and "time" not in frame.columns and tv is None:
         tv = int(_dt.datetime.now(tz=_dt.timezone.utc).timestamp())
     _write_table(
-        sdf,
+        frame,
         con.table_path(db, table),
         if_exists=if_exists,
         time_col=time_col,

@@ -66,9 +66,13 @@ def events_stream(
 ) -> DataFrame:
     """T1: file-source stream of events parquet files in ``directory``.
 
-    (The sf fixtures store TIMESTAMP(NANOS) which the streaming parquet
-    reader surfaces as BIGINT under nanosAsLong — tests stage a µs-precision
-    copy; production tables would be written with µs timestamps.)
+    ``ts`` must be stored as a type Spark reads as TIMESTAMP: INT96 or
+    TIMESTAMP(MICROS/MILLIS). ``to_td`` uploads store it as the session's
+    ``spark.sql.parquet.outputTimestampType`` (INT96 by default), as a
+    Spark write does, and land each file with one rename under a name the
+    source picks up only once it is whole. The sf fixtures store
+    TIMESTAMP(NANOS), which the streaming parquet reader surfaces as
+    BIGINT under nanosAsLong, so tests stage a µs-precision copy.
     """
     reader = spark.readStream.schema(EVENTS_SCHEMA)
     if max_files_per_trigger:

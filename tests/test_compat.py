@@ -4,6 +4,7 @@ behavior), but against the real local engine."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pandas as pd
@@ -374,6 +375,22 @@ def test_time_index(con):
     assert out.time.tolist() == [1704067200, 1704153600, 1704240000]
 
 
+def test_time_index_of_any_datetime_unit(con):
+    """A datetime index stored in µs or s gives the same epoch seconds
+    as one stored in ns."""
+    import numpy as np
+
+    engine = td.create_engine("presto:testdb", con=con)
+    for unit in ("ns", "us", "s"):
+        idx = pd.DatetimeIndex(
+            np.array(["2024-01-01", "2024-01-02"], dtype=f"datetime64[{unit}]"))
+        frame = pd.DataFrame({"v": [1.0, 2.0]}, index=idx)
+        td.to_td(frame, "testdb.tu", con, if_exists="replace", time_index=0,
+                 index=False)
+        out = td.read_td("SELECT time FROM tu ORDER BY time", engine)
+        assert out.time.tolist() == [1704067200, 1704153600], unit
+
+
 def test_atomic_replace_crash_consistency(con, spark):
     """A replace that dies mid-write must leave the previous snapshot
     committed and readable (manifest swap happens only after a complete
@@ -728,3 +745,250 @@ def test_compact_table_preserves_partitions_and_sorts(spark, tmp_path):
     after = spark.read.parquet(out)
     assert after.count() == 5_000
     assert set(after.columns) >= {"id", "part"}
+
+
+# -- the pandas upload path: Arrow on the driver, no Spark job ---------------
+
+
+def _parity_frames():
+    """``(frame, to_td kwargs)`` per case; column ``k`` orders the rows."""
+    import numpy as np
+
+    k = [0, 1, 2]
+    return {
+        "numeric": (pd.DataFrame({
+            "k": k,
+            "i32": np.array([1, -2, 3], np.int32),
+            "i64": np.array([2**40, 0, -1], np.int64),
+            "f32": np.array([0.5, -1.25, 3.0], np.float32),
+            "f64": [0.1, float("nan"), -2.5],
+            "b": [True, False, True],
+        }), {"time_value": 7}),
+        "strings": (pd.DataFrame({"k": k, "s": ["a", None, "ccc"]}),
+                    {"time_value": 7}),
+        "nullable_int": (pd.DataFrame({
+            "k": k, "n": pd.array([1, None, 3], dtype="Int64"),
+        }), {"time_value": 7}),
+        "datetimes": (pd.DataFrame({
+            "k": k,
+            "naive": pd.to_datetime(
+                ["2024-01-01 00:00:00.123456", "1969-12-31 23:59:59.5", None],
+                format="ISO8601"),
+            "aware": pd.to_datetime(
+                ["2024-03-10 01:30:00", "2024-07-01 12:00:00", "2024-11-03 05:00:00"]
+            ).tz_localize("US/Eastern"),
+        }), {"time_value": 7}),
+        "float_array": (pd.DataFrame({
+            "k": k,
+            "emb": [np.array([0.5, 1.5], np.float32),
+                    np.array([-1.0, 2.0], np.float32), None],
+        }), {"time_value": 7}),
+        "time_col": (pd.DataFrame({
+            "k": k,
+            "ts": pd.to_datetime(
+                ["2024-01-01 00:00:01.9", "1969-12-31 23:59:59.5", None],
+                format="ISO8601"),
+        }), {"time_col": "ts"}),
+        "time_col_float": (pd.DataFrame({"k": k, "t": [1.7, -1.7, 5.0]}),
+                           {"time_col": "t"}),
+        "time_index": (pd.DataFrame(
+            {"k": k},
+            index=pd.DatetimeIndex(
+                pd.to_datetime(["2024-01-01", "2024-01-02 00:00:00.5", "1970-01-01"],
+                               format="ISO8601"),
+                name="ts"),
+        ), {"time_index": 0, "index": True}),
+        "time_in_frame": (pd.DataFrame({"k": k, "time": [30, 20, 10]}), {}),
+        "unsigned": (pd.DataFrame({
+            "k": k,
+            "u8": np.array([0, 7, 255], np.uint8),
+            "u32": np.array([0, 1, 2**32 - 1], np.uint32),
+        }), {"time_value": 7}),
+    }
+
+
+def _leaf_types(path):
+    """``(path, physical type, logical type)`` of every parquet leaf of
+    the first data file under ``path``."""
+    import pyarrow.parquet as pq
+
+    from pandas_td_spark.sources.io import _data_files, resolve_data_path
+
+    first = next(_data_files(resolve_data_path(path)))
+    return [
+        (c.path, c.physical_type, str(c.logical_type))
+        for c in pq.ParquetFile(first).schema
+    ]
+
+
+def _spark_to_td(con):
+    """``compat._write_table`` as the Spark upload path had it:
+    ``createDataFrame(frame)`` and the Spark DataFrame writer."""
+    from pandas_td_spark.sources.io import write_table
+
+    def write(frame, path, **kwargs):
+        write_table(con.spark.createDataFrame(frame), path, **kwargs)
+
+    return write
+
+
+@pytest.mark.parametrize("case", sorted(_parity_frames()))
+def test_to_td_stores_what_the_spark_writer_stored(con, monkeypatch, case):
+    """Spark schema, rows and parquet leaf types of a ``to_td`` upload
+    equal those of the Spark path it replaced, read back through
+    ``read_table``, ``read_td_table`` and ``read_td_query``."""
+    from pandas_td_spark import compat
+    from pandas_td_spark.sources.io import read_table
+
+    frame, kwargs = _parity_frames()[case]
+    kwargs = {"index": False, **kwargs}
+    td.to_td(frame, "arrowdb.t", con, **kwargs)
+    with monkeypatch.context() as m:
+        m.setattr(compat, "_write_table", _spark_to_td(con))
+        td.to_td(frame, "sparkdb.t", con, **kwargs)
+
+    got = {}
+    for db in ("arrowdb", "sparkdb"):
+        engine = td.create_engine(f"presto:{db}", con=con)
+        dbdir = f"{con.warehouse}/{db}"
+        got[db] = (
+            read_table(con.spark, dbdir, "t").schema,
+            td.read_td_table("t", engine, limit=None)
+            .sort_values("k", ignore_index=True),
+            td.read_td_query("SELECT * FROM t ORDER BY k", engine),
+            _leaf_types(con.table_path(db, "t")),
+        )
+    (a_schema, a_table, a_query, a_leaves) = got["arrowdb"]
+    (s_schema, s_table, s_query, s_leaves) = got["sparkdb"]
+    assert a_schema == s_schema
+    pd.testing.assert_frame_equal(a_table, s_table)
+    pd.testing.assert_frame_equal(a_query, s_query)
+    assert a_leaves == s_leaves
+    assert len(a_table) == len(frame)
+
+
+def test_to_td_empty_frame_raises_on_both_paths(con, monkeypatch):
+    from pandas_td_spark import compat
+
+    empty = pd.DataFrame({"x": pd.Series([], dtype="int64")})
+    with pytest.raises(ValueError):
+        td.to_td(empty, "arrowdb.e", con, index=False, time_value=0)
+    with monkeypatch.context() as m:
+        m.setattr(compat, "_write_table", _spark_to_td(con))
+        with pytest.raises(ValueError):
+            td.to_td(empty, "sparkdb.e", con, index=False, time_value=0)
+    assert not os.path.exists(con.table_path("arrowdb", "e"))
+
+
+def test_to_td_all_null_column_raises(con):
+    """A column of nothing but nulls has no type Arrow can store for
+    Spark (Spark's own writer stores a VOID column that only its schema
+    metadata types), so the upload raises and names it."""
+    frame = pd.DataFrame({"x": [1, 2], "nothing": [None, None]})
+    with pytest.raises(TypeError, match="nothing"):
+        td.to_td(frame, "arrowdb.n", con, index=False, time_value=0)
+    assert not os.path.exists(con.table_path("arrowdb", "n"))
+
+
+def test_appends_become_visible_as_whole_batches(con):
+    """A reader counting rows while batches are appended only ever sees
+    whole batches, and sees all of them once the appends are done."""
+    import threading
+
+    import numpy as np
+
+    n_batches, rows = 30, 400
+    engine = td.create_engine("presto:racedb", con=con)
+
+    def append(i):
+        batch = pd.DataFrame({"k": np.arange(i * rows, (i + 1) * rows)})
+        td.to_td(batch, "racedb.ev", con, if_exists="append", index=False,
+                 time_value=0, chunksize=rows)
+
+    def count():
+        return int(td.read_td_query("SELECT count(*) AS n FROM ev", engine).n[0])
+
+    append(0)
+    counts, errors, done = [], [], threading.Event()
+
+    def reader():
+        try:
+            while not done.is_set():
+                counts.append(count())
+            counts.append(count())
+        except BaseException as exc:
+            errors.append(exc)
+            raise
+
+    def writer():
+        try:
+            for i in range(1, n_batches):
+                append(i)
+        finally:
+            done.set()
+
+    threads = [threading.Thread(target=f) for f in (reader, writer)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads) and not errors
+    partial = [c for c in counts if c % rows]
+    assert not partial, f"partial batches seen: {partial}"
+    assert counts[-1] == n_batches * rows
+    assert counts == sorted(counts)
+
+
+@pytest.mark.parametrize("chunksize", [0, -1])
+def test_chunksize_up_to_zero_means_one_file_one_row_group(con, chunksize):
+    """``chunksize <= 0`` is "no split" (Spark's ``maxRecordsPerFile``
+    reading): a replace writes one file and an append adds one file,
+    each of one row group; a positive ``chunksize`` splits both."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from pandas_td_spark.sources.io import _data_files, resolve_data_path
+
+    frame = pd.DataFrame({"x": range(25)})
+    path = con.table_path("chunkdb", "t")
+
+    def row_groups():
+        return sorted(
+            pq.ParquetFile(f).num_row_groups
+            for f in _data_files(resolve_data_path(path))
+        )
+
+    for size, after_replace, after_append in (
+        (chunksize, [1], [1, 1]),
+        (10, [1, 1, 1], [1, 1, 1, 3]),
+    ):
+        td.to_td(frame, "chunkdb.t", con, if_exists="replace", index=False,
+                 time_value=0, chunksize=size)
+        assert row_groups() == after_replace
+        td.to_td(frame, "chunkdb.t", con, if_exists="append", index=False,
+                 time_value=0, chunksize=size)
+        assert row_groups() == after_append
+        engine = td.create_engine("presto:chunkdb", con=con)
+        assert td.read_td("SELECT count(*) AS n FROM t", engine).n[0] == 50
+    assert not [e for e in os.listdir(resolve_data_path(path)) if e.startswith(".")]
+
+
+def test_replace_of_a_spark_written_table_removes_its_side_files(spark, tmp_path):
+    """Migrating a plain Spark-written table to a manifest-managed one
+    deletes its loose data files together with their ``.crc`` side files,
+    and leaves other dot entries (an in-flight manifest temp) alone."""
+    import os
+
+    from pandas_td_spark.sources.io import _committed_version, write_table
+
+    path = str(tmp_path / "t.parquet")
+    write_table(spark.range(3), path, if_exists="fail", time_value=0)
+    assert {e for e in os.listdir(path) if e.endswith(".crc")}
+    inflight = ".manifest.0123.tmp"
+    open(os.path.join(path, inflight), "w").close()
+    write_table(spark.range(2), path, if_exists="replace", time_value=0)
+    assert sorted(os.listdir(path)) == sorted(
+        ["_MANIFEST", _committed_version(path), inflight]
+    )
+    assert spark.read.parquet(os.path.join(path, _committed_version(path))).count() == 2
