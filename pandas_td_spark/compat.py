@@ -317,6 +317,11 @@ def to_td(
     """S5 (``td.py::to_td`` + StreamingUploader): validate ``db.table``,
     normalize index/time, write parquet with if_exists semantics.
 
+    ``time_col`` names a column, or ``time_index`` an index level, that
+    becomes the epoch-seconds ``time`` column (one conversion for both:
+    datetimes cut toward zero, as Spark's ``unix_timestamp`` cuts them);
+    pass one or neither.
+
     Deviation from reference: when no time source is given the reference
     stamped wall-clock now; pass ``time_value`` to pin it (tests do), else
     now() is used (upload timestamping is legitimately wall-clock).
@@ -338,13 +343,12 @@ def to_td(
     if time_index is not None:
         # reference: use the DataFrame's datetime index (level `time_index`)
         # as the mandatory `time` column (td.py::to_td(time_index=...),
-        # UNVERIFIED)
-        level_vals = frame.index.get_level_values(time_index)
-        ts = pd.to_datetime(level_vals)
-        if ts.tz is None:
-            ts = ts.tz_localize("UTC")
-        ns = ts.as_unit("ns").asi8  # a datetime64[us] index counts µs
-        frame = frame.assign(time=(ns // 1_000_000_000).astype("int64"))
+        # UNVERIFIED); it converts as a `time_col` does
+        if time_col is not None:
+            raise ValueError("pass time_col= or time_index=, not both")
+        level = pd.to_datetime(frame.index.get_level_values(time_index))
+        frame = frame.assign(time=level)
+        time_col = "time"
     if index:
         frame = frame.reset_index(
             names=index_label if index_label is not None else None

@@ -358,13 +358,15 @@ _SQL_FUNCTIONS = [
     """,
     # td_time_format: takes a SPARK datetime pattern (the Python helper
     # accepts strftime and translates; SQL callers pass Spark patterns).
+    # Here and in td_time_parse / td_date_trunc, ``tz`` may be left out
+    # as TD allows: its DEFAULT 'UTC' is inlined like the body.
     """
-    CREATE OR REPLACE TEMPORARY FUNCTION td_time_format(t BIGINT, fmt STRING, tz STRING)
+    CREATE OR REPLACE TEMPORARY FUNCTION td_time_format(t BIGINT, fmt STRING, tz STRING DEFAULT 'UTC')
     RETURNS STRING
     RETURN date_format(from_utc_timestamp(timestamp_seconds(t), coalesce(tz, 'UTC')), fmt)
     """,
     """
-    CREATE OR REPLACE TEMPORARY FUNCTION td_time_parse(s STRING, tz STRING)
+    CREATE OR REPLACE TEMPORARY FUNCTION td_time_parse(s STRING, tz STRING DEFAULT 'UTC')
     RETURNS BIGINT
     RETURN unix_timestamp(to_utc_timestamp(coalesce(try_to_timestamp(s),
                                                     try_to_timestamp(s, 'yyyy-MM-dd'),
@@ -372,7 +374,7 @@ _SQL_FUNCTIONS = [
                                            coalesce(tz, 'UTC')))
     """,
     """
-    CREATE OR REPLACE TEMPORARY FUNCTION td_date_trunc(unit STRING, t BIGINT, tz STRING)
+    CREATE OR REPLACE TEMPORARY FUNCTION td_date_trunc(unit STRING, t BIGINT, tz STRING DEFAULT 'UTC')
     RETURNS BIGINT
     RETURN unix_timestamp(to_utc_timestamp(
         date_trunc(unit, from_utc_timestamp(timestamp_seconds(t), coalesce(tz, 'UTC'))),

@@ -391,6 +391,26 @@ def test_time_index_of_any_datetime_unit(con):
         assert out.time.tolist() == [1704067200, 1704153600], unit
 
 
+def test_time_index_and_time_col_store_the_same_time(con):
+    """An instant stored through ``time_index`` gets the ``time`` a
+    ``time_col`` gets, cut toward zero before 1970 too; naming both is
+    an error."""
+    instants = pd.to_datetime(
+        ["2024-01-01 00:00:01.9", "1969-12-31 23:59:59.5",
+         "1969-12-31 23:59:58.25", "1970-01-01"], format="ISO8601")
+    frame = pd.DataFrame({"k": [0, 1, 2, 3], "ts": instants})
+    td.to_td(frame, "testdb.by_col", con, time_col="ts", index=False)
+    td.to_td(frame.set_index("ts"), "testdb.by_index", con, time_index=0,
+             index=False)
+    engine = td.create_engine("presto:testdb", con=con)
+    got = [td.read_td(f"SELECT time FROM {t} ORDER BY k", engine).time.tolist()
+           for t in ("by_col", "by_index")]
+    assert got[0] == got[1] == [1704067201, 0, -1, 0]
+    with pytest.raises(ValueError, match="not both"):
+        td.to_td(frame.set_index("ts"), "testdb.both", con, time_index=0,
+                 time_col="k")
+
+
 def test_atomic_replace_crash_consistency(con, spark):
     """A replace that dies mid-write must leave the previous snapshot
     committed and readable (manifest swap happens only after a complete

@@ -1,27 +1,22 @@
 """Mechanical stale-change detection (VERDICT r7 #2).
 
-The hand-maintained ``_IMPL_CHANGED_SINCE_LAST_CHECK`` map failed in round
-7: the end-of-round snapshot rewrote q85/q92/q110/q236 after the closing
-bench/sweep and three of them were never added, so their standing driver
-greens certified code that no longer existed. These tests make that class
-of slip a test failure instead of a judge finding:
+A query with a driver row is stale when its current
+``source_fingerprint`` differs from the FINGERPRINTS.json record of the
+code that row certified, so an edit — to the query or to any helper it
+reaches — needs no hand-kept list to be re-certified. These tests pin:
 
-* ``test_no_silent_drift`` — every query whose latest driver row is green
-  and whose recorded (certified) fingerprint differs from the current one
-  MUST have a stale-map entry newer than the row.
-* ``test_fingerprint_covers_shared_helpers`` — pins that the fingerprint
-  includes transitively-referenced package helpers (the q92/q110 failure
-  mode was a SHARED-helper rewrite, not an edit to the query functions).
+* ``test_fingerprint_covers_shared_helpers`` — the fingerprint includes
+  transitively-referenced package helpers (the q92/q110 failure mode was
+  a SHARED-helper rewrite, not an edit to the query functions);
+* ``test_refresh_records_only_the_newest_artifact`` — the rule by which
+  ``tools/update_fingerprints.py`` records a sha.
 """
 
 from __future__ import annotations
 
 from pandas_td_spark.queries.registry import (
-    _IMPL_CHANGED_SINCE_LAST_CHECK,
-    _latest_driver_round,
     all_queries,
     certified_fingerprints,
-    missing_fingerprints,
     source_fingerprint,
 )
 
@@ -29,60 +24,36 @@ from pandas_td_spark.queries.registry import (
 def test_fingerprints_file_present_and_fresh():
     fps = certified_fingerprints()
     assert fps, "FINGERPRINTS.json missing/empty — run tools/update_fingerprints.py"
-    missing = missing_fingerprints()
-    assert not missing, (
-        f"certified queries without fingerprints: {sorted(missing)} — "
-        "run tools/update_fingerprints.py (round-start step 0)"
-    )
 
 
-def test_fresh_driver_artifact_does_not_fail_freshness():
-    """Regression for the r9/r10 artifact-lag failure (VERDICT r10 #1): a
-    freshly-dropped CORRECTNESS_r{N}.json certifying a query introduced in
-    round N must NOT trip the freshness check — the round-start fingerprint
-    refresh can only run AFTER the artifact exists. Simulated with
-    synthetic inputs so the test is independent of the working tree's
-    artifact state."""
-    fps = {"q_old": {"sha": "aaaa", "round": 9}}
-    # q_new FIRST certified by the brand-new r10 artifact: exempt.
-    latest = {"q_old": (10, "green"), "q_new": (10, "green")}
-    first = {"q_old": 3, "q_new": 10}
-    assert missing_fingerprints(fps, latest, {"q_old", "q_new"}, first) == set()
-    # a query certified at-or-before the file's vintage with no record is
-    # a genuine failure:
-    latest_stale = {"q_old": (10, "green"), "q_forgot": (9, "green")}
-    assert missing_fingerprints(
-        fps, latest_stale, {"q_old", "q_forgot"}, {"q_old": 3, "q_forgot": 2}
-    ) == {"q_forgot"}
-    # and so is an OLD query whose record was lost, even when a fresh
-    # whole-suite artifact re-certifies it at a round past the vintage
-    # (r11 review: the exemption keys on FIRST round, not latest):
-    latest_lost = {"q_old": (10, "green"), "q_lost": (10, "green")}
-    assert missing_fingerprints(
-        fps, latest_lost, {"q_old", "q_lost"}, {"q_old": 3, "q_lost": 4}
-    ) == {"q_lost"}
+def test_refresh_records_only_the_newest_artifact():
+    """A sha is recorded only for a query whose latest driver row comes
+    from the newest artifact and is newer than its record; every other
+    record stays as it is."""
+    from tools.update_fingerprints import refreshed
 
-
-def test_no_silent_drift():
-    fps = certified_fingerprints()
-    latest = _latest_driver_round()
-    offenders = []
-    for name, q in all_queries().items():
-        rec = fps.get(name)
-        row = latest.get(name)
-        if rec is None or row is None:
-            continue
-        cur = source_fingerprint(q.fn)
-        if cur == rec["sha"]:
-            continue
-        changed = _IMPL_CHANGED_SINCE_LAST_CHECK.get(name)
-        if changed is None or changed <= rec["round"]:
-            offenders.append(name)
-    assert not offenders, (
-        "queries changed since their certified fingerprint without a "
-        f"stale-map entry: {sorted(offenders)} — add them to "
-        "_IMPL_CHANGED_SINCE_LAST_CHECK with the current round"
-    )
+    prev = {
+        "q_old": {"sha": "a0", "round": 9},
+        "q_same": {"sha": "b0", "round": 16},
+        "q_gone": {"sha": "c0", "round": 3},
+        "q_behind": {"sha": "d0", "round": 12},
+    }
+    latest = {
+        "q_old": (16, "green"),
+        "q_same": (16, "green"),
+        "q_new": (16, "red"),
+        "q_behind": (14, "green"),
+    }
+    current = {n: n + "-now" for n in ("q_old", "q_same", "q_new", "q_behind", "q_none")}
+    out = refreshed(prev, latest, 16, current)
+    assert out == {
+        "q_old": {"sha": "q_old-now", "round": 16},
+        "q_same": {"sha": "b0", "round": 16},
+        "q_gone": {"sha": "c0", "round": 3},
+        "q_behind": {"sha": "d0", "round": 12},
+        "q_new": {"sha": "q_new-now", "round": 16},
+    }
+    assert prev["q_old"] == {"sha": "a0", "round": 9}, "prev must not be mutated"
 
 
 def test_fingerprint_covers_shared_helpers():
@@ -147,21 +118,3 @@ def test_all_modules_import_without_session():
 def test_fingerprint_deterministic():
     q = all_queries()["q01_pricing_summary"]
     assert source_fingerprint(q.fn) == source_fingerprint(q.fn)
-
-
-def test_first_driver_round_is_earliest_artifact():
-    """_first_driver_round (the fresh-artifact exemption's key) must
-    report the EARLIEST artifact mentioning each query, bounded above by
-    the latest round, and agree with a known round-1 row."""
-    from pandas_td_spark.queries.registry import (
-        _first_driver_round,
-        _latest_driver_round,
-    )
-
-    first = _first_driver_round()
-    latest = _latest_driver_round()
-    assert first, "no artifacts parsed"
-    assert set(latest) <= set(first)
-    assert all(first[n] <= latest[n][0] for n in latest)
-    # pinned against the committed round-1 artifact
-    assert first["q61_range_join"] == 1

@@ -6,13 +6,11 @@ round, so the ordering IS the certification plan. These tests pin:
 1. grouping — red > never-checked-oracle > stale > never-rows-only >
    standing greens, so the ~50-row budget lands on the highest-signal
    checks;
-2. stale entries can't rot — every ACTIVE-stale query (standing driver
-   row older than its last implementation change) must sit inside the
-   first-50 window, guaranteeing it is re-certified on the very next
-   driver run;
-3. auto-retire — once a driver row at/after ``round_changed`` exists the
-   entry stops influencing the order, so the hand-maintained map needs
-   no manual deletion and a forgotten entry is harmless.
+2. stale queries can't rot — every ACTIVE-stale query (its fingerprint
+   moved since the record of what its driver row certified) must sit
+   inside the first-50 window, guaranteeing it is re-certified on the
+   very next driver run;
+3. the stale predicate itself, on synthetic inputs.
 """
 
 from __future__ import annotations
@@ -25,6 +23,8 @@ DRIVER_BUDGET = 50  # rows per round, observed constant since r1
 def _groups():
     qs = R.all_queries()
     latest = R._latest_driver_round()
+    certified = R.certified_fingerprints()
+    current = R.current_fingerprints()
     out = {}
     for name, q in qs.items():
         rnd_st = latest.get(name)
@@ -33,7 +33,7 @@ def _groups():
             out[name] = 0
         elif rnd_st is None:
             out[name] = 1 if not rows_only else 3
-        elif R._is_stale(name, latest):
+        elif R._is_stale(name, latest, certified, current):
             out[name] = 2 if not rows_only else 4
         else:
             out[name] = 5
@@ -74,19 +74,19 @@ def test_active_stale_entries_fit_in_next_driver_window():
             )
 
 
-def test_stale_map_names_are_registered():
-    unknown = set(R._IMPL_CHANGED_SINCE_LAST_CHECK) - set(R.all_queries())
-    assert not unknown, f"stale map references unregistered queries: {unknown}"
-
-
-def test_stale_entry_auto_retires_on_fresh_row():
-    name = next(iter(R._IMPL_CHANGED_SINCE_LAST_CHECK))
-    changed = R._IMPL_CHANGED_SINCE_LAST_CHECK[name]
-    assert R._is_stale(name, {name: (changed - 1, "green")})
-    assert not R._is_stale(name, {name: (changed, "green")})
-    assert not R._is_stale(name, {name: (changed + 3, "green")})
+def test_stale_is_a_moved_or_missing_fingerprint():
+    latest = {"q_moved": (16, "green"), "q_same": (16, "green"),
+              "q_unrecorded": (12, "green")}
+    certified = {"q_moved": {"sha": "old", "round": 15},
+                 "q_same": {"sha": "now", "round": 9},
+                 "q_unchecked": {"sha": "now", "round": 4}}
+    current = {n: "now" for n in
+               ("q_moved", "q_same", "q_unrecorded", "q_unchecked")}
+    assert R._is_stale("q_moved", latest, certified, current)
+    assert not R._is_stale("q_same", latest, certified, current)
+    assert R._is_stale("q_unrecorded", latest, certified, current)
     # never-checked queries are group-1/3 by definition, not stale
-    assert not R._is_stale(name, {})
+    assert not R._is_stale("q_unchecked", latest, certified, current)
 
 
 def test_never_checked_oracle_queries_lead():
@@ -100,21 +100,3 @@ def test_never_checked_oracle_queries_lead():
         f"{len(over)} red/never-checked/stale queries sort outside the "
         f"{DRIVER_BUDGET}-row window: {over[:5]}"
     )
-
-
-def test_stale_map_has_no_duplicate_keys():
-    """A duplicate dict key silently drops the earlier entry — the exact
-    failure mode that would hide a stale round number."""
-    import ast
-    import inspect
-
-    import pandas_td_spark.queries.registry as reg
-
-    tree = ast.parse(inspect.getsource(reg))
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Dict):
-            keys = [
-                k.value for k in node.keys if isinstance(k, ast.Constant)
-            ]
-            dupes = {k for k in keys if keys.count(k) > 1}
-            assert not dupes, f"duplicate stale-map keys: {dupes}"

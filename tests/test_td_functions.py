@@ -135,6 +135,33 @@ def test_sql_time_range_matches_python(spark):
     assert a == b and len(a) == 4
 
 
+def test_tz_may_be_left_out_as_td_allows(spark, tmp_path):
+    """td_time_format(t, fmt), td_time_parse(s) and td_date_trunc(unit, t)
+    are their 'UTC' forms, also in the session clone a compat call runs
+    in."""
+    import pandas_td_spark as td
+
+    sql = (
+        "SELECT td_time_format(0, 'yyyy-MM-dd HH') AS f, "
+        "td_time_format(0, 'yyyy-MM-dd HH', 'UTC') AS f_utc, "
+        "td_time_parse('2024-01-02') AS p, "
+        "td_time_parse('2024-01-02', 'UTC') AS p_utc, "
+        "td_date_trunc('day', 90000) AS d, "
+        "td_date_trunc('day', 90000, 'UTC') AS d_utc, "
+        "td_date_trunc('day', 90000, 'Asia/Tokyo') AS d_tokyo"
+    )
+    engine = td.create_engine(
+        "presto:nodb", con=td.connect(warehouse=str(tmp_path), spark=spark)
+    )
+    rows = [spark.sql(sql).first().asDict(),
+            td.read_td_query(sql, engine).iloc[0].to_dict()]
+    for row in rows:
+        assert row["f"] == row["f_utc"] == "1970-01-01 00"
+        assert row["p"] == row["p_utc"] == 1704153600
+        assert row["d"] == row["d_utc"] == 86400
+        assert row["d_tokyo"] == 54000
+
+
 def test_metadata_surface(spark):
     from pandas_td_spark.engine.metadata import (
         job_group,

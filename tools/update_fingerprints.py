@@ -1,67 +1,100 @@
 #!/usr/bin/env python
-"""Refresh FINGERPRINTS.json — run at ROUND START, before editing queries.
+"""Record in FINGERPRINTS.json what the newest driver artifact certified.
 
-For every query whose latest driver row certifies the CURRENT code (a
-driver row exists and the query is not stale per the registry map), record
-``source_fingerprint(fn)`` plus the certifying round. Stale queries keep
-their previous record (or none) until a new driver row lands; the
-fingerprint test treats a recorded-sha mismatch without a stale-map entry
-as a failure, which is exactly the hole the round-7 post-bench rewrites
-slipped through.
+Usage: ``python tools/update_fingerprints.py`` from a checkout whose
+``pandas_td_spark/`` is the tree the driver tested, i.e. unchanged since
+the commit that added the newest ``CORRECTNESS_r*.json``.
 
-Invariant this relies on: at round start the working tree IS the tree the
-driver just tested (the driver runs against the end-of-round snapshot).
-Running this after editing query code would launder the edit into the
-"certified" record — don't.
+For each query whose latest driver row comes from that artifact and is
+newer than its record, the query's current ``source_fingerprint`` is
+recorded with the artifact's round. Every other record is kept as it is.
+A query whose fingerprint later moves away from its record is stale, and
+the driver order re-certifies it (``registry._is_stale``).
+
+The tool exits 1 without writing when ``pandas_td_spark/`` differs from
+the commit that added the newest artifact: recording the current code
+then would mark changes the driver never ran as certified.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pandas_td_spark.queries.registry import (  # noqa: E402
-    _IMPL_CHANGED_SINCE_LAST_CHECK,
-    _is_stale,
+    _driver_artifacts,
     _latest_driver_round,
-    all_queries,
     certified_fingerprints,
-    source_fingerprint,
+    current_fingerprints,
 )
 
 
-def main() -> int:
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(here, "FINGERPRINTS.json")
-    latest = _latest_driver_round()
-    prev = certified_fingerprints()
-    out: dict[str, dict] = {}
-    refreshed, kept, skipped = 0, 0, 0
-    for name, q in sorted(all_queries().items()):
+def refreshed(
+    prev: dict,
+    latest: dict[str, tuple[int, str]],
+    newest: int,
+    current: dict[str, str],
+) -> dict:
+    """``prev`` with a ``{"sha", "round": newest}`` record for each query
+    in ``current`` whose latest driver row is from round ``newest`` and
+    newer than its record in ``prev`` (or that has none)."""
+    out = dict(prev)
+    for name, sha in current.items():
         row = latest.get(name)
-        if row is None:
-            skipped += 1  # never driver-checked; nothing is certified
+        rec = prev.get(name)
+        if row is None or row[0] != newest:
             continue
-        if _is_stale(name, latest):
-            if name in prev:
-                out[name] = prev[name]  # keep the last certified record
-                kept += 1
-            else:
-                skipped += 1
+        if isinstance(rec, dict) and rec.get("round", 0) >= newest:
             continue
-        out[name] = {"sha": source_fingerprint(q.fn), "round": row[0]}
-        refreshed += 1
-    with open(path, "w") as f:
+        out[name] = {"sha": sha, "round": newest}
+    return out
+
+
+def _tree_is_tested(artifact: str) -> bool:
+    """True when ``pandas_td_spark/`` equals the commit that added
+    ``artifact`` (the tree the driver ran)."""
+    added = subprocess.run(
+        ["git", "log", "--diff-filter=A", "--format=%H", "-1", "--",
+         os.path.basename(artifact)],
+        cwd=ROOT, capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    if not added:
+        print(f"{os.path.basename(artifact)} is not committed", file=sys.stderr)
+        return False
+    diff = subprocess.run(
+        ["git", "diff", "--quiet", added, "--", "pandas_td_spark"], cwd=ROOT
+    )
+    if diff.returncode != 0:
+        print(
+            f"pandas_td_spark/ differs from {added[:12]}, which added "
+            f"{os.path.basename(artifact)}: refusing to record untested code",
+            file=sys.stderr,
+        )
+        return False
+    return True
+
+
+def main() -> int:
+    artifacts = _driver_artifacts()
+    if not artifacts:
+        print("no CORRECTNESS_r*.json artifact", file=sys.stderr)
+        return 1
+    newest, artifact = artifacts[-1]
+    if not _tree_is_tested(artifact):
+        return 1
+    prev = certified_fingerprints()
+    out = refreshed(prev, _latest_driver_round(), newest, current_fingerprints())
+    with open(os.path.join(ROOT, "FINGERPRINTS.json"), "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
         f.write("\n")
-    print(
-        f"FINGERPRINTS.json: {refreshed} refreshed, {kept} kept-stale, "
-        f"{skipped} uncertified (total recorded {len(out)}); "
-        f"stale map has {len(_IMPL_CHANGED_SINCE_LAST_CHECK)} entries"
-    )
+    moved = sum(out[n] != prev.get(n) for n in out)
+    print(f"FINGERPRINTS.json: {moved} recorded at round {newest}, "
+          f"{len(out) - moved} kept")
     return 0
 
 
