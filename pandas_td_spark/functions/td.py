@@ -347,14 +347,17 @@ def _scheduled_time_ddl(epoch: int | None) -> str:
 
 _SQL_FUNCTIONS = [
     # td_time_range: NULL endpoint = unbounded; endpoints are epoch seconds
-    # or timestamp strings (parsed as UTC).
+    # or timestamp strings, read as wall-clock time in ``tz`` (TD's
+    # optional fourth argument, 'UTC' when left out).
     """
-    CREATE OR REPLACE TEMPORARY FUNCTION td_time_range(t BIGINT, s STRING, e STRING)
+    CREATE OR REPLACE TEMPORARY FUNCTION td_time_range(t BIGINT, s STRING, e STRING, tz STRING DEFAULT 'UTC')
     RETURNS BOOLEAN
     RETURN (s IS NULL OR t >= coalesce(try_cast(s AS BIGINT),
-                                       unix_timestamp(try_to_timestamp(s))))
+                                       unix_timestamp(to_utc_timestamp(try_to_timestamp(s),
+                                                                       coalesce(tz, 'UTC')))))
        AND (e IS NULL OR t <  coalesce(try_cast(e AS BIGINT),
-                                       unix_timestamp(try_to_timestamp(e))))
+                                       unix_timestamp(to_utc_timestamp(try_to_timestamp(e),
+                                                                       coalesce(tz, 'UTC')))))
     """,
     # td_time_format: takes a SPARK datetime pattern (the Python helper
     # accepts strftime and translates; SQL callers pass Spark patterns).

@@ -176,46 +176,3 @@ def sample_frames(
             )
 
     return pruned.mapInPandas(_batches, schema=schema)
-
-
-def stub_resizer(payload: bytes, width: int, height: int) -> bytes:
-    """STUB image resize (no PIL in this container): deterministic
-    byte-resample to exactly ``width*height`` bytes — size-contract of a
-    real resize, content fake. A PIL/torchvision-backed callable with the
-    same ``(bytes, w, h) -> bytes`` signature drops in for production."""
-    target = width * height
-    if not payload:
-        return b"\x00" * target
-    reps = (target // len(payload)) + 1
-    return (payload * reps)[:target]
-
-
-def resize_binary(
-    df: DataFrame,
-    payload: str = "payload",
-    id_col: str = "doc_id",
-    width: int = 32,
-    height: int = 32,
-    resize_fn: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """1-to-1 binary transform stage (image resize shape): column-pruned
-    Arrow-batched ``mapInPandas``, BinaryType in/out so the result chains
-    into :func:`with_media_meta`/:func:`featurize_binary` unchanged."""
-    fn = resize_fn or stub_resizer
-    pruned = df.select(F.col(id_col), F.col(payload))
-    schema = f"{id_col} long, resized binary, resized_bytes long"
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = [fn(bytes(b), width, height) for b in pdf[payload]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "resized": out,
-                    "resized_bytes": pd.Series(
-                        [len(b) for b in out], dtype="int64"
-                    ),
-                }
-            )
-
-    return pruned.mapInPandas(_batches, schema=schema)

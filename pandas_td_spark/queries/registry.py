@@ -155,7 +155,9 @@ def _read(f) -> tuple[str, str, list] | None:
     if not mod or not mod.__name__.startswith("pandas_td_spark"):
         return None
     try:
-        src = inspect.getsource(f)
+        src = (
+            _class_source(f) if inspect.isclass(f) else inspect.getsource(f)
+        )
     except (OSError, TypeError):
         return None
     callees: list = []
@@ -213,6 +215,53 @@ def _read(f) -> tuple[str, str, list] | None:
             if callable(obj) and not isinstance(obj, type):
                 callees.append(obj)
     return key, src, callees
+
+
+def _class_source(cls) -> str:
+    """``inspect.getsource(cls)``, with the start line looked up in one
+    parse per file (:func:`_class_starts`) instead of the parse of the
+    whole module that ``inspect`` makes for every class."""
+    import inspect
+
+    file = inspect.getsourcefile(cls)
+    if not file:
+        raise OSError("source code not available")
+    lines, starts = _class_starts(file)
+    if cls.__qualname__ not in starts:
+        raise OSError("could not find class definition")
+    return "".join(inspect.getblock(lines[starts[cls.__qualname__]:]))
+
+
+@functools.cache
+def _class_starts(file: str) -> tuple[list[str], dict[str, int]]:
+    """The lines of ``file`` and the 0-based start line of each class in
+    it by qualname, under ``inspect._ClassFinder``'s rules: a function
+    scope adds ``<locals>``, a decorated class starts at its first
+    decorator, and the first class in source order wins a qualname."""
+    import ast
+    import linecache
+
+    lines = linecache.getlines(file)
+    starts: dict[str, int] = {}
+    stack: list[str] = []
+
+    class Finder(ast.NodeVisitor):
+        def visit_FunctionDef(self, node) -> None:
+            stack.extend((node.name, "<locals>"))
+            self.generic_visit(node)
+            del stack[-2:]
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_ClassDef(self, node) -> None:
+            stack.append(node.name)
+            first = node.decorator_list[0] if node.decorator_list else node
+            starts.setdefault(".".join(stack), first.lineno - 1)
+            self.generic_visit(node)
+            stack.pop()
+
+    Finder().visit(ast.parse("".join(lines)))
+    return lines, starts
 
 
 def _repo_path(name: str) -> str:

@@ -566,40 +566,6 @@ def read_file(
     return reader.options(**options).format(fmt).load(path)
 
 
-def read_binary_dir(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    max_bytes: int | None = None,
-    with_meta: bool = True,
-) -> DataFrame:
-    """S7c: raw-media ingest via Spark's ``binaryFile`` source — the entry
-    point of the multimodal pipeline (operators/multimodal.py). Yields
-    one row per file: (path, modificationTime, length, content BINARY),
-    plus the typed ``media_meta`` struct (size/digest/magic-byte format —
-    JVM expressions) when ``with_meta``.
-
-    Scale notes: ``pathGlobFilter`` prunes at LISTING time (never reads
-    skipped files); ``max_bytes`` maps to the source's
-    ``spark.sql.sources.binaryFile.maxLength`` contract by filtering on
-    the ``length`` column BEFORE content is materialized — the filter
-    pushes to the file index, so oversized payloads (>2 GB hard limit)
-    stay out-of-table as URI rows per the multimodal convention. One
-    task per file; explicit ``repartition`` after load when many small
-    files should be coalesced."""
-    reader = spark.read.format("binaryFile")
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
-    if max_bytes is not None:
-        df = df.where(F.col("length") <= F.lit(int(max_bytes)))
-    if with_meta:
-        from pandas_td_spark.operators.multimodal import media_meta
-
-        df = df.withColumn("media_meta", media_meta(F.col("content")))
-    return df
-
-
 def write_file(
     df: DataFrame,
     path: str,

@@ -1,4 +1,4 @@
-"""Structured Streaming over the events table (SURVEY.md §2.9 T1-T8).
+"""Structured Streaming over the events table (SURVEY.md §2.9).
 
 The reference had ingest-only streaming — ``pandas_td/td.py::
 StreamingUploader`` chunked msgpack.gz uploads with per-chunk unique ids
@@ -36,8 +36,6 @@ __all__ = [
     "events_stream",
     "docs_stream",
     "tumbling_counts",
-    "distinct_user_rollup",
-    "sliding_counts",
     "sessionized_counts",
     "dedup_stream",
     "lsh_band_index",
@@ -105,59 +103,6 @@ def tumbling_counts(
     )
 
 
-def distinct_user_rollup(
-    events: DataFrame,
-    window: str = "1 day",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """T2+A3 composed: per-window distinct users per event_type via the
-    mergeable HLL sketch aggregate — the STREAMING half of the
-    operators/rollup.py hypertable pattern. State per (window, key) is one
-    KB-scale sketch regardless of user cardinality (an exact
-    countDistinct would hold the full user set in state). The output
-    carries BOTH the read-off estimate and the raw sketch binary under
-    the rollup-table contract (``bucket_start``/``sketch``/``n_rows``),
-    so closed windows land directly in a table that
-    ``operators.rollup.merge_rollup`` re-aggregates to any coarser
-    granularity without touching raw events."""
-    sk = F.hll_sketch_agg("user_id")
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
-        .agg(
-            sk.alias("sketch"),
-            F.count("*").alias("n_rows"),
-        )
-        .select(
-            F.col("window.start").alias("bucket_start"),
-            "event_type",
-            F.hll_sketch_estimate("sketch").alias("n_distinct_users"),
-            "sketch",
-            "n_rows",
-        )
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """T3: sliding windows (each event lands in window/slide buckets)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
-            "event_type",
-            "n",
-        )
-    )
-
-
 def sessionized_counts(
     events: DataFrame,
     gap: str = "30 minutes",
@@ -219,190 +164,6 @@ def write_idempotent_parquet(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer
-
-
-def enriched_events(
-    events: DataFrame, users: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
-    """T9: stream-static enrichment — join the event stream against a
-    static dimension (re-broadcast per micro-batch by Spark, so a dim
-    refresh between batches is picked up automatically; no state store is
-    involved, unlike stream-stream joins). Left join keeps events whose
-    user is missing from the dim — the dropping variant would silently
-    lose data on late dim updates. Per-segment windowed revenue after the
-    join exercises the planner's ability to keep the broadcast below the
-    stateful aggregation.
-    """
-    dim = F.broadcast(users.select("user_id", "segment"))
-    return (
-        events.withWatermark("ts", watermark)
-        .join(dim, "user_id", "left")
-        .groupBy(
-            F.window("ts", "10 minutes"),
-            F.coalesce(F.col("segment"), F.lit("unknown")).alias("segment"),
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(28,6)"))
-            .cast("double")
-            .alias("revenue"),
-        )
-        .select(
-            F.col("window.start").alias("win_start"),
-            "segment",
-            "n",
-            "revenue",
-        )
-    )
-
-
-def purchases_with_recent_clicks(
-    purchases: DataFrame,
-    clicks: DataFrame,
-    lookback: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream interval join: each purchase matched to the same
-    user's clicks within ``lookback`` before it.
-
-    Both sides are watermarked so the state store can discard click state
-    older than watermark+lookback — the bounded-state formulation of the
-    streaming as-of/attribution join (state grows with rate × horizon, not
-    with total history). Works identically in batch mode (the time-bound
-    predicate is an ordinary non-equi conjunct on the user_id equi-join).
-    """
-    p = purchases.select(
-        F.col("event_id").alias("p_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-        F.col("value").alias("p_value"),
-    )
-    c = clicks.select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("value").alias("c_value"),
-    )
-    if purchases.isStreaming:
-        p = p.withWatermark("p_ts", watermark)
-        c = c.withWatermark("c_ts", watermark)
-    cond = (
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}"))
-    )
-    return p.join(c, cond).select(
-        "p_id", "p_user", "p_ts", "p_value", "c_ts", "c_value"
-    )
-
-
-def running_user_totals(events: DataFrame, timeout_sec: int = 0) -> DataFrame:
-    """T7: custom stateful operator via ``applyInPandasWithState`` —
-    per-user running (count, total value) across micro-batches. State is
-    one tuple per user, updated incrementally; the state store checkpoints
-    it — the pattern for operators session_window/dropDuplicates can't
-    express. Emits one row per user per batch with the cumulative totals.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def _update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update,
-        outputStructType="user_id long, n_events long, total_value double",
-        stateStructType="n long, total double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def make_running_totals_processor():
-    """Build the T7b ``StatefulProcessor`` (module-level factory so tests
-    can drive its init/handleInputRows logic directly against a stub state
-    handle — the processor contract is plain Python; only the worker's
-    protobuf channel to the JVM state server needs ``google.protobuf``)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n LONG, total DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (
-                self._totals.get() if self._totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return _RunningTotals()
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """T7 on the Spark 4.x ``transformWithStateInPandas`` API — the
-    successor to ``applyInPandasWithState`` (SPARK-49564): explicit typed
-    state handles (ValueState/ListState/MapState), per-state TTL, timers.
-    Same semantics as :func:`running_user_totals`, so tests can assert the
-    two APIs agree batch-for-batch; new code should prefer this API (the
-    old one is maintenance-only upstream).
-
-    Runtime requirement: the TWS Python worker speaks protobuf to the JVM
-    state server, so executing (not importing) this end-to-end needs
-    ``google.protobuf`` on the Python path — absent in this test
-    container, so the full-pipeline equivalence test auto-skips here;
-    the processor LOGIC is still executed by tests via
-    :func:`make_running_totals_processor` + a stub state handle, and the
-    ``applyInPandasWithState`` twin carries end-to-end T7 coverage."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=make_running_totals_processor(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def run_to_memory(
-    df: DataFrame, name: str, spark: SparkSession, output_mode: str = "complete"
-) -> DataFrame:
-    """Test helper: drain an availableNow stream into an in-memory table
-    and return it as a batch DataFrame. ``output_mode``: "complete" for
-    aggregations (append would hold back windows the watermark hasn't
-    finalized when the stream ends), "append" for row-level streams."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 class ProgressRecorder:
@@ -499,43 +260,6 @@ class ProgressRecorder:
             if time.monotonic() >= deadline:
                 return mine
             time.sleep(0.2)
-
-
-def ohlc_bars_stream(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming twin of q122_ohlc_bars: tumbling open/high/low/close
-    bars per event type. ``min_by``/``max_by`` over the (ts, event_id)
-    struct run inside the windowed hash aggregate, so per-(window, key)
-    state is four scalars + the winner structs — constant, watermark-
-    bounded; closed bars emit once and the sink appends them to the
-    same table the batch rollup produces."""
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
-        .agg(
-            F.min_by("value", key).alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", key).alias("close"),
-            F.count("*").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(28,6)"))
-                    .cast("double"), 6).alias("volume"),
-        )
-        .select(
-            F.col("window.start").alias("bar_start"),
-            "event_type",
-            "open",
-            "high",
-            "low",
-            "close",
-            "n_events",
-            "volume",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -662,36 +662,6 @@ def test_read_file_tolerant_failfast_mode(spark, tmp_path):
         good2.collect()
 
 
-def test_read_binary_dir_binaryfile_ingest(spark, tmp_path):
-    """S7c: binaryFile ingest — one row per file with BINARY content,
-    glob pruning at listing time, length-capped payloads, and the typed
-    media_meta struct (magic-byte format detection) attached."""
-    from pandas_td_spark.sources.io import read_binary_dir
-
-    png = bytes.fromhex("89504E470D0A1A0A") + b"fakepngbody"
-    jpg = bytes.fromhex("FFD8FFE0") + b"fakejpgbody" * 100
-    (tmp_path / "a.png").write_bytes(png)
-    (tmp_path / "b.jpg").write_bytes(jpg)
-    (tmp_path / "notes.txt").write_bytes(b"not media")
-
-    df = read_binary_dir(spark, str(tmp_path), glob="*.{png,jpg}")
-    rows = {r["path"].rsplit("/", 1)[-1]: r for r in df.collect()}
-    assert set(rows) == {"a.png", "b.jpg"}
-    assert bytes(rows["a.png"]["content"]) == png
-    assert rows["a.png"]["media_meta"]["format"] == "png"
-    assert rows["b.jpg"]["media_meta"]["format"] == "jpeg"
-    assert rows["b.jpg"]["media_meta"]["n_bytes"] == len(jpg)
-
-    # length cap keeps oversized payloads out-of-table (filter on the
-    # length column, before content materializes)
-    small = read_binary_dir(
-        spark, str(tmp_path), glob="*.{png,jpg}", max_bytes=100
-    )
-    assert [r["path"].rsplit("/", 1)[-1] for r in small.collect()] == [
-        "a.png"
-    ]
-
-
 def test_compact_table_small_files(spark, tmp_path):
     """S5e: compaction rewrites many small files into few, preserves the
     data bit-for-bit, keeps the previous snapshot readable (time travel

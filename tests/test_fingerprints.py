@@ -14,6 +14,8 @@ reaches — needs no hand-kept list to be re-certified. These tests pin:
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pandas_td_spark.queries.registry import (
     all_queries,
     certified_fingerprints,
@@ -113,6 +115,42 @@ def test_all_modules_import_without_session():
     assert proc.returncode == 0, (
         f"modules need a live session to import:\n{proc.stderr[-2000:]}"
     )
+
+
+@dataclass(frozen=True)
+class _Decorated:
+    """A decorated class: ``inspect`` starts its source at the decorator."""
+
+    x: int = 0
+
+
+def test_class_source_matches_inspect():
+    """The walk looks a class's start line up in one parse per file;
+    every class it reaches from the registered queries, a function-local
+    class and a decorated class must get exactly the source string
+    ``inspect.getsource`` returns."""
+    import inspect
+
+    from pandas_td_spark.queries import registry
+
+    registry.current_fingerprints()
+    reached = [
+        f
+        for f, node in registry._SCANNED.values()
+        if node is not None and inspect.isclass(f)
+    ]
+    assert reached, "the walk reached no class"
+
+    def outer():
+        class Nested:
+            y = 1
+
+        return Nested
+
+    for cls in [*reached, outer(), _Decorated]:
+        assert registry._class_source(cls) == inspect.getsource(cls), (
+            cls.__qualname__
+        )
 
 
 def test_fingerprint_deterministic():

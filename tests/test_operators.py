@@ -475,23 +475,6 @@ def test_frame_sampling_plumbing(spark):
     assert feats.select(F.size("feature")).distinct().first()[0] == 8
 
 
-def test_resize_binary_contract(spark):
-    from pandas_td_spark.operators.multimodal import resize_binary
-
-    register_views(spark, SF)
-    d = spark.table("documents").limit(20).select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-    r = resize_binary(d, width=8, height=4).toPandas()
-    assert (r.resized_bytes == 32).all()
-    assert (r.resized.map(len) == 32).all()
-    # deterministic across partitionings
-    r2 = resize_binary(d.repartition(5), width=8, height=4).toPandas()
-    assert r.sort_values("doc_id", ignore_index=True).equals(
-        r2.sort_values("doc_id", ignore_index=True)
-    )
-
-
 def test_range_lookup_contracts(spark):
     """Prefix-bucketed range lookup: exact hit/miss semantics, cardinality
     preservation, malformed-IP NULLs, and bucket-spanning ranges."""

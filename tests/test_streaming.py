@@ -10,12 +10,12 @@ import tempfile
 import uuid
 
 import pytest
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pandas_td_spark.streaming.jobs import (
     dedup_stream,
     events_stream,
-    run_to_memory,
     sessionized_counts,
     tumbling_counts,
     write_idempotent_parquet,
@@ -38,6 +38,24 @@ def staged(spark):
 
 def _name() -> str:
     return "t" + uuid.uuid4().hex[:8]
+
+
+def run_to_memory(
+    df: DataFrame, name: str, spark: SparkSession, output_mode: str = "complete"
+) -> DataFrame:
+    """Test helper: drain an availableNow stream into an in-memory table
+    and return it as a batch DataFrame. ``output_mode``: "complete" for
+    aggregations (append would hold back windows the watermark hasn't
+    finalized when the stream ends), "append" for row-level streams."""
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.table(name)
 
 
 def test_tumbling_counts_match_batch(spark, staged):
@@ -125,70 +143,6 @@ def test_idempotent_sink_overwrites_batch_partition(spark, staged):
     q2.awaitTermination()
     n2 = spark.read.parquet(out).count()
     assert n2 == n1
-
-
-def test_stateful_running_totals(spark, staged):
-    """T7: applyInPandasWithState accumulates across micro-batches; the
-    last update per user equals the batch-mode totals."""
-    from pandas_td_spark.streaming.jobs import running_user_totals
-
-    stream = events_stream(spark, staged, max_files_per_trigger=1)
-    name = _name()
-    q = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events"))
-        .toPandas()
-        .sort_values("user_id", ignore_index=True)
-    )
-    want = (
-        spark.read.parquet(staged)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n_events"))
-        .toPandas()
-        .sort_values("user_id", ignore_index=True)
-    )
-    assert got.equals(want)
-
-
-def test_stream_stream_interval_join_matches_batch(spark, staged):
-    """Stream-stream join (watermarked, bounded state) produces the same
-    matches as the identical batch join."""
-    from pandas_td_spark.streaming.jobs import purchases_with_recent_clicks
-
-    def split(df):
-        return (
-            df.where(F.col("event_type") == "purchase"),
-            df.where(F.col("event_type") == "click"),
-        )
-
-    sp, sc = split(events_stream(spark, staged))
-    name = _name()
-    q = (
-        purchases_with_recent_clicks(sp, sc, watermark="60 days")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table(name).toPandas()
-    bp, bc = split(spark.read.parquet(staged))
-    want = purchases_with_recent_clicks(bp, bc).toPandas()
-    key = ["p_id", "c_ts"]
-    got = got.sort_values(key, ignore_index=True)
-    want = want.sort_values(key, ignore_index=True)[got.columns]
-    assert len(got) > 0 and got.equals(want)
 
 
 def test_late_beyond_watermark_rows_are_dropped(spark):
@@ -326,58 +280,6 @@ def test_kill_restart_checkpoint_recovery_exactly_once(spark, staged):
     assert spark.read.parquet(out).count() == want
 
 
-def test_transform_with_state_matches_old_api_and_batch(spark, staged):
-    """T7 on the Spark 4.x transformWithStateInPandas API: final per-user
-    totals must equal both the batch aggregation and the
-    applyInPandasWithState implementation.
-
-    Requires ``google.protobuf``: the TWS Python worker talks to the JVM
-    state server over a protobuf channel (pyspark.sql.streaming.proto), so
-    execution — not import — dies without it. Skipped in containers that
-    ship pyspark without protobuf; ``running_user_totals`` (the
-    applyInPandasWithState twin, asserted equivalent here) covers T7 there.
-    """
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas worker requires protobuf",
-    )
-    from pandas_td_spark.streaming.jobs import running_user_totals_tws
-
-    stream = events_stream(spark, staged, max_files_per_trigger=1)
-    name = _name()
-    q = (
-        running_user_totals_tws(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("total_value").alias("total_value"),
-        )
-        .toPandas()
-        .sort_values("user_id", ignore_index=True)
-    )
-    want = (
-        spark.read.parquet(staged)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .toPandas()
-        .sort_values("user_id", ignore_index=True)
-    )
-    assert got.n_events.tolist() == want.n_events.tolist()
-    assert all(abs(a - b) < 1e-6 for a, b in zip(got.total_value, want.total_value))
-
-
 def test_progress_recorder_captures_batches_and_state(spark, staged):
     """M5 streaming twin: per-batch progress must account for every input
     row and expose state-operator metrics for a stateful query."""
@@ -413,191 +315,6 @@ def test_progress_recorder_captures_batches_and_state(spark, staged):
         for s in b["stateOperators"]
     )
     assert all("addBatch" in b["durationMs"] for b in mine)
-
-
-def test_stream_static_enrichment_matches_batch(spark, staged):
-    """T9: stream-static broadcast join + windowed agg equals the batch
-    plan; users absent from the dim land in segment 'unknown'."""
-    from pandas_td_spark.streaming.jobs import enriched_events
-
-    users = spark.range(0, 8).select(  # covers only part of user_id space
-        F.col("id").alias("user_id"),
-        F.concat(F.lit("seg_"), (F.col("id") % 3).cast("string")).alias(
-            "segment"
-        ),
-    )
-    name = _name()
-    q = (
-        enriched_events(events_stream(spark, staged), users)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table(name).toPandas()
-    want = enriched_events(spark.read.parquet(staged), users).toPandas()
-    key = ["win_start", "segment"]
-    got = got.sort_values(key, ignore_index=True)
-    want = want.sort_values(key, ignore_index=True)[got.columns]
-    assert len(got) > 0 and got.equals(want)
-    assert (got.segment == "unknown").any()  # left join kept unmatched users
-
-
-def test_tws_processor_logic_with_stub_state(spark):
-    """T7b logic WITHOUT the protobuf channel: drive the StatefulProcessor
-    contract (init → per-batch handleInputRows → close) against a stub
-    ValueState and assert the running totals match the batch aggregation
-    over the same event partitions — the exact state transitions the TWS
-    worker would execute, minus the wire protocol."""
-    import pandas as pd
-
-    from pandas_td_spark.sources.io import register_views
-    from pandas_td_spark.streaming.jobs import make_running_totals_processor
-
-    class StubValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-    class StubHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema, ttl_duration_ms=None):
-            return self.states.setdefault(name, StubValueState())
-
-    register_views(spark, "/root/testdata/sf0.001")
-    ev = (
-        spark.table("events")
-        .select("user_id", "value", "event_id")
-        .where(F.col("user_id") < 20)
-        .toPandas()
-    )
-    # three microbatches, arbitrary split
-    batches = [g for _, g in ev.groupby(ev.event_id % 3)]
-
-    proc = make_running_totals_processor()
-    handle = StubHandle()
-    proc.init(handle)
-    last = {}
-    for b in batches:
-        for uid, rows in b.groupby("user_id"):
-            # per-key state isolation: swap the key's state in
-            proc._totals = handle.states.setdefault(
-                ("totals", uid), StubValueState()
-            )
-            (out,) = list(proc.handleInputRows((uid,), iter([rows]), None))
-            last[uid] = (
-                int(out.n_events.iloc[0]),
-                float(out.total_value.iloc[0]),
-            )
-    proc.close()
-
-    want = {
-        int(r.user_id): (int(r.n), float(r.t))
-        for r in spark.table("events")
-        .where(F.col("user_id") < 20)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("t"))
-        .collect()
-    }
-    assert set(last) == set(want)
-    for uid in want:
-        assert last[uid][0] == want[uid][0]
-        assert abs(last[uid][1] - want[uid][1]) < 1e-6
-
-
-def test_distinct_user_rollup_matches_batch(spark, staged):
-    """Streaming HLL rollup estimates == the batch twin's, within 2% of
-    exact distinct counts, and the emitted sketch column composes with
-    operators.rollup.merge_rollup (the hypertable contract)."""
-    from pandas_td_spark.operators.rollup import merge_rollup
-    from pandas_td_spark.streaming.jobs import distinct_user_rollup
-
-    stream = events_stream(spark, staged, max_files_per_trigger=1)
-    stream_out = run_to_memory(
-        distinct_user_rollup(stream, window="1 day", watermark="60 days"),
-        _name(),
-        spark,
-    )
-    got = stream_out.drop("sketch").toPandas()
-    batch = spark.read.parquet(staged)
-    want = distinct_user_rollup(batch, window="1 day").drop("sketch").toPandas()
-    key = ["bucket_start", "event_type"]
-    got = got.sort_values(key, ignore_index=True)
-    want = want.sort_values(key, ignore_index=True)
-    assert got.equals(want[got.columns])
-
-    exact = (
-        batch.groupBy(F.window("ts", "1 day"), "event_type")
-        .agg(F.countDistinct("user_id").alias("exact"))
-        .select(
-            F.col("window.start").alias("bucket_start"), "event_type", "exact"
-        )
-        .toPandas()
-        .sort_values(key, ignore_index=True)
-    )
-    rel = (got.n_distinct_users - exact.exact).abs() / exact.exact
-    assert (rel <= 0.02).all()
-
-    # composition: the streamed daily sketch rows re-merge to all-time
-    # per-key estimates equal to sketching the raw table directly
-    merged = {
-        r.event_type: r.n_distinct_est
-        for r in merge_rollup(stream_out, keys=["event_type"]).collect()
-    }
-    direct = {
-        r.event_type: r.n
-        for r in batch.groupBy("event_type")
-        .agg(
-            F.expr("hll_sketch_estimate(hll_sketch_agg(user_id))").alias("n")
-        )
-        .collect()
-    }
-    assert merged == direct
-
-
-def test_streaming_ohlc_bars_match_batch(spark, staged):
-    from pandas_td_spark.streaming.jobs import ohlc_bars_stream
-
-    stream = events_stream(spark, staged, max_files_per_trigger=1)
-    got = run_to_memory(ohlc_bars_stream(stream), _name(), spark).toPandas()
-    batch = spark.read.parquet(staged)
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    want = (
-        batch.groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(
-            F.min_by("value", key).alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", key).alias("close"),
-            F.count("*").alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(28,6)")).cast("double"),
-                6,
-            ).alias("volume"),
-        )
-        .select(
-            F.col("window.start").alias("bar_start"),
-            "event_type",
-            "open", "high", "low", "close", "n_events", "volume",
-        )
-        .toPandas()
-    )
-    k = ["bar_start", "event_type"]
-    got = got.sort_values(k, ignore_index=True)
-    want = want.sort_values(k, ignore_index=True)
-    assert got.equals(want[got.columns])
 
 
 def test_incremental_rollup_stream_matches_cold_rebuild(spark, staged):

@@ -135,6 +135,40 @@ def test_sql_time_range_matches_python(spark):
     assert a == b and len(a) == 4
 
 
+def test_sql_time_range_takes_tds_tz_argument(spark):
+    """td_time_range(t, s, e, tz) reads string endpoints as wall-clock
+    time in ``tz``; epoch endpoints do not move, and the Python helper's
+    ``tz=`` selects the same rows."""
+    from pandas_td_spark.functions.td import td_time_range
+
+    t = 1704034800  # 2024-01-01 00:00 JST, 2023-12-31 15:00 UTC
+    row = spark.sql(
+        f"SELECT td_time_range({t}, '2024-01-01', '2024-01-02', 'Asia/Tokyo') AS tokyo, "
+        f"td_time_range({t}, '2024-01-01', '2024-01-02') AS utc, "
+        f"td_time_range({t}, '2024-01-01', '2024-01-02', 'JST') AS jst, "
+        f"td_time_range({t}, '{t}', '{t + 1}', 'Asia/Tokyo') AS epochs"
+    ).first()
+    assert (row.tokyo, row.utc, row.jst, row.epochs) == (True, False, True, True)
+
+    df = spark.range(72).select((F.col("id") * 3600 + 1703980800).alias("time"))
+    df.createOrReplaceTempView("tr_tz_probe")
+    for tz in ("Asia/Tokyo", "America/New_York", "UTC"):
+        py = sorted(
+            r.time
+            for r in df.where(
+                td_time_range("time", "2024-01-01", "2024-01-02", tz=tz)
+            ).collect()
+        )
+        sql = sorted(
+            r.time
+            for r in spark.sql(
+                "SELECT time FROM tr_tz_probe WHERE "
+                f"td_time_range(time, '2024-01-01', '2024-01-02', '{tz}')"
+            ).collect()
+        )
+        assert py == sql and len(py) == 24, tz
+
+
 def test_tz_may_be_left_out_as_td_allows(spark, tmp_path):
     """td_time_format(t, fmt), td_time_parse(s) and td_date_trunc(unit, t)
     are their 'UTC' forms, also in the session clone a compat call runs
