@@ -56,7 +56,7 @@ import re
 import time as _time
 import uuid
 import weakref
-from collections.abc import Iterator, Sequence
+from collections.abc import Iterator, Mapping, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -80,6 +80,9 @@ __all__ = [
 ]
 
 __version__ = "0.1.0"
+
+#: ``parse_dates``: columns, or ``{column: unit_or_format}``
+DateSpec = Sequence[str] | Mapping[str, str]
 
 
 class Connection:
@@ -240,10 +243,19 @@ class ResultProxy:
     def to_dataframe(
         self,
         index_col: str | None = None,
-        parse_dates: Sequence[str] | None = None,
+        parse_dates: DateSpec | None = None,
     ) -> pd.DataFrame:
+        """``parse_dates`` is a list of columns for plain
+        ``pd.to_datetime``, or (``td.py::ResultProxy._parse_dates``,
+        UNVERIFIED) a ``{column: spec}`` dict whose spec is the ``unit``
+        of a numeric column (``{'time': 's'}`` for TD's epoch seconds)
+        and the ``format`` of any other."""
         pdf = self.df.toPandas()  # Arrow path (session default)
-        if parse_dates:
+        if isinstance(parse_dates, Mapping):
+            for c, spec in parse_dates.items():
+                key = "unit" if pd.api.types.is_numeric_dtype(pdf[c]) else "format"
+                pdf[c] = pd.to_datetime(pdf[c], **{key: spec})
+        elif parse_dates:
             for c in parse_dates:
                 pdf[c] = pd.to_datetime(pdf[c])
         if index_col is not None:
@@ -255,7 +267,7 @@ def read_td_query(
     query: str,
     engine: QueryEngine,
     index_col: str | None = None,
-    parse_dates: Sequence[str] | None = None,
+    parse_dates: DateSpec | None = None,
     distributed_join: bool = False,
     params: dict | None = None,
 ) -> pd.DataFrame:
@@ -271,7 +283,7 @@ def read_td_table(
     table_name: str,
     engine: QueryEngine,
     index_col: str | None = None,
-    parse_dates: Sequence[str] | None = None,
+    parse_dates: DateSpec | None = None,
     columns: Sequence[str] | None = None,
     time_range: tuple[TimeLike, TimeLike] | None = None,
     limit: int | None = 10000,

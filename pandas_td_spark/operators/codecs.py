@@ -31,14 +31,9 @@ window, and a 32-band pseudo-QMF polyphase filterbank (in-repo
 root-raised-cosine prototype; see the MP3 section for the one honest
 departure from Table B.3) — so :func:`media_features` now really
 decodes subset MP3 payloads (:func:`mp3_decode_pcm`) and stubs only
-out-of-subset streams. **H.264** gained its STRUCTURAL layer late in
-r12 (operators/h264.py: Annex-B NAL framing with emulation prevention,
-Exp-Golomb, SPS/PPS/slice-prefix parsing — :func:`media_features` now
-emits real dims/profile/slice-histogram features for Annex-B streams);
-its ENTROPY and RECONSTRUCTION layers (CAVLC/CABAC residuals, motion
-compensation) remain the one honest stub — a genuinely larger
-engineering job — with the stub fallback keeping mixed-corpus
-pipelines running end-to-end either way.
+out-of-subset streams. Compressed video is not decoded: such payloads
+take the stub fallback, which keeps mixed-corpus pipelines running
+end-to-end.
 
 Feature extraction and resize are closed-form numpy (RMS/peak/ZCR/
 duration for audio; per-channel means + intensity histogram for images;
@@ -342,73 +337,14 @@ def media_features(payload: bytes, out_dim: int = 16) -> np.ndarray:
     """Drop-in ``decode_fn`` for ``multimodal.featurize_binary``:
     REAL decode for WAV/FLAC/MP3(subset)/PPM/PGM/BMP/PNG/baseline-and-
     progressive-JPEG/GIF (audio: duration/rms/peak/zcr + FFT band
-    energies; image: shape/channel stats + intensity histogram),
-    STRUCTURAL features for Annex-B H.264 (dims/profile/slice histogram
-    — operators/h264.py; the entropy layer stays stubbed), stub
-    fallback for everything else (including MP3/H.264 streams outside
-    their implemented subsets). Always returns float32[out_dim]."""
+    energies; image: shape/channel stats + intensity histogram), stub
+    fallback for everything else (including MP3 streams outside the
+    implemented subset, and every format with no decoder here, such as
+    compressed video). Always returns float32[out_dim]."""
     from pandas_td_spark.operators.multimodal import stub_decoder
 
     try:
-        if payload[:4] == b"\x00\x00\x00\x01" or payload[:3] == b"\x00\x00\x01":
-            # Annex-B H.264: structural features (operators/h264.py —
-            # NAL framing, SPS dims, slice histogram) + RESIDUAL stats
-            # (r13: CAVLC I-frame coefficient decode) when the stream is
-            # inside the entropy subset; structural-only otherwise.
-            # An IndexError here is sniff-risk, not a decoder bug: any
-            # payload starting 00 00 01 enters this branch (ADVICE r12).
-            from pandas_td_spark.operators.h264 import (
-                h264_residual_stats,
-                h264_stream_info,
-            )
-
-            try:
-                info = h264_stream_info(payload)
-            except IndexError:
-                return stub_decoder(payload, out_dim)
-            sc = info["slice_counts"]
-            vec = [
-                float(info["height"]), float(info["width"]),
-                float(info["n_nals"]),
-                float(sc.get("I", 0)), float(sc.get("P", 0)),
-                float(sc.get("B", 0)),
-                float(info["profile_idc"]), float(info["level_idc"]),
-                1.0 if info["entropy_mode"] == "cabac" else 0.0,
-            ]
-            try:
-                rs = h264_residual_stats(payload)
-                vec += [
-                    float(rs["n_nonzero"]),
-                    float(rs["sum_abs"]),
-                    float(rs["qp"]),
-                ]
-            except (ValueError, NotImplementedError, IndexError):
-                # outside the CAVLC I-frame subset (e.g. the r12
-                # structural fixtures with stand-in slice payloads):
-                # structural features stand, residual slots stay zero
-                pass
-            else:
-                # r14: REAL pixel stats when the stream also sits in
-                # the reconstruction subset (I_16x16 / I_4x4-DC modes
-                # with conforming neighbors): mean reconstructed luma
-                # and the clip count. Nonconforming-mode streams (the
-                # r13 fixtures' default V-on-top-row) keep zeros here
-                # while their residual slots above stand.
-                try:
-                    from pandas_td_spark.operators.h264 import (
-                        h264_pixel_stats,
-                    )
-
-                    ps = h264_pixel_stats(payload)
-                    npix = ps["w"] * ps["h"] * ps["n_frames"]
-                    vec += [
-                        float(ps["luma_sum"]) / float(npix),
-                        float(ps["n_clip"]),
-                    ]
-                except (ValueError, NotImplementedError, IndexError):
-                    pass
-            vec += [0.0] * max(out_dim - len(vec), 0)
-        elif (
+        if (
             len(payload) >= 4
             and payload[0] == 0xFF
             and payload[1] & 0xE0 == 0xE0
@@ -472,10 +408,10 @@ def media_features(payload: bytes, out_dim: int = 16) -> np.ndarray:
         else:
             return stub_decoder(payload, out_dim)
     except (ValueError, NotImplementedError):
-        # ADVICE r12: IndexError is now caught ONLY in the sniff-prone
-        # MP3/H.264 branches above — for the strongly-magic-matched
-        # formats (PNG/JPEG/FLAC/WAV/BMP/GIF/PPM) an IndexError would be
-        # a genuine decoder bug and must surface, not become stub
+        # ADVICE r12: IndexError is caught ONLY in the sniff-prone MP3
+        # branch above — for the strongly-magic-matched formats
+        # (PNG/JPEG/FLAC/WAV/BMP/GIF/PPM) an IndexError would be a
+        # genuine decoder bug and must surface, not become stub
         # features silently.
         return stub_decoder(payload, out_dim)
     return np.asarray(vec[:out_dim], dtype=np.float32)
@@ -633,7 +569,7 @@ def decode_png(payload: bytes) -> np.ndarray:
 
 # ---------------------------------------------------------------------------
 # Y4M (YUV4MPEG2) — REAL uncompressed video decode/encode (round 7).
-# The last stubbed modality was video; compressed codecs (H.264 et al.)
+# The last stubbed modality was video; compressed video codecs
 # genuinely need external libraries, but YUV4MPEG2 — the standard
 # uncompressed interchange format every ffmpeg pipeline can emit — is a
 # text header plus raw C420 planes, fully parseable with numpy. This
@@ -3296,7 +3232,7 @@ def flac_chunk_extractor(payload: bytes, n_chunks: int) -> list[bytes]:
 # MP3 (MPEG-1 Audio Layer III) — ENTROPY LAYER (r12, VERDICT r11 #5).
 #
 # Scope and honesty. Through r11 MP3 was classified "needs external
-# libraries" alongside H.264; the verdict correctly called that
+# libraries" alongside compressed video; the verdict correctly called that
 # overstated — the entropy layer is spec-published bitstream structure +
 # Huffman tables, the same pure-python/numpy class as the JPEG/FLAC work
 # above. This round ships that layer: frame headers, mono side info

@@ -7,13 +7,13 @@ alongside (``media_meta``: n_bytes, digest, detected format). Payloads over
 The Spark-side plumbing here is REAL and tested: schemas, metadata
 expressions (JVM-side), and the ``mapInPandas`` batch shape for
 decode/feature-extraction. Since round 6 the DECODE itself is also real
-for every format that pure numpy can parse: PCM WAV, PPM/PGM, and
-24-bit BMP (``operators/codecs.py`` — pass ``decode_fn=codecs.
-media_features``; the decode→feature path is oracle-certified by
-q238/q239). Formats that require external codec libraries (JPEG/PNG/
-MP3/H.264 — PIL/ffmpeg et al., NOT in this container) still fall back
-to the clearly-marked deterministic STUB below; real decoders plug into
-the same ``(bytes, out_dim) -> ndarray`` signature.
+for every format that pure numpy can parse: WAV, FLAC, subset MP3,
+PPM/PGM, BMP, PNG, JPEG and GIF (``operators/codecs.py`` — pass
+``decode_fn=codecs.media_features``; the decode→feature path is
+oracle-certified by q238/q239). Formats with no decoder there
+(compressed video, MP3 outside the subset) still fall back to the
+clearly-marked deterministic STUB below; real decoders plug into the
+same ``(bytes, out_dim) -> ndarray`` signature.
 
 Scale notes: feature extraction is embarrassingly parallel —
 ``mapInPandas`` streams Arrow batches, so executor memory is bounded by

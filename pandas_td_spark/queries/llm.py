@@ -2759,560 +2759,6 @@ def _q275_classes() -> tuple:
 
 
 # ---------------------------------------------------------------------------
-# L5k — H.264 structural layer EXACT round-trip (r12, late). Same
-# playbook as q275: 40 closed-form stream classes (dims via MB counts +
-# even cropping, I/P/B frame mixes, CAVLC/CABAC, baseline/main) are
-# emitted by the in-repo Annex-B encoder, re-parsed by the REAL
-# structural parser (NAL framing + emulation prevention + Exp-Golomb +
-# SPS/PPS/slice prefixes), and the integer stats come from the PARSED
-# stream — while the DuckDB oracle recomputes them from the class
-# definitions, INCLUDING the exact SPS RBSP byte length via Exp-Golomb
-# bit accounting (ue(v) costs 2*floor(log2(v+1))+1 bits; + stop bit,
-# byte alignment). Any drift in the ue/se writer, the SPS field
-# sequence, cropping arithmetic, or NAL framing flips an integer and
-# goes red. Model-grain: the 40 classes are driver numpy, broadcast-
-# joined (the q275 discipline).
-# ---------------------------------------------------------------------------
-@query(
-    "q276_h264_structural_roundtrip",
-    oracle="""
-    WITH ks AS (
-      SELECT DISTINCT doc_id % 40 AS k FROM documents
-    ), defs AS (
-      SELECT k,
-             1 + (k % 7) AS w_mbs,
-             1 + (k % 5) AS h_mbs,
-             k % 3 AS crop_r,
-             k % 2 AS crop_b,
-             1 + (k % 4) + (k % 2) AS n_slices,
-             k % 4 AS n_p,
-             k % 2 AS n_b,
-             CASE WHEN k % 3 = 0 THEN 77 ELSE 66 END AS profile,
-             30 + (k % 3) AS level_idc,
-             k % 2 AS cabac
-      FROM ks
-    ), bits AS (
-      SELECT *,
-             -- ue(v) = 2*floor(log2(v+1))+1 bits; fixed fields: 24
-             -- header + 3 flag bits (frame_mbs_only, direct_8x8, vui)
-             24
-             + 1  -- ue(0) sps_id
-             + 1  -- ue(0) log2_max_frame_num_minus4
-             + (2*CAST(floor(log2(2+1)) AS INT)+1)  -- ue(2) poc_type
-             + (2*CAST(floor(log2(1+1)) AS INT)+1)  -- ue(1) max_ref
-             + 1  -- gaps flag
-             + (2*CAST(floor(log2(w_mbs)) AS INT)+1)   -- ue(w_mbs-1)
-             + (2*CAST(floor(log2(h_mbs)) AS INT)+1)   -- ue(h_mbs-1)
-             + 1 + 1  -- frame_mbs_only, direct_8x8
-             + CASE WHEN crop_r + crop_b > 0
-                    THEN 1 + 1 + (2*CAST(floor(log2(crop_r+1)) AS INT)+1)
-                           + 1 + (2*CAST(floor(log2(crop_b+1)) AS INT)+1)
-                    ELSE 1 END  -- cropping flag (+ 4 ue's when set)
-             + 1  -- vui flag
-             AS sps_bits
-      FROM defs
-    )
-    SELECT d.doc_id,
-           CAST(b.w_mbs * 16 - 2 * b.crop_r AS BIGINT) AS width,
-           CAST(b.h_mbs * 16 - 2 * b.crop_b AS BIGINT) AS height,
-           CAST(2 + b.n_slices AS BIGINT) AS n_nals,
-           CAST(b.n_p AS BIGINT) AS n_p,
-           CAST(b.n_b AS BIGINT) AS n_b,
-           CAST(b.profile AS BIGINT) AS profile_idc,
-           CAST(b.level_idc AS BIGINT) AS level_idc,
-           CAST(b.cabac AS BIGINT) AS cabac,
-           CAST((b.sps_bits + 1 + 7) // 8 AS BIGINT) AS sps_rbsp_bytes
-    FROM documents d JOIN bits b ON b.k = d.doc_id % 40
-    """,
-    scale_note=(
-        "model-grain like q275: 40 stream classes built and parsed in "
-        "the driver (sub-ms numpy-free python), broadcast-joined onto "
-        "documents — the doc-grain path is a pure JVM hash join"
-    ),
-)
-def q276_h264_structural_roundtrip(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Emit Annex-B streams for 40 closed-form classes → REAL structural
-    parse → integer stats the SQL oracle recomputes from the definitions
-    (incl. exact Exp-Golomb bit accounting for the SPS RBSP length)."""
-    classes = spark.createDataFrame(
-        _q276_classes(),
-        "k long, width long, height long, n_nals long, n_p long, "
-        "n_b long, profile_idc long, level_idc long, cabac long, "
-        "sps_rbsp_bytes long",
-    )
-    d = spark.table("documents").select(
-        "doc_id", (F.col("doc_id") % 40).alias("k")
-    )
-    return d.join(F.broadcast(classes), "k").drop("k")
-
-
-@lru_cache(maxsize=1)
-def _q276_classes() -> tuple:
-    from pandas_td_spark.operators.h264 import (
-        encode_h264_structural,
-        h264_split_nals,
-        h264_stream_info,
-    )
-
-    rows = []
-    for k in range(40):
-        width = 16 * (1 + k % 7) - 2 * (k % 3)
-        height = 16 * (1 + k % 5) - 2 * (k % 2)
-        frames = "I" + "P" * (k % 4) + "B" * (k % 2)
-        profile = 77 if k % 3 == 0 else 66
-        stream = encode_h264_structural(
-            width, height, frames,
-            profile=profile, level=30 + k % 3, cabac=bool(k % 2),
-        )
-        info = h264_stream_info(stream)
-        sps_rbsp = h264_split_nals(stream)[0]["rbsp"]
-        rows.append((
-            k, info["width"], info["height"], info["n_nals"],
-            info["slice_counts"].get("P", 0),
-            info["slice_counts"].get("B", 0),
-            info["profile_idc"], info["level_idc"],
-            1 if info["entropy_mode"] == "cabac" else 0,
-            len(sps_rbsp),
-        ))
-    return tuple(rows)
-
-
-# ---------------------------------------------------------------------------
-# L5l — H.264 CAVLC residual-layer EXACT round-trip (r13, VERDICT r12
-# #5: the module's last honest stub). Same playbook as q275/q276: 40
-# closed-form coefficient surfaces (mixed I_4x4 / I_16x16 macroblock
-# grids, per-class qp, two classes scaled x997 to force the level-
-# escape paths) are encoded by the in-repo CAVLC emitter — real
-# coeff_token / total_zeros / run_before VLCs, adaptive level suffixes,
-# CBP derivation, nC neighbor bookkeeping — decoded back by the REAL
-# decoder, ASSERTED bit-exact, and the integer stats come from the
-# DECODED surface — while the DuckDB oracle recomputes them straight
-# from the closed-form surface definition. Any drift anywhere in the
-# entropy chain (a VLC table entry, the suffix adaptation, the CBP
-# mapping, nC derivation, bit alignment) flips a checksum and goes red.
-# Model-grain: 40 classes in the driver, broadcast-joined onto docs.
-# ---------------------------------------------------------------------------
-_Q277_LUT = (0, 1, -1, 0, 2, 0, -1, 0, 1, 0, -2, 0, 3)
-_Q277_LUT_SQL = (
-    "CASE ({m}) WHEN 1 THEN 1 WHEN 2 THEN -1 WHEN 4 THEN 2 WHEN 6 THEN -1"
-    " WHEN 8 THEN 1 WHEN 10 THEN -2 WHEN 12 THEN 3 ELSE 0 END"
-)
-
-
-@query(
-    "q277_h264_cavlc_roundtrip",
-    oracle=f"""
-    WITH ks AS (
-      SELECT DISTINCT doc_id % 40 AS k FROM documents
-    ), defs AS (
-      SELECT k, 1 + (k % 3) AS w_mbs, 1 + (k % 2) AS h_mbs,
-             20 + (k % 12) AS qp,
-             CASE WHEN k % 10 = 9 THEN 997 ELSE 1 END AS scale
-      FROM ks
-    ), luma AS (
-      SELECT d.k,
-             d.scale * {_Q277_LUT_SQL.format(
-                 m="(d.k*7 + 11*mb.mb + 5*blk.blk + 3*ci.ci*ci.ci) % 13"
-             )} AS v,
-             1 + mb.mb * 1000 + blk.blk * 50 + ci.ci AS wgt
-      FROM defs d
-      CROSS JOIN range(6) mb(mb)
-      CROSS JOIN range(16) blk(blk)
-      CROSS JOIN range(16) ci(ci)
-      WHERE mb.mb < d.w_mbs * d.h_mbs
-    ), chroma AS (
-      SELECT d.k,
-             d.scale * {_Q277_LUT_SQL.format(
-                 m="(d.k*3 + 17*mb.mb + 7*cp.cp + 5*blk.blk + ci.ci) % 13"
-             )} AS v,
-             500000 + mb.mb * 1000 + cp.cp * 400 + blk.blk * 50 + ci.ci
-               AS wgt
-      FROM defs d
-      CROSS JOIN range(6) mb(mb)
-      CROSS JOIN range(2) cp(cp)
-      CROSS JOIN range(4) blk(blk)
-      CROSS JOIN range(16) ci(ci)
-      WHERE mb.mb < d.w_mbs * d.h_mbs
-    ), surface AS (
-      SELECT * FROM luma UNION ALL SELECT * FROM chroma
-    ), agg AS (
-      SELECT k,
-             CAST(SUM(CASE WHEN v <> 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_nonzero,
-             CAST(SUM(v) AS BIGINT) AS sum_vals,
-             CAST(SUM(ABS(v)) AS BIGINT) AS sum_abs,
-             CAST(SUM(v * wgt) AS BIGINT) AS chk
-      FROM surface GROUP BY k
-    ), mb16 AS (
-      SELECT d.k,
-             CAST(SUM(CASE WHEN (mb.mb + d.k) % 2 = 0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_mb16
-      FROM defs d CROSS JOIN range(6) mb(mb)
-      WHERE mb.mb < d.w_mbs * d.h_mbs
-      GROUP BY d.k
-    )
-    SELECT doc.doc_id,
-           CAST(d.w_mbs * d.h_mbs AS BIGINT) AS n_mbs,
-           CAST(d.qp AS BIGINT) AS qp,
-           m.n_mb16, a.n_nonzero, a.sum_vals, a.sum_abs, a.chk
-    FROM documents doc
-    JOIN defs d ON d.k = doc.doc_id % 40
-    JOIN agg a ON a.k = doc.doc_id % 40
-    JOIN mb16 m ON m.k = doc.doc_id % 40
-    """,
-    scale_note=(
-        "model-grain like q275/q276: 40 coefficient surfaces encoded/"
-        "decoded once in the driver (pure-python bit machinery over "
-        "<=6-MB frames), broadcast-joined onto documents — the "
-        "doc-grain path is a pure JVM hash join, corpus size never "
-        "touches the codec"
-    ),
-)
-def q277_h264_cavlc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Closed-form coefficient surfaces → REAL CAVLC encode → Annex-B →
-    REAL decode → assert bit-exact → integer stats the SQL oracle
-    recomputes from the surface definition."""
-    classes = spark.createDataFrame(
-        _q277_classes(),
-        "k long, n_mbs long, qp long, n_mb16 long, n_nonzero long, "
-        "sum_vals long, sum_abs long, chk long",
-    )
-    d = spark.table("documents").select(
-        "doc_id", (F.col("doc_id") % 40).alias("k")
-    )
-    return d.join(F.broadcast(classes), "k").drop("k")
-
-
-@lru_cache(maxsize=1)
-def _q277_classes() -> tuple:
-    from pandas_td_spark.operators.h264 import (
-        encode_h264_cavlc,
-        h264_decode_cavlc_islice,
-        h264_residual_stats,
-        h264_stream_info,
-    )
-
-    lut = _Q277_LUT
-    rows = []
-    for k in range(40):
-        w_mbs, h_mbs = 1 + k % 3, 1 + k % 2
-        n = w_mbs * h_mbs
-        qp = 20 + k % 12
-        scale = 997 if k % 10 == 9 else 1
-        luma = [
-            [
-                [
-                    scale * lut[(k * 7 + 11 * mb + 5 * blk + 3 * ci * ci) % 13]
-                    for ci in range(16)
-                ]
-                for blk in range(16)
-            ]
-            for mb in range(n)
-        ]
-        chroma = [
-            [
-                [
-                    [
-                        scale
-                        * lut[(k * 3 + 17 * mb + 7 * cp + 5 * blk + ci) % 13]
-                        for ci in range(16)
-                    ]
-                    for blk in range(4)
-                ]
-                for cp in range(2)
-            ]
-            for mb in range(n)
-        ]
-        mb16 = [(mb + k) % 2 == 0 for mb in range(n)]
-        payload = encode_h264_cavlc(w_mbs, h_mbs, luma, chroma, mb16, qp=qp)
-        dec = h264_decode_cavlc_islice(payload)
-        assert dec["luma"] == luma, "h264 cavlc luma drift"
-        assert dec["chroma"] == chroma, "h264 cavlc chroma drift"
-        assert dec["mb16"] == mb16 and dec["qp"] == qp, "h264 mb drift"
-        assert h264_stream_info(payload)["entropy_mode"] == "cavlc"
-        st = h264_residual_stats(payload)
-        rows.append((
-            k, st["n_mbs"], st["qp"], st["n_mb16"], st["n_nonzero"],
-            st["sum_vals"], st["sum_abs"], st["chk"],
-        ))
-    return tuple(rows)
-
-
-# ---------------------------------------------------------------------------
-# L5m — H.264 PIXEL reconstruction EXACT round-trip (r14, VERDICT r13
-# #5). The q277 chain stopped at the quantized coefficient surface;
-# this gate drives the full decode-to-pixels path: closed-form DC +
-# zigzag-1-AC coefficient surfaces (all-I_16x16, DC luma prediction,
-# DC chroma prediction, per-class qp 20..31, one clip-forcing x997
-# family) are CAVLC-encoded by the in-repo emitter, decoded, ASSERTED
-# coefficient-exact, then RECONSTRUCTED — inverse 4x4 Hadamard (luma
-# DC), §8.5.10/11 DC scaling, §8.5.9 AC dequant, the §8.5.12 integer
-# inverse transform, 16x16-DC / chroma-DC intra prediction with the
-# cross-MB neighbor recurrence, and [0,255] clipping — while the DuckDB
-# oracle replays every stage in SQL: a literal 256-row Hadamard weight
-# lattice, floor-division arithmetic shifts, the IDCT's y-uniform
-# vertical-stripe form for zigzag-1 AC (exact because qp//6 >= 1 makes
-# every dequantized level even, so d >> 1 is lossless), the 16-pixel
-# bottom-row DC-prediction recurrence unrolled over the 2-MB column,
-# and the clip rails. Any drift anywhere — a V-table entry, a rounding
-# constant, the Hadamard sign pattern, the chroma QP map, prediction
-# availability — moves a checksum and goes red. Model-grain: 40 classes
-# in the driver, broadcast-joined onto docs (q275/q276/q277 playbook).
-# ---------------------------------------------------------------------------
-def _q278_had_lattice() -> str:
-    h4 = ((1, 1, 1, 1), (1, 1, -1, -1), (1, -1, -1, 1), (1, -1, 1, -1))
-    zig = (
-        (0, 0), (0, 1), (1, 0), (2, 0), (1, 1), (0, 2), (0, 3), (1, 2),
-        (2, 1), (3, 0), (3, 1), (2, 2), (1, 3), (2, 3), (3, 2), (3, 3),
-    )
-    vals = []
-    for b in range(16):
-        zi, zj = zig[b]
-        for by in range(4):
-            for bx in range(4):
-                vals.append(f"({b},{bx},{by},{h4[by][zi] * h4[bx][zj]})")
-    return ", ".join(vals)
-
-
-_Q278_ORACLE = f"""
-    WITH ks AS (
-      SELECT DISTINCT doc_id % 40 AS k FROM documents
-    ), defs AS (
-      SELECT k, 20 + (k % 12) AS qp,
-             (20 + (k % 12)) // 6 AS s, (20 + (k % 12)) % 6 AS m,
-             CASE WHEN (20 + k % 12) = 30 THEN 29
-                  WHEN (20 + k % 12) = 31 THEN 30
-                  ELSE 20 + (k % 12) END AS qpc
-      FROM ks
-    ), defs2 AS (
-      SELECT k, qp, s, m, qpc, qpc // 6 AS sc, qpc % 6 AS mc,
-             CASE WHEN k % 10 = 9 THEN 997
-                  ELSE (3 * (1 << (8 - s))) END AS dc_scale,
-             CASE WHEN k % 10 = 9 THEN 997
-                  ELSE (2 * (1 << (8 - (qpc // 6)))) END AS c_scale,
-             CASE m WHEN 0 THEN 10 WHEN 1 THEN 11 WHEN 2 THEN 13
-                    WHEN 3 THEN 14 WHEN 4 THEN 16 ELSE 18 END AS ls0,
-             CASE m WHEN 0 THEN 13 WHEN 1 THEN 14 WHEN 2 THEN 16
-                    WHEN 3 THEN 18 WHEN 4 THEN 20 ELSE 23 END AS ls2,
-             CASE (qpc % 6) WHEN 0 THEN 10 WHEN 1 THEN 11 WHEN 2 THEN 13
-                    WHEN 3 THEN 14 WHEN 4 THEN 16 ELSE 18 END AS lsc0
-      FROM defs
-    ), had(b, bx, by, w) AS (
-      VALUES {_q278_had_lattice()}
-    ), dcz AS (
-      SELECT d.k, mb.mb, b.b,
-             d.dc_scale * {_Q277_LUT_SQL.format(
-                 m="(d.k*5 + 7*mb.mb + 3*b.b) % 13")} AS v
-      FROM defs2 d CROSS JOIN range(2) mb(mb) CROSS JOIN range(16) b(b)
-    ), fs AS (
-      SELECT z.k, z.mb, h.bx, h.by, SUM(z.v * h.w) AS f
-      FROM dcz z JOIN had h ON h.b = z.b
-      GROUP BY z.k, z.mb, h.bx, h.by
-    ), dcy AS (
-      SELECT f.k, f.mb, f.bx, f.by,
-             CAST(floor((f.f * d.ls0 + (1 << (5 - d.s)))
-                        / CAST(1 << (6 - d.s) AS DOUBLE)) AS BIGINT) AS dcy
-      FROM fs f JOIN defs2 d USING (k)
-    ), acs AS (
-      SELECT d.k, mb.mb, blk.blk,
-             CASE WHEN d.k % 2 = 0 THEN
-               4 * {_Q277_LUT_SQL.format(
-                   m="(d.k*11 + 5*mb.mb + 2*blk.blk + 1) % 13")}
-               * d.ls2 * (1 << d.s)
-             ELSE 0 END AS a
-      FROM defs2 d CROSS JOIN range(2) mb(mb) CROSS JOIN range(16) blk(blk)
-    ), rpix AS (
-      SELECT a.k, a.mb, a.blk,
-             ((a.blk // 4) % 2) * 2 + (a.blk % 4) % 2 AS bx,
-             (a.blk // 8) * 2 + ((a.blk % 4) // 2) AS by,
-             x.x,
-             CAST(floor((y.dcy
-                  + CASE x.x WHEN 0 THEN a.a WHEN 1 THEN a.a // 2
-                             WHEN 2 THEN -(a.a // 2) ELSE -a.a END
-                  + 32) / 64.0) AS BIGINT) AS r
-      FROM acs a
-      JOIN dcy y ON y.k = a.k AND y.mb = a.mb
-       AND y.bx = ((a.blk // 4) % 2) * 2 + (a.blk % 4) % 2
-       AND y.by = (a.blk // 8) * 2 + ((a.blk % 4) // 2)
-      CROSS JOIN range(4) x(x)
-    ), pix0 AS (
-      SELECT k, blk, bx, by, x, 128 + r AS raw,
-             LEAST(255, GREATEST(0, 128 + r)) AS v
-      FROM rpix WHERE mb = 0
-    ), pred1 AS (
-      SELECT k, CAST(floor((SUM(v) + 8) / 16.0) AS BIGINT) AS p
-      FROM pix0 WHERE by = 3 GROUP BY k
-    ), pix1 AS (
-      SELECT r.k, r.blk, r.bx, r.by, r.x, p.p + r.r AS raw,
-             LEAST(255, GREATEST(0, p.p + r.r)) AS v
-      FROM rpix r JOIN pred1 p USING (k) WHERE r.mb = 1
-    ), lpix AS (
-      SELECT k, 0 AS mb, blk, bx, by, x, raw, v FROM pix0
-      UNION ALL
-      SELECT k, 1, blk, bx, by, x, raw, v FROM pix1
-    ), lstat AS (
-      SELECT k,
-             CAST(SUM(4 * v) AS BIGINT) AS luma_sum,
-             CAST(SUM(v * (4 * (1 + bx * 4 + x)
-                           + 16 * (4 * (mb * 16 + by * 4) + 6)))
-                  AS BIGINT) AS luma_chk,
-             CAST(SUM(CASE WHEN raw < 0 OR raw > 255 THEN 4 ELSE 0 END)
-                  AS BIGINT) AS luma_clip
-      FROM lpix GROUP BY k
-    ), cdc AS (
-      SELECT d.k, mb.mb, cp.cp, b.b,
-             CASE WHEN d.k % 3 = 0 THEN
-               d.c_scale * {_Q277_LUT_SQL.format(
-                   m="(d.k*3 + 17*mb.mb + 7*cp.cp + 5*b.b) % 13")}
-             ELSE 0 END AS v
-      FROM defs2 d CROSS JOIN range(2) mb(mb) CROSS JOIN range(2) cp(cp)
-      CROSS JOIN range(4) b(b)
-    ), cblk AS (
-      SELECT c.k, c.mb, c.cp, blk.blk, blk.blk % 2 AS bx,
-             blk.blk // 2 AS by,
-             CAST(floor(((
-               CASE blk.blk
-                 WHEN 0 THEN m00.v + m01.v + m10.v + m11.v
-                 WHEN 1 THEN m00.v - m01.v + m10.v - m11.v
-                 WHEN 2 THEN m00.v + m01.v - m10.v - m11.v
-                 ELSE m00.v - m01.v - m10.v + m11.v
-               END) * d.lsc0 * (1 << d.sc)) / 32.0) AS BIGINT) AS dcc
-      FROM (SELECT DISTINCT k, mb, cp FROM cdc) c
-      JOIN cdc m00 ON m00.k = c.k AND m00.mb = c.mb AND m00.cp = c.cp
-       AND m00.b = 0
-      JOIN cdc m01 ON m01.k = c.k AND m01.mb = c.mb AND m01.cp = c.cp
-       AND m01.b = 1
-      JOIN cdc m10 ON m10.k = c.k AND m10.mb = c.mb AND m10.cp = c.cp
-       AND m10.b = 2
-      JOIN cdc m11 ON m11.k = c.k AND m11.mb = c.mb AND m11.cp = c.cp
-       AND m11.b = 3
-      JOIN defs2 d ON d.k = c.k
-      CROSS JOIN range(4) blk(blk)
-    ), crblk AS (
-      SELECT k, mb, cp, blk, bx, by,
-             CAST(floor((dcc + 32) / 64.0) AS BIGINT) AS r
-      FROM cblk
-    ), cpix0 AS (
-      SELECT k, cp, blk, bx, by, 128 + r AS raw,
-             LEAST(255, GREATEST(0, 128 + r)) AS v
-      FROM crblk WHERE mb = 0
-    ), cpix1 AS (
-      SELECT r.k, r.cp, r.blk, r.bx, r.by, p.v + r.r AS raw,
-             LEAST(255, GREATEST(0, p.v + r.r)) AS v
-      FROM crblk r
-      JOIN cpix0 p ON p.k = r.k AND p.cp = r.cp AND p.bx = r.bx
-       AND p.by = 1
-      WHERE r.mb = 1
-    ), cpixall AS (
-      SELECT k, 0 AS mb, cp, bx, by, raw, v FROM cpix0
-      UNION ALL
-      SELECT k, 1, cp, bx, by, raw, v FROM cpix1
-    ), cstat AS (
-      SELECT k,
-             CAST(SUM(16 * v) AS BIGINT) AS chroma_sum,
-             CAST(SUM(v * (16 * (500000 + cp * 250000)
-                           + 16 * (8 * (mb * 8 + by * 4) + bx * 4)
-                           + 216)) AS BIGINT) AS chroma_chk,
-             CAST(SUM(CASE WHEN raw < 0 OR raw > 255 THEN 16 ELSE 0 END)
-                  AS BIGINT) AS chroma_clip
-      FROM cpixall GROUP BY k
-    )
-    SELECT doc.doc_id, CAST(d.qp AS BIGINT) AS qp,
-           l.luma_sum, l.luma_chk, c.chroma_sum, c.chroma_chk,
-           l.luma_clip + c.chroma_clip AS n_clip
-    FROM documents doc
-    JOIN defs2 d ON d.k = doc.doc_id % 40
-    JOIN lstat l ON l.k = doc.doc_id % 40
-    JOIN cstat c ON c.k = doc.doc_id % 40
-"""
-
-
-@query(
-    "q278_h264_pixel_roundtrip",
-    oracle=_Q278_ORACLE,
-    scale_note=(
-        "model-grain like q277: 40 pixel surfaces encoded/decoded/"
-        "reconstructed once in the driver, broadcast-joined onto "
-        "documents — corpus size never touches the codec or the "
-        "reconstruction loop"
-    ),
-)
-def q278_h264_pixel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Closed-form coefficient surfaces → REAL CAVLC encode → decode →
-    assert coefficient-exact → REAL pixel reconstruction (dequant,
-    inverse Hadamard/IDCT, intra DC prediction, clip) → integer pixel
-    stats the SQL oracle replays stage by stage."""
-    classes = spark.createDataFrame(
-        _q278_classes(),
-        "k long, qp long, luma_sum long, luma_chk long, "
-        "chroma_sum long, chroma_chk long, n_clip long",
-    )
-    d = spark.table("documents").select(
-        "doc_id", (F.col("doc_id") % 40).alias("k")
-    )
-    return d.join(F.broadcast(classes), "k").drop("k")
-
-
-@lru_cache(maxsize=1)
-def _q278_classes() -> tuple:
-    from pandas_td_spark.operators.h264 import (
-        encode_h264_cavlc,
-        h264_decode_cavlc_islice,
-        h264_pixel_stats,
-    )
-
-    lut = _Q277_LUT
-    rows = []
-    for k in range(40):
-        n = 2  # one MB wide, two high: the top MB has no neighbors,
-        # the bottom MB exercises the cross-MB DC prediction recurrence
-        qp = 20 + k % 12
-        s = qp // 6
-        dc_scale = 997 if k % 10 == 9 else (3 << (8 - s))
-        qpc = qp if qp < 30 else (29, 30)[qp - 30]
-        c_scale = 997 if k % 10 == 9 else (2 << (8 - (qpc // 6)))
-        luma = [[[0] * 16 for _ in range(16)] for _ in range(n)]
-        chroma = [
-            [[[0] * 16 for _ in range(4)] for _ in range(2)]
-            for _ in range(n)
-        ]
-        for mb in range(n):
-            for b in range(16):
-                luma[mb][b][0] = (
-                    dc_scale * lut[(k * 5 + 7 * mb + 3 * b) % 13]
-                )
-            if k % 2 == 0:
-                for blk in range(16):
-                    luma[mb][blk][1] = (
-                        4 * lut[(k * 11 + 5 * mb + 2 * blk + 1) % 13]
-                    )
-            if k % 3 == 0:
-                for cp in range(2):
-                    for b in range(4):
-                        chroma[mb][cp][b][0] = (
-                            c_scale
-                            * lut[(k * 3 + 17 * mb + 7 * cp + 5 * b) % 13]
-                        )
-        payload = encode_h264_cavlc(
-            1, 2, luma, chroma, [True] * n, qp=qp,
-            pred16=[2] * n, chroma_modes=[0] * n,
-        )
-        dec = h264_decode_cavlc_islice(payload)
-        assert dec["luma"] == luma, "h264 pixel-fixture luma drift"
-        assert dec["chroma"] == chroma, "h264 pixel-fixture chroma drift"
-        assert dec["pred16"] == [2] * n, "pred16 mode drift"
-        assert dec["chroma_mode"] == [0] * n, "chroma mode drift"
-        st = h264_pixel_stats(payload)
-        rows.append((
-            k, st["qp"], st["luma_sum"], st["luma_chk"],
-            st["chroma_sum"], st["chroma_chk"], st["n_clip"],
-        ))
-    return tuple(rows)
-
-
-# ---------------------------------------------------------------------------
 # L5n — MP3 nonzero-scalefactor + Huffman-tables-2/3 EXACT round-trip
 # (r14, VERDICT r13 #6: the two in-reach MP3 boundaries). Extends the
 # q275 gate past its zero-scalefactor / table-1 subset: 40 classes emit
@@ -3330,7 +2776,7 @@ def _q278_classes() -> tuple:
 # boundary table, the scalefactor layout, and the requantization
 # formula are all pinned end-to-end in exact integers while the
 # irrational power law itself stays pytest-gated. Model-grain like
-# q275/q277/q278.
+# q275.
 # ---------------------------------------------------------------------------
 _Q279_LUT_SQL = (
     "CASE ({m}) WHEN 1 THEN 1 WHEN 2 THEN -1 WHEN 3 THEN 2 "
@@ -3538,248 +2984,6 @@ def _q279_classes() -> tuple:
         rows.append((
             k, part23, int((sp != 0).sum()), int(sp.sum()),
             int(np.abs(sp).sum()), eq_chk,
-        ))
-    return tuple(rows)
-
-
-# ---------------------------------------------------------------------------
-# L5n — H.264 I_PCM macroblocks (r15, VERDICT r14 #3): raw-sample
-# macroblock payloads (§7.3.5 mb_type 25) mixed with coded zero-residual
-# I_16x16 DC macroblocks, driven END TO END — emit (byte-align + raw
-# samples + emulation-prevention escaping), decode (alignment check, nC
-# = 16 neighbor bookkeeping), reconstruct (direct sample copy, PCM
-# pixels serving as intra-prediction NEIGHBORS for later macroblocks) —
-# while the DuckDB oracle regenerates every pixel of every class from
-# the closed-form sample lattice and replays the DC prediction
-# recurrence (left-edge, top-edge, and the §8.3.4.1 both-edge chroma
-# grouping) in SQL. Model-grain: 40 classes in the driver,
-# broadcast-joined onto docs (q275-q279 playbook).
-# Class geometry: w_mbs=2, h_mbs=1+((k//2)%2); PCM at (mb+k)%2==0.
-# k%4==0: PCM|coded (left-edge DC). k%4==1: coded(128)|PCM.
-# k%4==2: 2x2 with coded mb3 predicted from a coded top AND a PCM left
-# (the both-edge case). k%4==3: all coded MBs neighbor-free (128).
-# ---------------------------------------------------------------------------
-_Q282_ORACLE = """
-    WITH ks AS (
-      SELECT DISTINCT doc_id % 40 AS k FROM documents
-    ), defs AS (
-      SELECT k, 1 + ((k // 2) % 2) AS h FROM ks
-    ), esum AS (
-      SELECT d.k, d.h,
-        (SELECT SUM((d.k*31 + 0*17 + y.range*5 + 45) % 256)
-         FROM range(16) y) AS l0,
-        (SELECT SUM((d.k*31 + 2*17 + y.range*5 + 45) % 256)
-         FROM range(16) y) AS l2,
-        (SELECT SUM((d.k*13 + 0*7 + y.range*3 + 77) % 256)
-         FROM range(4) y) AS cb0t,
-        (SELECT SUM((d.k*13 + 0*7 + y.range*3 + 77) % 256)
-         FROM range(4, 8) y) AS cb0b,
-        (SELECT SUM((d.k*13 + 2*7 + y.range*3 + 77) % 256)
-         FROM range(4) y) AS cb2t,
-        (SELECT SUM((d.k*13 + 2*7 + y.range*3 + 77) % 256)
-         FROM range(4, 8) y) AS cb2b,
-        (SELECT SUM((d.k*11 + 0*19 + y.range*7 + 35) % 256)
-         FROM range(4) y) AS cr0t,
-        (SELECT SUM((d.k*11 + 0*19 + y.range*7 + 35) % 256)
-         FROM range(4, 8) y) AS cr0b,
-        (SELECT SUM((d.k*11 + 2*19 + y.range*7 + 35) % 256)
-         FROM range(4) y) AS cr2t,
-        (SELECT SUM((d.k*11 + 2*19 + y.range*7 + 35) % 256)
-         FROM range(4, 8) y) AS cr2b
-      FROM defs d
-    ), dc AS (
-      SELECT k, h,
-        (l0 + 8) // 16 AS dcy1,
-        (16 * ((l0 + 8) // 16) + l2 + 16) // 32 AS dcy3,
-        (cb0t + 2) // 4 AS cb1t, (cb0b + 2) // 4 AS cb1b,
-        (cr0t + 2) // 4 AS cr1t, (cr0b + 2) // 4 AS cr1b,
-        cb2t, cb2b, cr2t, cr2b
-      FROM esum
-    ), luma AS (
-      SELECT d.k,
-        x.range AS x, y.range AS y,
-        CASE WHEN ((y.range // 16) * 2 + (x.range // 16) + d.k) % 2 = 0
-          THEN (d.k*31 + ((y.range // 16) * 2 + (x.range // 16))*17
-                + (y.range % 16)*5 + (x.range % 16)*3) % 256
-          ELSE CASE (y.range // 16) * 2 + (x.range // 16)
-            WHEN 1 THEN d.dcy1 WHEN 3 THEN d.dcy3 ELSE 128 END
-        END AS v
-      FROM dc d CROSS JOIN range(32) x CROSS JOIN range(32) y
-      WHERE y.range < d.h * 16
-    ), chroma AS (
-      SELECT d.k, cp.range AS comp, x.range AS x, y.range AS y,
-        CASE WHEN ((y.range // 8) * 2 + (x.range // 8) + d.k) % 2 = 0
-          THEN CASE WHEN cp.range = 0
-            THEN (d.k*13 + ((y.range // 8) * 2 + (x.range // 8))*7
-                  + (y.range % 8)*3 + (x.range % 8)*11) % 256
-            ELSE (d.k*11 + ((y.range // 8) * 2 + (x.range // 8))*19
-                  + (y.range % 8)*7 + (x.range % 8)*5) % 256 END
-          ELSE CASE (y.range // 8) * 2 + (x.range // 8)
-            WHEN 1 THEN CASE
-              WHEN cp.range = 0 AND (y.range % 8) < 4 THEN d.cb1t
-              WHEN cp.range = 0 THEN d.cb1b
-              WHEN (y.range % 8) < 4 THEN d.cr1t
-              ELSE d.cr1b END
-            WHEN 3 THEN CASE
-              -- sub-blocks of the interior coded MB: top edge is the
-              -- flat bottom half of MB1, left edge is MB2's PCM col 7
-              WHEN cp.range = 0 AND (x.range % 8) < 4
-                   AND (y.range % 8) < 4
-                THEN (4 * d.cb1b + d.cb2t + 4) // 8
-              WHEN cp.range = 0 AND (x.range % 8) >= 4
-                   AND (y.range % 8) < 4
-                THEN d.cb1b
-              WHEN cp.range = 0 AND (x.range % 8) < 4
-                THEN (d.cb2b + 2) // 4
-              WHEN cp.range = 0
-                THEN (4 * d.cb1b + d.cb2b + 4) // 8
-              WHEN (x.range % 8) < 4 AND (y.range % 8) < 4
-                THEN (4 * d.cr1b + d.cr2t + 4) // 8
-              WHEN (x.range % 8) >= 4 AND (y.range % 8) < 4
-                THEN d.cr1b
-              WHEN (x.range % 8) < 4
-                THEN (d.cr2b + 2) // 4
-              ELSE (4 * d.cr1b + d.cr2b + 4) // 8 END
-            ELSE 128 END
-        END AS v
-      FROM dc d CROSS JOIN range(2) cp
-      CROSS JOIN range(16) x CROSS JOIN range(16) y
-      WHERE y.range < d.h * 8
-    ), agg AS (
-      SELECT l.k,
-        CAST(SUM(l.v) AS BIGINT) AS luma_sum,
-        CAST(SUM(l.v * (1 + l.y * 32 + l.x)) AS BIGINT) AS luma_chk
-      FROM luma l GROUP BY l.k
-    ), cagg AS (
-      SELECT c.k,
-        CAST(SUM(c.v) AS BIGINT) AS chroma_sum,
-        CAST(SUM(c.v * (500000 + c.comp * 250000 + c.y * 16 + c.x))
-             AS BIGINT) AS chroma_chk
-      FROM chroma c GROUP BY c.k
-    ), meta AS (
-      SELECT d.k,
-        CAST(2 * d.h AS BIGINT) AS n_mbs,
-        CAST((SELECT COUNT(*) FROM range(4) mb
-              WHERE mb.range < 2 * d.h AND (mb.range + d.k) % 2 = 0)
-             AS BIGINT) AS n_pcm
-      FROM defs d
-    )
-    SELECT doc.doc_id, m.n_mbs, m.n_pcm,
-           a.luma_sum, a.luma_chk, c.chroma_sum, c.chroma_chk
-    FROM documents doc
-    JOIN meta m ON m.k = doc.doc_id % 40
-    JOIN agg a ON a.k = doc.doc_id % 40
-    JOIN cagg c ON c.k = doc.doc_id % 40
-"""
-
-
-@query(
-    "q282_h264_ipcm_roundtrip",
-    oracle=_Q282_ORACLE,
-    scale_note=(
-        "model-grain like q276-q278: 40 mixed I_PCM/coded frames "
-        "emitted/decoded/reconstructed once in the driver, "
-        "broadcast-joined onto documents"
-    ),
-)
-def q282_h264_ipcm_roundtrip(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Closed-form I_PCM sample lattices mixed with coded DC
-    macroblocks → REAL Annex-B emit → REAL decode → assert sample- and
-    coefficient-exact → full pixel reconstruction (PCM copy + DC
-    prediction FROM the PCM samples) → pixel stats the SQL oracle
-    regenerates from the lattice definition."""
-    classes = spark.createDataFrame(
-        _q282_classes(),
-        "k long, n_mbs long, n_pcm long, luma_sum long, luma_chk long, "
-        "chroma_sum long, chroma_chk long",
-    )
-    d = spark.table("documents").select(
-        "doc_id", (F.col("doc_id") % 40).alias("k")
-    )
-    return d.join(F.broadcast(classes), "k").drop("k")
-
-
-def _q282_pcm_luma(k: int, mb: int, y: int, x: int) -> int:
-    return (k * 31 + mb * 17 + y * 5 + x * 3) % 256
-
-
-def _q282_pcm_chroma(k: int, mb: int, comp: int, y: int, x: int) -> int:
-    if comp == 0:
-        return (k * 13 + mb * 7 + y * 3 + x * 11) % 256
-    return (k * 11 + mb * 19 + y * 7 + x * 5) % 256
-
-
-@lru_cache(maxsize=1)
-def _q282_classes() -> tuple:
-    from pandas_td_spark.operators.h264 import (
-        encode_h264_cavlc,
-        h264_decode_cavlc_islice,
-        h264_pixel_stats,
-        h264_reconstruct_islice,
-        h264_stream_info,
-    )
-
-    rows = []
-    for k in range(40):
-        h_mbs = 1 + ((k // 2) % 2)
-        n = 2 * h_mbs
-        luma, chroma, mb16 = [], [], []
-        for mb in range(n):
-            if (mb + k) % 2 == 0:
-                mb16.append("pcm")
-                luma.append([
-                    [_q282_pcm_luma(k, mb, y, x) for x in range(16)]
-                    for y in range(16)
-                ])
-                chroma.append([
-                    [
-                        [_q282_pcm_chroma(k, mb, c, y, x)
-                         for x in range(8)]
-                        for y in range(8)
-                    ]
-                    for c in range(2)
-                ])
-            else:
-                mb16.append(True)
-                luma.append([[0] * 16 for _ in range(16)])
-                chroma.append(
-                    [[[0] * 16 for _ in range(4)] for _ in range(2)]
-                )
-        payload = encode_h264_cavlc(
-            2, h_mbs, luma, chroma, mb16, qp=20 + k % 12,
-            pred16=[2] * n, chroma_modes=[0] * n,
-        )
-        dec = h264_decode_cavlc_islice(payload)
-        assert h264_stream_info(payload)["entropy_mode"] == "cavlc"
-        n_pcm = 0
-        for mb in range(n):
-            if mb16[mb] == "pcm":
-                n_pcm += 1
-                assert dec["mb_pcm"][mb], "I_PCM flag drift"
-                assert dec["pcm_luma"][mb] == luma[mb], "PCM luma drift"
-                assert dec["pcm_chroma"][mb] == chroma[mb], (
-                    "PCM chroma drift"
-                )
-            else:
-                assert not dec["mb_pcm"][mb]
-                assert dec["luma"][mb] == luma[mb], "coded coeff drift"
-        fr = h264_reconstruct_islice(payload)["frames"][0]
-        for mb in range(n):
-            if mb16[mb] != "pcm":
-                continue
-            mbx, mby = mb % 2, mb // 2
-            for y in range(16):
-                assert (
-                    fr["y"][mby * 16 + y][mbx * 16 : mbx * 16 + 16]
-                    == luma[mb][y]
-                ), "reconstructed PCM pixels drift"
-        assert fr["n_clip"] == 0
-        st = h264_pixel_stats(payload)
-        rows.append((
-            k, n, n_pcm, st["luma_sum"], st["luma_chk"],
-            st["chroma_sum"], st["chroma_chk"],
         ))
     return tuple(rows)
 

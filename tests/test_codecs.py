@@ -133,6 +133,12 @@ def test_media_features_dispatch_and_stub_fallback():
     png = b"\x89PNG\r\n\x1a\n" + b"z" * 64
     a, b = media_features(png, 16), media_features(png, 16)
     assert (a == b).all()
+    # a compressed-video elementary stream (start codes + SPS/PPS/IDR
+    # slice, 16x16 intra) has no decoder here: same stub fallback
+    from pandas_td_spark.operators.multimodal import stub_decoder
+
+    nal = bytes.fromhex("000000016742001eda790000000168cc0000000165b86088")
+    assert (media_features(nal, 16) == stub_decoder(nal, 16)).all()
 
 
 def test_featurize_binary_with_real_codec_in_spark(spark):

@@ -365,6 +365,27 @@ def test_params_and_index_col(con):
     assert out.index.tolist() == [3, 4]
 
 
+def test_parse_dates_dict_takes_unit_or_format(con):
+    """pandas-td's ``{column: spec}`` form: the spec is the unit of an
+    epoch column and the format of a string column."""
+    frame = pd.DataFrame(
+        {"time": [1704067200, 1704153600], "d": ["2024/01/01", "2024/01/02"]}
+    )
+    td.to_td(frame, "testdb.t4", con, if_exists="replace", index=False)
+    engine = td.create_engine("presto:testdb", con=con)
+    sql = "SELECT time, d FROM t4 ORDER BY time"
+    days = list(pd.to_datetime(["2024-01-01", "2024-01-02"]))
+    out = td.read_td_table(
+        "t4", engine, index_col="time", parse_dates={"time": "s"}
+    ).sort_index()
+    assert list(out.index) == days
+    out = td.read_td_query(sql, engine, parse_dates={"d": "%Y/%m/%d"})
+    assert list(out.d) == days and out.time.tolist() == frame.time.tolist()
+    # the list form stays plain pd.to_datetime
+    out = td.read_td_query(sql, engine, parse_dates=["d"])
+    assert list(out.d) == days
+
+
 def test_time_index(con):
     idx = pd.date_range("2024-01-01", periods=3, freq="D", name="ts")
     frame = pd.DataFrame({"v": [1.0, 2.0, 3.0]}, index=idx)
