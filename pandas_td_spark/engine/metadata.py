@@ -1,62 +1,23 @@
-"""Metadata & job-control surface (SURVEY.md §2.12 M1-M6).
+"""Job-control surface (SURVEY.md §2.12 M5-M6).
 
 Reference loci (all UNVERIFIED, /root/reference empty):
-``pandas_td/ipython.py::DatabasesMagics/TablesMagics/UseMagics`` (M1/M3),
-``JobsMagics`` (M2), ``td.py::QueryEngine`` progress callbacks (M5),
-``read_td_query(params=...)`` job options (M6). The IPython magics proper
-are notebook sugar; this module is the engine-level API they'd wrap.
+``td.py::QueryEngine`` progress callbacks (M5),
+``read_td_query(params=...)`` job options (M6). The catalog listing (M1)
+is ``compat.Connection.databases()``/``tables()``, which the magics in
+``ipython.py`` call.
 """
 
 from __future__ import annotations
 
-import fnmatch
 from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import SparkSession
 
 __all__ = [
-    "list_databases",
-    "list_tables",
-    "use_database",
     "job_group",
-    "scheduler_pool",
     "progress_snapshot",
 ]
-
-
-def list_databases(spark: SparkSession, pattern: str | None = None) -> pd.DataFrame:
-    """M1: ``%td_databases [pattern]`` analogue over the Spark catalog."""
-    rows = [
-        {"name": d.name, "catalog": d.catalog}
-        for d in spark.catalog.listDatabases()
-        if pattern is None or fnmatch.fnmatch(d.name, pattern)
-    ]
-    return pd.DataFrame(rows, columns=["name", "catalog"])
-
-
-def list_tables(
-    spark: SparkSession,
-    database: str | None = None,
-    pattern: str | None = None,
-) -> pd.DataFrame:
-    """M1: ``%td_tables [pattern]`` — includes temp views (the fixture
-    tables registered by register_views)."""
-    rows = [
-        {
-            "name": t.name,
-            "database": t.namespace[0] if t.namespace else None,
-            "is_temporary": t.isTemporary,
-        }
-        for t in spark.catalog.listTables(dbName=database)
-        if pattern is None or fnmatch.fnmatch(t.name, pattern)
-    ]
-    return pd.DataFrame(rows, columns=["name", "database", "is_temporary"])
-
-
-def use_database(spark: SparkSession, database: str) -> None:
-    """M3: ``%td_use`` analogue."""
-    spark.catalog.setCurrentDatabase(database)
 
 
 @contextmanager
@@ -70,17 +31,6 @@ def job_group(spark: SparkSession, group_id: str, description: str = ""):
         yield
     finally:
         sc.setJobGroup("", "")
-
-
-@contextmanager
-def scheduler_pool(spark: SparkSession, pool: str):
-    """M6: map TD priority classes to fair-scheduler pools."""
-    sc = spark.sparkContext
-    sc.setLocalProperty("spark.scheduler.pool", pool)
-    try:
-        yield
-    finally:
-        sc.setLocalProperty("spark.scheduler.pool", None)
 
 
 def progress_snapshot(spark: SparkSession) -> pd.DataFrame:

@@ -26,7 +26,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark", "spread", "DEFAULT_CONFS"]
+__all__ = ["get_spark", "spread", "DEFAULT_CONFS"]
 
 DEFAULT_CONFS: dict[str, str] = {
     # -- optimizer / execution ------------------------------------------------
@@ -80,21 +80,21 @@ def _cpus() -> int:
 def get_spark(
     app_name: str = "pandas_td_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine session.
 
-    ``shuffle_partitions`` defaults to the local core count — the right
-    number for local[(N)]; on a real cluster AQE coalescing makes the static
-    value mostly a ceiling, so callers would set it to ~2-3× total cores.
+    ``spark.sql.shuffle.partitions`` defaults to the local core count — the
+    right number for local[(N)]; on a real cluster AQE coalescing makes the
+    static value mostly a ceiling, so callers would set it to ~2-3× total
+    cores through ``extra_confs``.
     """
     n = _cpus()
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{n}]"
     )
     confs = dict(DEFAULT_CONFS)
-    confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions or n)
+    confs["spark.sql.shuffle.partitions"] = str(n)
     if extra_confs:
         confs.update(extra_confs)
     for k, v in confs.items():
@@ -133,12 +133,6 @@ def get_spark(
     register_td_functions(spark)
     register_presto_functions(spark)
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
 
 
 def spread(df, partitions: int | None = None, by: str | None = None):

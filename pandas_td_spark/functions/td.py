@@ -47,7 +47,6 @@ __all__ = [
     "td_date_trunc",
     "td_time_add",
     "td_interval",
-    "td_sessionize_expr",
     "smart_digest",
     "td_first",
     "td_last",
@@ -283,21 +282,6 @@ def td_interval(
     if delta < 0:
         return td_time_range(time, n + delta, n, tz)
     return td_time_range(time, n, n + delta, tz)
-
-
-# --------------------------------------------------------------------------
-# F8  td_sessionize idiom — cumulative-gap expression fragment. The full
-#     operator lives in operators/sessionize.py; this exposes the gap-flag
-#     expression for composition.
-# --------------------------------------------------------------------------
-def td_sessionize_expr(
-    time: Union[str, Column], prev_time: Column, timeout_sec: int
-) -> Column:
-    """1 when a new session starts (gap > timeout or first row), else 0."""
-    t = _col(time)
-    return F.when(
-        prev_time.isNull() | ((t - prev_time) > F.lit(timeout_sec)), F.lit(1)
-    ).otherwise(F.lit(0))
 
 
 # --------------------------------------------------------------------------

@@ -4,7 +4,8 @@ QueryMagics, loci UNVERIFIED, /root/reference empty).
 
 Reference surface reproduced:
 
-* ``%td_databases [pattern]`` / ``%td_tables [pattern]`` — catalog listing
+* ``%td_databases [pattern]`` / ``%td_tables [database]`` — catalog listing
+  (the pattern is an ``fnmatch`` glob on the database name)
 * ``%td_use <db>`` — set the default database
 * ``%td_jobs`` — recent queries run through the compat engine
 * ``%%td_presto`` / ``%%td_hive`` / ``%%td_sql`` — cell magics: run the
@@ -22,6 +23,7 @@ test split (SURVEY §5).
 from __future__ import annotations
 
 import argparse
+import fnmatch
 import shlex
 from typing import Any
 
@@ -74,7 +76,10 @@ def load_ipython_extension(ipython) -> None:  # pragma: no cover — notebook
 
         @line_magic
         def td_databases(self, line):
-            return self.con.databases()
+            pattern = line.strip() or "*"
+            dbs = self.con.databases()
+            keep = dbs["name"].isin(fnmatch.filter(dbs["name"], pattern))
+            return dbs[keep].reset_index(drop=True)
 
         @line_magic
         def td_tables(self, line):

@@ -63,46 +63,6 @@ def _ngrams(words, n: int, text_col: str = "text"):
     )
 
 
-def _gram_stats(grams):
-    """Row-local repetition statistics over a positional gram array:
-    struct(mx = max multiplicity of any gram, nd = distinct grams,
-    tot = total grams). Sort + run-length scan, all inside codegen —
-    the zero-shuffle replacement for explode -> groupBy(doc, gram) ->
-    re-agg when only per-document fractions are needed. Counts are
-    exact bigints, so fractions match the exploded form bit-for-bit."""
-    zero = F.lit(0).cast("bigint")
-    return F.aggregate(
-        F.array_sort(grams),
-        F.struct(
-            F.lit(None).cast("string").alias("prev"),
-            zero.alias("run"),
-            zero.alias("mx"),
-            zero.alias("nd"),
-        ),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            # x == acc.prev is NULL on the first element -> otherwise()
-            F.when(x == acc["prev"], acc["run"] + 1)
-            .otherwise(F.lit(1).cast("bigint"))
-            .alias("run"),
-            F.greatest(
-                acc["mx"],
-                F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-                    F.lit(1).cast("bigint")
-                ),
-            ).alias("mx"),
-            F.when(x == acc["prev"], acc["nd"])
-            .otherwise(acc["nd"] + 1)
-            .alias("nd"),
-        ),
-        lambda acc: F.struct(
-            acc["mx"].alias("mx"),
-            acc["nd"].alias("nd"),
-            F.size(grams).cast("bigint").alias("tot"),
-        ),
-    )
-
-
 _WS_SQL = "split(text, ' ')"
 _EMPTY_ARR_SQL = "CAST(array() AS array<string>)"
 
@@ -156,11 +116,12 @@ def _gram_stats_sql(g: str) -> str:
 # partial aggregation collapses repeats map-side, so shuffle volume is
 # O(distinct grams), and the final doc_id-keyed join is between two
 # one-row-per-doc aggregates. No Python, no skew (grams are near-uniform).
-# A round-7 row-local `_gram_stats` rewrite of this query measured 6.6 s
-# warm vs 1.07 s for this form at sf0.1 (the HOF struct accumulator falls
+# A round-7 row-local rewrite of this query (the run-length scan that
+# `_gram_stats_sql` now builds) measured 6.6 s warm vs 1.07 s for this
+# form at sf0.1 (the HOF struct accumulator falls
 # out of efficient codegen when its result is consumed by a filter plus
 # multiple projections, so the aggregate re-evaluates per reference) —
-# reverted in round 8. q108 keeps `_gram_stats` because there the struct
+# reverted in round 8. q108 keeps the scan because there the struct
 # is consumed once per n and its warm A/B held (1.596 -> 1.516 s).
 # Round-10 re-A/B of q108 (interleaved 5-round warm
 # protocol at sf0.1): row-local 1.19 s median vs exploded-tagged 1.16 s

@@ -28,7 +28,6 @@ Scale notes
 
 from __future__ import annotations
 
-import datetime as _dt
 import os
 import shutil
 import time as _time
@@ -56,13 +55,7 @@ __all__ = [
     "table_names",
     "table_path",
     "read_table",
-    "read_file",
-    "write_file",
-    "merge_upsert",
     "write_sorted",
-    "write_time_partitioned",
-    "read_time_partitioned",
-    "write_bucketed_table",
     "write_table",
     "register_views",
     "resolve_data_path",
@@ -539,119 +532,6 @@ def _land_file(
         raise
 
 
-_FORMATS = ("parquet", "csv", "json", "orc")
-
-
-def read_file(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    schema=None,
-    **options,
-) -> DataFrame:
-    """S7: format-generic source. The reference client spoke msgpack(.gz)
-    only (StreamingUploader); Spark's source API gives parquet/CSV/JSON/ORC
-    for free — CSV/JSON default to header/inference unless a schema is
-    passed (always pass one in production: inference is an extra full
-    scan)."""
-    if fmt not in _FORMATS:
-        raise ValueError(f"fmt must be one of {_FORMATS}, got {fmt!r}")
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    if fmt == "csv":
-        options.setdefault("header", "true")
-        if schema is None:
-            options.setdefault("inferSchema", "true")
-    return reader.options(**options).format(fmt).load(path)
-
-
-def write_file(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    mode: str = "errorifexists",
-    **options,
-) -> None:
-    """S7 sink twin of :func:`read_file`."""
-    if fmt not in _FORMATS:
-        raise ValueError(f"fmt must be one of {_FORMATS}, got {fmt!r}")
-    if fmt == "csv":
-        options.setdefault("header", "true")
-    df.write.mode(mode).options(**options).format(fmt).save(path)
-
-
-def merge_upsert(
-    spark: SparkSession,
-    updates: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    delete_col: str | None = None,
-    keep_versions: int = 1,
-) -> None:
-    """MERGE INTO semantics on a manifest-managed table (S5d): rows in
-    ``updates`` replace target rows with matching ``keys``; unmatched
-    update rows insert; target rows without a match survive unchanged.
-    When ``delete_col`` names a boolean column, update rows with it true
-    DELETE their key instead (the column is dropped from storage) — the
-    CDC apply shape.
-
-    Atomicity rides :func:`_atomic_replace`: the merged result is written
-    as a fresh snapshot and committed by the one-pointer manifest swap, so
-    a crash mid-merge leaves the previous snapshot intact and readable.
-
-    Plan shape at scale: one left-anti join (target minus touched keys)
-    unioned with the surviving updates — the anti join shuffles on the
-    merge keys, the same cost class as any keyed join; nothing driver-side.
-    A first merge against a non-existent path is just an insert.
-
-    ``updates`` must be unique on ``keys`` — like SQL MERGE's
-    multiple-match error. Two CDC rows for one key in a batch would
-    otherwise both insert (silent duplication); the check is one cheap
-    aggregation on the (small) update side. Pre-collapse with keep-last
-    (e.g. a max_by over a version column) before calling when duplicates
-    are expected."""
-    keys = list(keys)
-    dup = (
-        updates.groupBy(*keys)
-        .count()
-        .where(F.col("count") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        dup_key = {k: dup[0][k] for k in keys}
-        raise ValueError(
-            f"updates are not unique on {keys}: e.g. {dup_key} appears "
-            "multiple times; collapse to one row per key first"
-        )
-    survivors = updates
-    if delete_col is not None:
-        survivors = updates.where(
-            ~F.coalesce(F.col(delete_col), F.lit(False))
-        ).drop(delete_col)
-    target_path = resolve_data_path(path)
-    base_exists = os.path.isdir(target_path) and any(
-        not e.startswith(".") and e != _MANIFEST
-        for e in os.listdir(target_path)
-    )
-    if base_exists:
-        target = spark.read.parquet(target_path)
-        touched = updates.select(*keys).distinct()
-        kept = target.join(touched, on=keys, how="left_anti")
-        merged = kept.unionByName(survivors)
-    else:
-        merged = survivors
-    # the new snapshot scans the OLD committed snapshot while writing the
-    # new version dir — safe: the write targets a fresh directory and the
-    # manifest flips only after success
-    _atomic_replace(
-        path,
-        lambda t: merged.write.mode("errorifexists").parquet(t),
-        keep_versions=keep_versions,
-    )
-
-
 def compact_table(
     spark: SparkSession,
     path: str,
@@ -748,81 +628,6 @@ def write_sorted(
     parts.sortWithinPartitions(*by).write.mode(mode).parquet(path)
 
 
-def write_time_partitioned(
-    df: DataFrame,
-    path: str,
-    ts_col: str = "ts",
-    mode: str = "overwrite",
-) -> None:
-    """TD table layout at scale: the reference's hourly time-bucketed
-    storage (Plazma) maps to a date-partitioned parquet table with an
-    epoch-seconds ``time`` column. Writes ``dt=YYYY-MM-DD/`` directories;
-    :func:`read_time_partitioned` turns a time range into partition
-    pruning + row-group skipping."""
-    src = F.col(ts_col)
-    if is_timestamp_dtype(dict(df.dtypes).get(ts_col)):
-        out = df.withColumn("time", F.unix_timestamp(src).cast("bigint"))
-    else:
-        out = df.withColumn("time", src.cast("bigint"))
-    out = out.withColumn(
-        "dt", F.date_format(F.timestamp_seconds(F.col("time")), "yyyy-MM-dd")
-    )
-    out.write.mode(mode).partitionBy("dt").parquet(path)
-
-
-def read_time_partitioned(
-    spark: SparkSession,
-    path: str,
-    time_range: tuple[TimeLike, TimeLike] | None = None,
-    columns: Sequence[str] | None = None,
-) -> DataFrame:
-    """Scan a :func:`write_time_partitioned` table. The time predicate is
-    emitted twice: on the ``dt`` partition column (directory-level pruning
-    — whole days never touch disk) and on ``time`` (row-group skipping
-    within the boundary days). ``.explain`` shows both ``PartitionFilters``
-    and ``PushedFilters`` — the shape that makes a 100 TB history table
-    cost O(scanned window), not O(table)."""
-    df = spark.read.parquet(path)
-    if time_range is not None:
-        s, e = (to_epoch_seconds(v) for v in time_range)
-        cond = F.lit(True)
-        if s is not None:
-            day = _dt.datetime.fromtimestamp(s, _dt.timezone.utc).strftime(
-                "%Y-%m-%d"
-            )
-            cond = cond & (F.col("dt") >= F.lit(day)) & (F.col("time") >= F.lit(s))
-        if e is not None:
-            # end-exclusive on time; dt is day-granular so <= end's day
-            day = _dt.datetime.fromtimestamp(e, _dt.timezone.utc).strftime(
-                "%Y-%m-%d"
-            )
-            cond = cond & (F.col("dt") <= F.lit(day)) & (F.col("time") < F.lit(e))
-        df = df.where(cond)
-    if columns:
-        df = df.select(*columns)
-    return df
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    bucket_cols: Sequence[str],
-    n_buckets: int = 16,
-    sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table (SURVEY scale notes: "bucketing for
-    co-located joins"). Two tables bucketed (and sorted) the same way on
-    the join key sort-merge-join with NO exchange and no sort — the
-    pre-shuffle is paid once at write time, every subsequent join reuses
-    it. That's the canonical answer for a fact table joined repeatedly on
-    the same key at 100 TB. Requires ``saveAsTable`` (bucketing metadata
-    lives in the catalog)."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    writer = writer.sortBy(*(sort_cols or bucket_cols))
-    writer.format("parquet").saveAsTable(name)
-
-
 # weak keys: a dict keyed by id(spark) can alias a NEW session that reuses
 # a garbage-collected session's id (falsely skipping registration) and
 # leaks an entry per session (round-1 advisor finding)
@@ -873,92 +678,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         view = "`" + name.replace("`", "``") + "`"
         read_table(spark, sf_dir, name).createOrReplaceTempView(view)
     _CURRENT_VIEWS[spark] = stamp
-
-
-class TolerantRead(tuple):
-    """``(good, quarantine)`` pair from :func:`read_file_tolerant`, plus
-    an ``unpersist()`` handle for the shared cached scan both frames
-    filter. Unpacks like a plain 2-tuple for backwards compatibility."""
-
-    def __new__(cls, good, quarantine, raw=None):
-        self = super().__new__(cls, (good, quarantine))
-        self.good = good
-        self.quarantine = quarantine
-        self._raw = raw
-        return self
-
-    def unpersist(self, blocking: bool = False) -> "TolerantRead":
-        if self._raw is not None:
-            self._raw.unpersist(blocking)
-        return self
-
-
-def read_file_tolerant(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "csv",
-    schema=None,
-    corrupt_col: str = "_corrupt_record",
-    **options,
-):
-    """S7b: error-tolerant semi-structured ingest. Reads CSV/JSON in
-    PERMISSIVE mode with the raw text of every unparseable row captured
-    in ``corrupt_col``, and returns ``(good, quarantine)`` DataFrames:
-    rows that parsed cleanly (corrupt column dropped) and the raw
-    corrupt lines for a dead-letter sink. The split is two filters over
-    ONE cached scan — no second pass over the input, no job abort on a
-    single bad byte, which is the ingest contract a 100 TB loader needs.
-    A schema is required: column NULLability can't distinguish "parsed
-    NULL" from "failed parse" without the corrupt column, and inference
-    would cost an extra scan.
-
-    FAILFAST/DROPMALFORMED are opt-in via ``options={'mode': ...}``; in
-    those modes Spark REJECTS a corrupt-record column in the schema, so
-    the corrupt column is only injected under PERMISSIVE and the
-    quarantine frame comes back empty (FAILFAST throws on the first bad
-    row, DROPMALFORMED silently drops them — no rows to quarantine).
-
-    Returns a ``TolerantRead`` — unpacks as ``(good, quarantine)`` and
-    adds ``.unpersist()`` to release the shared cached scan once both
-    sides are consumed. Repeated ingest calls that skip it accumulate
-    cached scans for the session's lifetime (``good.unpersist()`` would
-    NOT help: the cache lives on the parent scan, not the filtered
-    children).
-    """
-    if fmt not in ("csv", "json"):
-        raise ValueError(f"tolerant read supports csv/json, got {fmt!r}")
-    if schema is None:
-        raise ValueError("read_file_tolerant requires an explicit schema")
-    from pyspark.sql.types import StringType, StructType
-
-    if not isinstance(schema, StructType):
-        raise TypeError("schema must be a StructType")
-    options.setdefault("mode", "PERMISSIVE")
-    # Spark accepts mode strings case-insensitively; normalize before
-    # branching so mode="permissive" still gets the corrupt-column
-    # injection instead of silently surfacing bad rows as all-NULL rows
-    # with an always-empty quarantine.
-    options["mode"] = options["mode"].upper()
-    if fmt == "csv":
-        options.setdefault("header", "true")
-    if options["mode"] != "PERMISSIVE":
-        # corrupt-column injection is PERMISSIVE-only (Spark errors
-        # otherwise: "columnNameOfCorruptRecord ... in non-PERMISSIVE
-        # mode"); no caching either — there is only one consumer.
-        good = (
-            spark.read.schema(schema).options(**options).format(fmt).load(path)
-        )
-        quarantine = spark.createDataFrame(
-            [], "raw_record string"
-        )
-        return TolerantRead(good, quarantine)
-    full = StructType(schema.fields[:]).add(corrupt_col, StringType())
-    options["columnNameOfCorruptRecord"] = corrupt_col
-    raw = (
-        spark.read.schema(full).options(**options).format(fmt).load(path)
-    ).cache()
-    good = raw.where(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    quarantine = raw.where(F.col(corrupt_col).isNotNull()).select(
-        F.col(corrupt_col).alias("raw_record")
-    )
-    return TolerantRead(good, quarantine, raw)

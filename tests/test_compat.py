@@ -521,168 +521,6 @@ def test_snapshot_time_travel(con, spark):
         read_snapshot(spark, os.path.dirname(path), 0)
 
 
-def test_merge_upsert_semantics_and_atomicity(spark, tmp_path):
-    """S5d MERGE INTO: update-in-place, insert-new, delete-flagged, keep
-    untouched — and a crashed merge leaves the previous snapshot committed."""
-    from pandas_td_spark.sources.io import (
-        merge_upsert,
-        read_snapshot,
-        resolve_data_path,
-    )
-
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
-        "id long, name string, v double",
-    )
-    merge_upsert(spark, base, path, keys=["id"])  # first merge = insert
-    got = {r.id: (r.name, r.v) for r in spark.read.parquet(resolve_data_path(path)).collect()}
-    assert got == {1: ("a", 10.0), 2: ("b", 20.0), 3: ("c", 30.0)}
-
-    updates = spark.createDataFrame(
-        [(2, "B", 22.0, False), (4, "d", 40.0, False), (3, None, 0.0, True)],
-        "id long, name string, v double, is_delete boolean",
-    )
-    merge_upsert(
-        spark, updates, path, keys=["id"], delete_col="is_delete",
-        keep_versions=2,
-    )
-    got = {r.id: (r.name, r.v) for r in spark.read.parquet(resolve_data_path(path)).collect()}
-    # 1 untouched, 2 updated, 3 deleted, 4 inserted; is_delete not stored
-    assert got == {1: ("a", 10.0), 2: ("B", 22.0), 4: ("d", 40.0)}
-    assert "is_delete" not in spark.read.parquet(resolve_data_path(path)).columns
-    # previous snapshot still readable (time travel across the merge)
-    prev = {r.id for r in read_snapshot(spark, path, 1).collect()}
-    assert prev == {1, 2, 3}
-
-    # duplicate keys in one update batch are rejected (MERGE semantics),
-    # not silently double-inserted
-    with pytest.raises(ValueError, match="not unique"):
-        merge_upsert(
-            spark,
-            spark.createDataFrame(
-                [(7, "x", 1.0), (7, "y", 2.0)], "id long, name string, v double"
-            ),
-            path,
-            keys=["id"],
-        )
-
-    # crash mid-merge: writer dies before the manifest flip → committed
-    # snapshot unchanged
-    import os
-
-    committed_before = resolve_data_path(path)
-    try:
-        merge_upsert(
-            spark,
-            spark.createDataFrame([(9, None, 1.0)], "id long, name string, v double")
-            .withColumn("v", F.col("v") / F.lit(0) + F.raise_error(F.lit("boom"))),
-            path,
-            keys=["id"],
-        )
-    except Exception:
-        pass
-    assert resolve_data_path(path) == committed_before
-    got2 = {r.id for r in spark.read.parquet(resolve_data_path(path)).collect()}
-    assert got2 == {1, 2, 4}
-
-
-def test_read_file_tolerant_quarantines_corrupt_rows(spark, tmp_path):
-    """S7b: PERMISSIVE ingest splits clean rows from a dead-letter feed
-    without aborting and without a second input scan."""
-    from pyspark.sql.types import LongType, StringType, StructType
-
-    from pandas_td_spark.sources.io import read_file_tolerant
-
-    p = tmp_path / "feed.json"
-    p.write_text(
-        '{"id": 1, "name": "ok"}\n'
-        "{broken json line\n"
-        '{"id": 2, "name": "also ok"}\n'
-        '{"id": "not-a-number", "name": "bad type"}\n'
-    )
-    schema = (
-        StructType().add("id", LongType()).add("name", StringType())
-    )
-    good, quarantine = read_file_tolerant(
-        spark, str(p), fmt="json", schema=schema
-    )
-    assert sorted(r.id for r in good.collect()) == [1, 2]
-    bad = [r.raw_record for r in quarantine.collect()]
-    assert len(bad) == 2
-    assert any("broken" in b for b in bad)
-    assert any("not-a-number" in b for b in bad)
-
-
-def test_read_file_tolerant_mode_case_insensitive(spark, tmp_path):
-    """Spark treats mode strings case-insensitively; the quarantine
-    branch must too — mode='permissive' used to fall into the
-    no-quarantine branch, surfacing corrupt rows as all-NULL good rows
-    with an always-empty quarantine (advisor r5)."""
-    from pyspark.sql.types import LongType, StringType, StructType
-
-    from pandas_td_spark.sources.io import read_file_tolerant
-
-    p = tmp_path / "feed.json"
-    p.write_text('{"id": 1, "name": "ok"}\n{broken json line\n')
-    schema = (
-        StructType().add("id", LongType()).add("name", StringType())
-    )
-    good, quarantine = read_file_tolerant(
-        spark, str(p), fmt="json", schema=schema, mode="permissive"
-    )
-    assert [r.id for r in good.collect()] == [1]
-    assert quarantine.count() == 1
-
-
-def test_read_file_tolerant_unpersist_releases_shared_scan(spark, tmp_path):
-    """The two-filter split shares ONE cached scan; the returned handle
-    must release it (repeated ingest calls would otherwise accumulate
-    cached scans for the session's lifetime)."""
-    from pyspark.sql.types import LongType, StringType, StructType
-
-    from pandas_td_spark.sources.io import read_file_tolerant
-
-    p = tmp_path / "feed.json"
-    p.write_text('{"id": 1, "name": "ok"}\n')
-    schema = StructType().add("id", LongType()).add("name", StringType())
-    result = read_file_tolerant(spark, str(p), fmt="json", schema=schema)
-    good, quarantine = result  # tuple-unpacking contract preserved
-    assert good.count() == 1
-    assert result._raw.storageLevel.useMemory  # cached while in use
-    result.unpersist()
-    assert not result._raw.storageLevel.useMemory
-
-
-def test_read_file_tolerant_failfast_mode(spark, tmp_path):
-    """Non-PERMISSIVE modes reject a corrupt-record column in the schema,
-    so the corrupt column must NOT be injected there: FAILFAST reads
-    clean input fine (empty quarantine) and raises on corrupt input."""
-    import pytest as _pytest
-
-    from pyspark.sql.types import LongType, StringType, StructType
-
-    from pandas_td_spark.sources.io import read_file_tolerant
-
-    schema = StructType().add("id", LongType()).add("name", StringType())
-
-    clean = tmp_path / "clean.json"
-    clean.write_text('{"id": 1, "name": "ok"}\n{"id": 2, "name": "b"}\n')
-    good, quarantine = read_file_tolerant(
-        spark, str(clean), fmt="json", schema=schema, mode="FAILFAST"
-    )
-    assert sorted(r.id for r in good.collect()) == [1, 2]
-    assert quarantine.count() == 0
-
-    dirty = tmp_path / "dirty.json"
-    dirty.write_text('{"id": 1, "name": "ok"}\n{broken\n')
-    good2, _ = read_file_tolerant(
-        spark, str(dirty), fmt="json", schema=schema, mode="FAILFAST"
-    )
-    with _pytest.raises(Exception):
-        good2.collect()
-
-
 def test_compact_table_small_files(spark, tmp_path):
     """S5e: compaction rewrites many small files into few, preserves the
     data bit-for-bit, keeps the previous snapshot readable (time travel

@@ -65,74 +65,6 @@ def test_flagship_agg_is_partial_then_final(spark):
     assert "partial_sum" in plan and "Exchange" in plan
 
 
-def test_bucketed_join_has_no_exchange(spark):
-    """Two tables bucketed+sorted on the join key => sort-merge join with
-    neither an Exchange nor a Sort on either side (the write-once
-    pre-shuffle that co-locates repeated joins at scale)."""
-    from pandas_td_spark.plans.explain import physical_plan
-    from pandas_td_spark.sources.io import read_table, write_bucketed_table
-
-    import uuid
-
-    # unique names: the in-memory catalog resets per session but the
-    # warehouse directory under /tmp persists, and saveAsTable refuses a
-    # name whose (forgotten) location still exists
-    t1, t2 = (f"b_orders_{uuid.uuid4().hex[:8]}", f"b_lineitem_{uuid.uuid4().hex[:8]}")
-    o = read_table(spark, SF, "orders")
-    li = read_table(spark, SF, "lineitem")
-    write_bucketed_table(o, t1, ["o_orderkey"], n_buckets=8)
-    write_bucketed_table(
-        li.withColumnRenamed("l_orderkey", "o_orderkey"),
-        t2,
-        ["o_orderkey"],
-        n_buckets=8,
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table(t1).join(spark.table(t2), "o_orderkey")
-        plan = physical_plan(j)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan, "bucketed join must not re-shuffle"
-
-
-def test_time_partitioned_layout_prunes_partitions(spark):
-    """The TD table layout at scale: a time range hits PartitionFilters
-    (directory pruning on dt) AND PushedFilters (row-group skipping on
-    time), and results honor [start, end)."""
-    import re
-    import tempfile
-
-    from pandas_td_spark.plans.explain import physical_plan
-    from pandas_td_spark.sources.io import (
-        read_table,
-        read_time_partitioned,
-        write_time_partitioned,
-    )
-
-    d = tempfile.mkdtemp(prefix="tp_") + "/events"
-    ev = read_table(spark, SF, "events")
-    write_time_partitioned(ev, d, ts_col="ts")
-    df = read_time_partitioned(
-        spark, d, time_range=("2024-01-05", "2024-01-10"),
-        columns=["event_id", "time", "dt"],
-    )
-    plan = physical_plan(df)
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "dt" in m.group(1), f"no partition pruning: {plan[:400]}"
-    assert any("time" in f for f in re.findall(r"PushedFilters: \[([^\]]*)\]", plan))
-    # correctness of the layout round-trip: [start, end) semantics
-    lo, hi = 1704412800, 1704844800
-    got = df.agg(F.min("time"), F.max("time")).first()
-    assert got[0] >= lo and got[1] < hi
-    n_direct = ev.where(
-        (F.unix_timestamp("ts") >= lo) & (F.unix_timestamp("ts") < hi)
-    ).count()
-    assert df.count() == n_direct
-
-
 def test_large_interval_join_is_equi_not_nested_loop(spark):
     """q76 (J9 large×large): bucketized range join must compile to a
     shuffle/broadcast HASH or SORT-MERGE equi-join — never a nested loop

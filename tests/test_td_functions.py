@@ -199,16 +199,11 @@ def test_tz_may_be_left_out_as_td_allows(spark, tmp_path):
 def test_metadata_surface(spark):
     from pandas_td_spark.engine.metadata import (
         job_group,
-        list_databases,
-        list_tables,
         progress_snapshot,
     )
     from pandas_td_spark.sources.io import register_views
 
     register_views(spark, "/root/testdata/sf0.001")
-    assert "default" in list_databases(spark).name.tolist()
-    t = list_tables(spark, pattern="docum*")
-    assert t.name.tolist() == ["documents"]
     with job_group(spark, "meta-test", "catalog listing"):
         assert spark.table("documents").count() > 0
     snap = progress_snapshot(spark)
